@@ -2,11 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.block.{Blocking, BoundScheme, FindNgrams, FirstNChars, Labels, Learner}
-import graft.cluster.ConnectedComponents
-import graft.ml.MatchClassifier
+import graft.block.{Blocking, BoundScheme, FindNgrams, FirstNChars}
 import graft.normalize.Normalize
-import graft.pipeline.Dedupe
 import graft.sim.Distances
 import graft.synth.Transcripts
 
@@ -16,8 +13,11 @@ import graft.synth.Transcripts
   * stage-isolated numbers without touching the frozen harness.
   *
   * Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.BenchExtra [sfDir]"       — bench stages
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.BenchExtra [sfDir] e2e"   — e2e decomposition
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.BenchExtra [sfDir]"            — bench stages
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.BenchExtra [sfDir] features"   — per-feature kernels
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.BenchExtra [sfDir] passes [k]" — long scoring region
+  * Per-stage decomposition of `Dedupe.run`:
+  *   python3 perfbench/run.py --workload dedupe_cold --trace 1
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -199,90 +199,6 @@ object BenchExtra {
       time("all five features") {
         hydrated.agg(sum(feats.map(_._2).reduce(_ + _))).head()
       }
-    } else if (mode == "e2e") {
-      // stage decomposition of Dedupe.run (same calls, same config, with
-      // per-stage barriers so each cost is attributable)
-      val cfg = Dedupe.Config()
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      val records = time("e2e records (cache+count)") {
-        val r = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
-          .cache()
-        r.count(); r
-      }
-      val nRecords = records.count()
-      val labels = time("e2e labels") {
-        val l = Labels.plantedLabels(spark, sfDir)
-        val perClass = math.max(cfg.maxTrainLabels / 2, 1)
-        def strat(v: Int) = l.filter(col("label") === v)
-          .orderBy(md5(concat(lit(s"${cfg.seed}:"), col("id_l"),
-            lit("|"), col("id_r"))), col("id_l"), col("id_r"))
-          .limit(perClass)
-        val s = strat(1).unionByName(strat(0)).cache()
-        s.count(); s
-      }
-      val learner = new Learner(records, labels, cfg.blockingAttrs,
-        cfg.k, cfg.seedRrCut, cfg.maxBlockSize,
-        maxCompare = cfg.maxCompare, dpParallelism = cfg.dpParallelism)
-      val conjunctions = time("e2e learner.learn()") {
-        val l = learner.learn()
-        learner.unpersist(); l
-      }
-      val schemeByName = graft.block.Schemes.byName(cfg.blockingAttrs)
-      val admitted = Dedupe.applicableConjunctions(conjunctions, nRecords,
-        cfg.maxCompare)
-      val pairs = time("e2e budget pair loop") {
-        var acc: DataFrame = null
-        var covered = 0L
-        val chunks = admitted.grouped(8)
-        while (chunks.hasNext && covered < cfg.nCovered) {
-          val chunk = chunks.next()
-          val p = chunk.map(s => Blocking.candidatePairs(records,
-              s.conjunction.map(schemeByName), "conv_id", cfg.maxBlockSize))
-            .reduce(_ unionByName _)
-            .dropDuplicates("id_l", "id_r")
-          acc = if (acc == null) p
-            else acc.unionByName(p.join(acc, Seq("id_l", "id_r"), "left_anti"))
-          acc = acc.localCheckpoint()
-          covered = acc.count()
-        }
-        acc
-      }
-      println(s"[extra] pairs = ${pairs.count()}")
-      val (tfW0, tfN0) = graft.sim.TfIdf.weights(records, "conv_id",
-        "full_text", graft.sim.TfIdf.DefaultMaxDf, Some(nRecords))
-      val tfW = tfW0.cache()
-      val tfN = tfN0.cache()
-      def featurize(p: DataFrame): DataFrame =
-        Distances.featuresFor(p, records, cfg.features)
-          .join(graft.sim.TfIdf.cosineWith(p.select("id_l", "id_r"),
-            tfW, tfN), Seq("id_l", "id_r"))
-      val allFeatureCols = cfg.features.map(_.colName) :+ "tfidf_cos"
-      val trainFeats = time("e2e featurize(labels) (checkpoint)") {
-        featurize(labels.select("id_l", "id_r"))
-          .join(labels, Seq("id_l", "id_r")).localCheckpoint()
-      }
-      val model = time("e2e classifier fit") {
-        MatchClassifier.train(trainFeats, allFeatureCols, cfg.classifier)
-      }
-      val feats = time("e2e featurize(pairs) (checkpoint)") {
-        featurize(pairs).localCheckpoint()
-      }
-      val scored = time("e2e score (checkpoint)") {
-        MatchClassifier.score(model, feats, allFeatureCols).localCheckpoint()
-      }
-      tfW.unpersist(); tfN.unpersist(); labels.unpersist()
-      val clusters = time("e2e CC + singletons") {
-        val edges = scored.filter(col("score") > cfg.threshold)
-        val (components, _) = ConnectedComponents.run(edges)
-        val singles = records.select(col("conv_id"))
-          .join(components.select(col("id").as("conv_id")),
-            Seq("conv_id"), "left_anti")
-          .select(col("conv_id").as("id"), col("conv_id").as("component"))
-        val c = components.unionByName(singles)
-        println(s"[extra] clusters rows = ${c.count()}")
-        c
-      }
-      val _ = clusters
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft.block
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Forward index, inverted index, and candidate-pair generation — the
   * core of the reference's blocking stage:
@@ -10,10 +11,10 @@ import org.apache.spark.sql.functions._
   *   - pair self-join (blocking.py:256-271, spec simple/subroutines.py:19-33)
   *
   * Scale design (10^12 turns / ~10^10 conversations):
-  *   - The self-join shuffles both sides on the full signature tuple —
-  *     co-partitioned exchange, sort-merge join; AQE handles residual
-  *     skew splits.
-  *   - HOT-KEY SKEW is defused *before* the join with a deterministic
+  *   - The reference's self-join becomes [[groupedPairs]]: the
+  *     inverted index crosses one exchange on the full signature tuple
+  *     and pairs are emitted map-side from each block's members.
+  *   - HOT-KEY SKEW is defused *before* pairing with a deterministic
   *     frequency cap: any signature shared by more than `maxBlockSize`
   *     records forms a near-quadratic block (a stopword n-gram can pull
   *     in millions of rows) and is dropped. The reference inherits this
@@ -83,13 +84,15 @@ object Blocking {
     * generation with canonical ordering (dedupe mode: idL < idR,
     * blocking.py:258-259) and dedup across multi-signature hits
     * (blocking.py:270). Same pair set as the former inverted-index
-    * self-join, one fewer corpus-scale exchange: see [[blockPairs]].
+    * self-join, one fewer corpus-scale exchange: see [[groupedPairs]].
     */
   def candidatePairs(records: DataFrame, conjunction: Seq[BoundScheme],
                      idCol: String = "conv_id",
-                     maxBlockSize: Int = DefaultMaxBlockSize): DataFrame =
-    blockPairs(invertedIndex(records, conjunction, idCol), idCol,
-      maxBlockSize)
+                     maxBlockSize: Int = DefaultMaxBlockSize): DataFrame = {
+    val inv = invertedIndex(records, conjunction, idCol)
+    groupedPairs(inv, inv.columns.filter(_.startsWith("sig_")).toSeq,
+      col(idCol), maxBlockSize)
+  }
 
   /** J2: record-linkage variant — pairs cross two tables, no ordering
     * constraint (blocking.py:260-261).
@@ -125,6 +128,14 @@ object Blocking {
     * both sides: a plain 1×-volume join. Replicating the whole right
     * side would cost `salts`× shuffle volume on every record for skew
     * that only lives in a handful of keys.
+    *
+    * This path deliberately stays a self-join, off [[groupedPairs]]: it
+    * exists to keep hot blocks with their exact, uncapped pair set,
+    * while the grouped primitive must cap every block to bound its
+    * `collect_list` buffer — a hot block would have to be collected
+    * whole into one task. The committed plans
+    * `plans/r06/q33_pairs_salted_{before,after}*.txt` show the salted
+    * join shape.
     */
   def candidatePairsSalted(records: DataFrame, conjunction: Seq[BoundScheme],
                            idCol: String = "conv_id",
@@ -170,49 +181,60 @@ object Blocking {
     (l, r, sigs)
   }
 
-  /** Pairs from cap-surviving blocks WITHOUT a sort-merge self-join
-    * (guide §2.4 "remove shuffles outright" + §2.3 "aggregate before
-    * you shuffle"): the block-size counts shuffle only (sig, partial
-    * count) rows (map-side partial agg), the semi-join leaves the
-    * inverted index hash-partitioned on the signature tuple, and the
-    * member-collecting groupBy REUSES that partitioning — so the
-    * inverted index crosses exactly one exchange, versus two full
-    * exchanges + two sorts for the former l⋈r self-join. Pairs are then
-    * emitted map-side from each block's sorted member array (`i < j`
-    * over a sorted distinct array ≡ the join's `id_l < id_r` — members
-    * of a block are distinct records, array_sort uses the same binary
-    * string order as the `<` comparison). collect_list is bounded by
-    * the `_block_n <= maxBlockSize` filter applied BEFORE the semi-join,
-    * so no aggregation buffer ever holds a hot block; `_block_n > 1`
-    * additionally drops singleton blocks (they emit no pairs) before
-    * they reach the collect.
+  /** The one candidate-pair emitter behind blocking, MinHash, SimHash
+    * and embedding LSH: rows keyed by `keys` (a block signature, or a
+    * tagged (band, bucket) key) become the deduped (id_l, id_r) pairs
+    * of every key shared by 1 < n ≤ `cap` rows — the capped self-join
+    * `l.keys = r.keys AND l.id < r.id` of the reference
+    * (blocking.py:256-271), WITHOUT a self-join (guide §2.4 "remove
+    * shuffles outright" + §2.3 "aggregate before you shuffle"):
+    *   - the key counts shuffle only (key, partial count) rows
+    *     (map-side partial agg);
+    *   - the cap semi-join leaves the keyed rows hash-partitioned on the
+    *     key, and the member-collecting groupBy REUSES that
+    *     partitioning — the keyed rows cross exactly one exchange;
+    *   - pairs are emitted map-side from each key's sorted member array
+    *     (`i < j`; array_sort uses the same binary string order as the
+    *     join's `<`), then filtered to id_l < id_r so a repeated member
+    *     id pairs with nothing, exactly as in the self-join.
+    * collect_list is bounded by the cap, applied BEFORE the semi-join,
+    * so no aggregation buffer ever holds a hot key; singleton keys emit
+    * no pairs and are dropped before the collect.
+    *
+    * `member` is an id column, or a struct led by the id when the
+    * caller needs a per-member value beside the pair: each further
+    * struct field `f` comes out as `f_l`/`f_r` (array_sort orders the
+    * structs by id first). Output: (id_l, id_r[, f_l, f_r ...]),
+    * deduped on (id_l, id_r) across keys.
     */
-  private def blockPairs(inv: DataFrame, idCol: String,
-                         maxBlockSize: Int): DataFrame = {
-    val sigNames = inv.columns.filter(_.startsWith("sig_")).toSeq
-    val sigCols = sigNames.map(col)
-    val counts = inv.groupBy(sigCols: _*)
-      .agg(count(lit(1)).as("_block_n"))
-      .filter(col("_block_n") > 1 && col("_block_n") <= maxBlockSize)
-      .drop("_block_n")
-    val members = inv.join(counts, sigNames, "left_semi")
-      .groupBy(sigCols: _*)
-      .agg(array_sort(collect_list(col(idCol))).as("_ids"))
+  private[graft] def groupedPairs(keyed: DataFrame, keys: Seq[String],
+                                  member: Column, cap: Int): DataFrame = {
+    val keyCols = keys.map(col)
+    val kept = keyed.groupBy(keyCols: _*)
+      .agg(count(lit(1)).as("_n"))
+      .filter(col("_n") > 1 && col("_n") <= cap)
+      .drop("_n")
+    val members = keyed.join(kept, keys, "left_semi")
+      .groupBy(keyCols: _*)
+      .agg(array_sort(collect_list(member)).as("_ms"))
+    val payload = members.schema("_ms").dataType match {
+      case ArrayType(s: StructType, _) => s.fieldNames.toSeq
+      case _ => Seq.empty
+    }
+    def side(m: Column, s: String): Seq[Column] =
+      if (payload.isEmpty) Seq(m.as(s"id_$s"))
+      else m.getField(payload.head).as(s"id_$s") +:
+        payload.tail.map(f => m.getField(f).as(s"${f}_$s"))
+    val ms = col("_ms")
     members
-      .select(explode(pairCombinations(col("_ids"))).as("_p"))
-      .select(col("_p.id_l").as("id_l"), col("_p.id_r").as("id_r"))
+      .select(explode(flatten(transform(ms, (x, i) =>
+        transform(
+          slice(ms, i + lit(2), greatest(size(ms) - i - lit(1), lit(0))),
+          y => struct(side(x, "l") ++ side(y, "r"): _*))))).as("_p"))
+      .select("_p.*")
+      .filter(col("id_l") < col("id_r"))
       .dropDuplicates("id_l", "id_r")
   }
-
-  /** All i<j combinations of a sorted member array as (id_l, id_r)
-    * structs — evaluated map-side, bounded by the block-size cap
-    * (≤ C(maxBlockSize, 2) structs per block). Shared with the
-    * banded near-dup generators in graft.text. */
-  private[graft] def pairCombinations(ids: Column): Column =
-    flatten(transform(ids, (x, i) =>
-      transform(
-        slice(ids, i + lit(2), greatest(size(ids) - i - lit(1), lit(0))),
-        y => struct(x.as("id_l"), y.as("id_r")))))
 
   /** Sorted-neighborhood blocking (the north star's third blocking-key
     * family next to n-gram conjunctions and MinHash/LSH bands): order

@@ -69,9 +69,9 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     // LAZY checkpoints: every materialized edge set is immediately
     // fingerprinted, and that aggregation is the action that computes
-    // the checkpoint — one job per superstep instead of two (the eager
-    // form ran a materialization job AND the fingerprint job per round;
-    // at converged-small edge counts the loop is pure job/barrier
+    // the checkpoint — one job per superstep fewer (the eager form ran
+    // a materialization job AND the fingerprint job per round; at
+    // converged-small edge counts the loop is pure job/barrier
     // overhead, measured 3.2 s for a 15k-edge graph at local[32]).
     def materialize(df: DataFrame): DataFrame =
       if (reliableCheckpoints) df.checkpoint(eager = false)
@@ -87,7 +87,7 @@ object ConnectedComponents {
     val fp0 = fingerprint(e0)
     val stringIds = edges.schema("id_l").dataType == StringType
     if (!stringIds || fp0._1 <= encodeThreshold)
-      return loop(e0, fp0, maxRounds, reliableCheckpoints)
+      return loop(e0, fp0, maxRounds, materialize)
     // Dictionary-encode (see EncodeEdgeThreshold). ORDER-PRESERVING:
     // ids assigned by zipWithIndex over range-sorted distinct ids, so
     // min-over-idx ≡ min-over-id, the canonical a<b orientation
@@ -112,7 +112,7 @@ object ConnectedComponents {
       .join(dict.select(col("id").as("b"), col("idx").as("_eb")), "b")
       .select(col("_ea").as("a"), col("_eb").as("b")))
     val (members, steps) = loop(encoded, fingerprint(encoded), maxRounds,
-      reliableCheckpoints)
+      materialize)
     val decoded = members
       .join(dict.select(col("idx").as("id"), col("id").as("_sid")), "id")
       .join(dict.select(col("idx").as("component"), col("id").as("_scomp")),
@@ -122,42 +122,34 @@ object ConnectedComponents {
   }
 
   /** The alternating large-star/small-star loop over a normalized
-    * (undirected, canonical, deduped, materialized) edge set. */
+    * (undirected, canonical, deduped, materialized) edge set. Each
+    * round's star width comes from the live edge count (see
+    * [[EdgesPerPartition]]), capped at the session's shuffle width,
+    * and is passed to the stars as explicit repartition widths — the
+    * session conf is read, never set, so concurrent queries on the
+    * same session keep their own shuffle width. */
   private def loop(e0: DataFrame, fp0: (Long, Long), maxRounds: Int,
-          reliableCheckpoints: Boolean): (DataFrame, Seq[Superstep]) = {
-    val spark = e0.sparkSession
-    def materialize(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint() else df.localCheckpoint()
+                   materialize: DataFrame => DataFrame)
+      : (DataFrame, Seq[Superstep]) = {
+    val outerPartitions =
+      e0.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong
     var e = e0
     val steps = scala.collection.mutable.ArrayBuffer.empty[Superstep]
     var fp = fp0
     steps += Superstep(0, fp._1, fp._2)
-    // adapt shuffle width to the live edge count per round (restored
-    // after the loop, exception-safe via finally). NOTE: the setting is
-    // SESSION-scoped — a concurrent query on the same SparkSession (or
-    // two concurrent CC runs) would observe the shrunken width; this
-    // engine's one-driver pipeline runs CC serially, so the assumption
-    // holds. A multi-tenant session should run CC through
-    // `spark.newSession()` (separate conf, shared catalog/cache).
-    val confKey = "spark.sql.shuffle.partitions"
-    val outerPartitions = spark.conf.get(confKey)
-    def adapt(edgeCount: Long): Unit = spark.conf.set(confKey,
-      math.max(1L, math.min(outerPartitions.toLong,
-        edgeCount / EdgesPerPartition + 1)).toString)
     var round = 0
     var converged = false
-    try {
-      while (!converged && round < maxRounds) {
-        round += 1
-        adapt(fp._1)
-        val next = materialize(smallStar(largeStar(e)))
-        val nfp = fingerprint(next)
-        converged = nfp == fp
-        fp = nfp
-        e = next
-        steps += Superstep(round, fp._1, fp._2)
-      }
-    } finally spark.conf.set(confKey, outerPartitions)
+    while (!converged && round < maxRounds) {
+      round += 1
+      val width = math.max(1L,
+        math.min(outerPartitions, fp._1 / EdgesPerPartition + 1)).toInt
+      val next = materialize(smallStar(largeStar(e, width), width))
+      val nfp = fingerprint(next)
+      converged = nfp == fp
+      fp = nfp
+      e = next
+      steps += Superstep(round, fp._1, fp._2)
+    }
     require(converged, s"CC did not converge in $maxRounds rounds")
 
     // converged edge set is a star: (member, root). Roots appear only on
@@ -175,14 +167,14 @@ object ConnectedComponents {
     * trailing `distinct()` was a full extra exchange per superstep for
     * rows the next operator dedupes anyway (guide §2.4).
     */
-  private def largeStar(e: DataFrame): DataFrame = {
+  private def largeStar(e: DataFrame, width: Int): DataFrame = {
     // one explicit exchange on the star key: the min-aggregation AND
     // the sym⋈m join both cluster by `a`, so hash-partitioning sym once
     // serves both (guide §2.4 "two operations keyed the same way can
     // share one exchange"; the repartition subtree is identical in both
     // consumers, so ReuseExchange shuffles it once)
     val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a"))
+      .repartition(width, col("a"))
     val m = sym.groupBy(col("a"))
       .agg(min(col("b")).as("_mn"))
       .select(col("a"), least(col("a"), col("_mn")).as("m"))
@@ -195,7 +187,7 @@ object ConnectedComponents {
   /** Small-star: orient edges large→small; link all smaller neighbors
     * (and u itself) to the minimum.
     */
-  private def smallStar(e: DataFrame): DataFrame = {
+  private def smallStar(e: DataFrame, width: Int): DataFrame = {
     // same shared-exchange shape as [[largeStar]]: partitioning by `u`
     // satisfies the (u, v) distinct, the min-aggregation and the join,
     // so the orientation shuffles once; the only other exchange is the
@@ -205,7 +197,7 @@ object ConnectedComponents {
     val oriented = e
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
-      .repartition(col("u"))
+      .repartition(width, col("u"))
       .distinct()
     val m = oriented.groupBy(col("u")).agg(min(col("v")).as("m"))
     oriented.join(m, "u")

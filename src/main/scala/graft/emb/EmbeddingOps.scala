@@ -535,7 +535,7 @@ object EmbeddingOps {
   val LshBands = 2
 
   /** Per-band bucket cap: buckets larger than this are dropped before
-    * the in-bucket self-join (the same deterministic frequency-cap
+    * in-bucket pair emission (the same deterministic frequency-cap
     * defense as blocking/minhash — without it a dense embedding region
     * makes one bucket quadratic at 10^9+ vectors). */
   val LshBucketCap = 200
@@ -557,12 +557,14 @@ object EmbeddingOps {
   /** Random-hyperplane sign-bit LSH with banding and bucket caps:
     * signature bit i = sign(⟨signs_i, v⟩) over the QUANTIZED vector
     * (integer dot products — exact, portable); `bits` planes split
-    * into `bits/8` 8-bit band keys; per band, buckets over `bucketCap`
-    * are dropped, survivors self-joined; candidates unioned across
-    * bands, verified with true cosine ≥ threshold.
+    * into `bits/8` 8-bit band keys; every band's buckets become tagged
+    * (band, bucket) keys of one [[graft.block.Blocking.groupedPairs]]
+    * pipeline — per band, buckets over `bucketCap` are dropped — and
+    * the candidates are verified with true cosine ≥ threshold. Members
+    * carry their quantized vector, so the verify is a map-side
+    * projection, not a join back to the vectors.
     *
-    * Scale path for embedding near-dup: candidate generation is a
-    * capped bucket equi-join per band — never all-pairs, never an
+    * Scale path for embedding near-dup: never all-pairs, never an
     * unbounded bucket. Recall on planted near-dups is asserted ≥ 0.9
     * against ground truth in EmbeddingOpsSpec.
     */
@@ -597,26 +599,14 @@ object EmbeddingOps {
       when(proj(i) >= 0, lit("1")).otherwise(lit("0"))
     val nBands = bits / 8
     val bandKey = (b: Int) => concat((0 until 8).map(k => bitChar(b * 8 + k)): _*)
-    val d = guarded.select(col("vec_id"), quant(col("embedding")).as("v"))
-    val withBands = d.select(
-      (col("vec_id") +: col("v") +:
-        (0 until nBands).map(b => bandKey(b).as(s"band$b"))): _*)
-      .localCheckpoint() // signature computed once, scanned per band
-    val candidates = (0 until nBands).map { b =>
-      val banded = withBands.select(col("vec_id"), col(s"band$b").as("bucket"))
-      val keep = banded.groupBy("bucket")
-        .agg(count(lit(1)).as("_bucket_n"))
-        .filter(col("_bucket_n") <= bucketCap)
-        .drop("_bucket_n")
-      val capped = banded.join(keep, Seq("bucket"), "left_semi")
-      capped.select(col("vec_id").as("id_l"), col("bucket"))
-        .join(capped.select(col("vec_id").as("id_r"), col("bucket")), "bucket")
-        .filter(col("id_l") < col("id_r"))
-        .select("id_l", "id_r")
-    }.reduce(_ unionByName _).dropDuplicates("id_l", "id_r")
-    candidates
-      .join(withBands.select(col("vec_id").as("id_l"), col("v").as("v_l")), "id_l")
-      .join(withBands.select(col("vec_id").as("id_r"), col("v").as("v_r")), "id_r")
+    val bandArr = array((0 until nBands).map(b =>
+      struct(lit(b).as("band"), bandKey(b).as("bucket"))): _*)
+    val banded = guarded
+      .select(col("vec_id"), quant(col("embedding")).as("v"))
+      .select(col("vec_id"), col("v"), inline(bandArr))
+      .localCheckpoint() // signatures computed once, scanned twice
+    graft.block.Blocking.groupedPairs(banded, Seq("band", "bucket"),
+        struct(col("vec_id"), col("v")), bucketCap)
       .withColumn("cosine", cosineQ(col("v_l"), col("v_r")))
       .filter(col("cosine") >= threshold)
       .select("id_l", "id_r", "cosine")

@@ -423,8 +423,9 @@ object TextOps {
   /** Near-dup pairs by SimHash Hamming distance, banded: split the 64
     * bits into 4 × 16-bit bands — by pigeonhole, two signatures within
     * Hamming ≤ 3 MUST agree on at least one band, and small distances
-    * generally collide on some band — equi-join per band (bucket-capped
-    * like every other hot-key join here), union, then verify
+    * generally collide on some band — pairs sharing a band bucket
+    * (bucket-capped like every other hot key here, via
+    * [[graft.block.Blocking.groupedPairs]]), then verify
     * bit_count(xor) ≤ maxHamming. Never all-pairs; verification only
     * touches banded candidates.
     *
@@ -435,43 +436,18 @@ object TextOps {
   def simhashHammingPairs(c: DataFrame, maxHamming: Int = 8,
                           bandCap: Int = BandCap): DataFrame = {
     val sig = simhash64(c).localCheckpoint()
-    // same tagged grouped-pairs shape as [[minhashCandidates]] — one
-    // pipeline for all 4 bands; bucket members carry their signature so
-    // the pair emits (id, sig) for both sides and the Hamming verify
-    // stays a map-side projection. array_sort on (doc_id, simhash64)
-    // structs orders by doc_id first (ids unique per bucket), so i<j
-    // pairs ≡ the former id_l < id_r join filter.
+    // all 4 bands as tagged (band, k) keys of one grouped-pairs
+    // pipeline; members carry their signature so the Hamming verify
+    // stays a map-side projection
     val bandArr = array((0 until 4).map { b =>
       struct(lit(b).as("band"),
         col("simhash64").bitwiseAND(lit(65535L << (16 * b))).as("k"))
     }: _*)
-    val banded = sig.select(col("doc_id"), col("simhash64"),
-        explode(bandArr).as("_b"))
-      .select(col("doc_id"), col("simhash64"),
-        col("_b.band").as("band"), col("_b.k").as("k"))
-    val keys = Seq("band", "k")
-    val keep = banded.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("_bucket_n"))
-      .filter(col("_bucket_n") > 1 && col("_bucket_n") <= bandCap)
-      .drop("_bucket_n")
-    val members = banded.join(keep, keys, "left_semi")
-      .groupBy(keys.map(col): _*)
-      .agg(array_sort(collect_list(
-        struct(col("doc_id"), col("simhash64")))).as("_ms"))
-    val combos = flatten(transform(col("_ms"), (x, i) =>
-      transform(
-        slice(col("_ms"), i + lit(2),
-          greatest(size(col("_ms")) - i - lit(1), lit(0))),
-        y => struct(x.getField("doc_id").as("id_l"),
-          y.getField("doc_id").as("id_r"),
-          x.getField("simhash64").as("s_l"),
-          y.getField("simhash64").as("s_r")))))
-    members.select(explode(combos).as("_p"))
-      .select(col("_p.id_l").as("id_l"), col("_p.id_r").as("id_r"),
-        col("_p.s_l").as("s_l"), col("_p.s_r").as("s_r"))
-      .dropDuplicates("id_l", "id_r")
-      .withColumn("hamming",
-        bit_count(col("s_l").bitwiseXOR(col("s_r"))).cast("int"))
+    val banded = sig.select(col("doc_id"), col("simhash64"), inline(bandArr))
+    graft.block.Blocking.groupedPairs(banded, Seq("band", "k"),
+        struct(col("doc_id"), col("simhash64")), bandCap)
+      .withColumn("hamming", bit_count(
+        col("simhash64_l").bitwiseXOR(col("simhash64_r"))).cast("int"))
       .filter(col("hamming") <= maxHamming)
       .select("id_l", "id_r", "hamming")
   }
@@ -513,7 +489,7 @@ object TextOps {
 
   /** Default per-band bucket cap: a band bucket (2 equal MinHash
     * values) shared by more than this many docs is boilerplate-grade —
-    * its in-bucket self-join is quadratic, so it is dropped (same
+    * its in-bucket pair set is quadratic, so it is dropped (same
     * deterministic frequency-cap defense as blocking.capHotSignatures,
     * mirrored in the oracle). 200 ⇒ ≤ ~20k pairs per bucket. */
   val BandCap = 200
@@ -550,49 +526,30 @@ object TextOps {
     exploded.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
 
-  /** LSH: band doc pairs sharing any (h_{2b}, h_{2b+1}) band — hot band
-    * buckets capped at `bandCap` — then verify true shingle-set
-    * Jaccard; near-dup = jaccard ≥ threshold. Band join is the scale
-    * path (no all-pairs, no unbounded bucket); the verify step only
-    * touches banded candidates.
-    *
-    * The signature table is materialized via localCheckpoint (eager)
-    * rather than cache(): it is scanned once per band, and checkpoint
-    * blocks are released by the ContextCleaner when the plan is
-    * dropped — no cache entry left pinned for the session's lifetime.
+  /** Banded LSH candidates: doc pairs sharing any (h_{2b}, h_{2b+1})
+    * band, hot band buckets capped at `bandCap` — the candidate stage of
+    * [[minhashPairs]], exposed for composition. The signature table is
+    * materialized via localCheckpoint (eager) rather than cache(): the
+    * grouped-pairs pipeline scans it twice (counts + members), and
+    * checkpoint blocks are released by the ContextCleaner when the plan
+    * is dropped — no cache entry left pinned for the session's lifetime.
     */
-  /** Banded candidate generation alone (the LSH join stage) — exposed
-    * for stage-level profiling (graft.Profile) and composition. */
   def minhashCandidates(c: DataFrame, bandCap: Int = BandCap): DataFrame = {
     val sig = minhashSignatures(c).localCheckpoint()
-    // ONE tagged grouped-pairs pipeline instead of 4 per-band self-join
-    // subtrees (guide §2.4): every (band, k0, k1) bucket key rides one
-    // explode, one grouped count (map-side partial agg), one semi-join
-    // and one member-collecting groupBy that reuses the semi-join's
-    // partitioning; i<j pairs are emitted map-side from each bucket's
-    // sorted member array, bounded by the band cap. Same pair set as
-    // the former per-band joins (union ∪ dedupe ≡ dedupe over the
-    // tagged union).
+    // every band as a tagged (band, k0, k1) key of one grouped-pairs
+    // pipeline: dedupe over the tagged union ≡ union of per-band pairs
     val bandArr = array((0 until MinHashFns / BandSize).map { b =>
       struct(lit(b).as("band"), col(s"h${2 * b}").as("k0"),
         col(s"h${2 * b + 1}").as("k1")) }: _*)
-    val banded = sig.select(col("doc_id"), explode(bandArr).as("_b"))
-      .select(col("doc_id"), col("_b.band").as("band"),
-        col("_b.k0").as("k0"), col("_b.k1").as("k1"))
-    val keys = Seq("band", "k0", "k1")
-    val keep = banded.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("_bucket_n"))
-      .filter(col("_bucket_n") > 1 && col("_bucket_n") <= bandCap)
-      .drop("_bucket_n")
-    banded.join(keep, keys, "left_semi")
-      .groupBy(keys.map(col): _*)
-      .agg(array_sort(collect_list(col("doc_id"))).as("_ids"))
-      .select(explode(
-        graft.block.Blocking.pairCombinations(col("_ids"))).as("_p"))
-      .select(col("_p.id_l").as("id_l"), col("_p.id_r").as("id_r"))
-      .dropDuplicates("id_l", "id_r")
+    graft.block.Blocking.groupedPairs(
+      sig.select(col("doc_id"), inline(bandArr)), Seq("band", "k0", "k1"),
+      col("doc_id"), bandCap)
   }
 
+  /** MinHash near-dup: [[minhashCandidates]] verified with the true
+    * shingle-set Jaccard; near-dup = jaccard ≥ threshold. Never
+    * all-pairs, no unbounded bucket; the verify step only touches
+    * banded candidates. */
   def minhashPairs(c: DataFrame, threshold: Double = 0.5,
                    bandCap: Int = BandCap): DataFrame = {
     val candidates = minhashCandidates(c, bandCap)

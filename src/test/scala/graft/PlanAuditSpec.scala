@@ -53,6 +53,35 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
       s"blocking self-join degenerated to a cartesian:\n$plan")
   }
 
+  test("candidate-pair generators join only through the cap left_semi " +
+    "(no self-join, no per-band join)") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.block.{Blocking, BoundScheme, FirstNChars}
+    import graft.text.TextOps
+    object Aqe extends AdaptiveSparkPlanHelper
+    // inputs materialized so the audit sees only the candidate-pair
+    // plan (normalize itself legitimately joins orders ⋈ lineitem)
+    val recs = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
+      .localCheckpoint()
+    val docs = TextOps.corpus(spark, sfDir).localCheckpoint()
+    val generators = Seq(
+      "blocking" -> Blocking.candidatePairs(recs,
+        Seq(BoundScheme(FirstNChars(8), "head_text")), "conv_id", 100),
+      "minhash" -> TextOps.minhashCandidates(docs),
+      "simhash" -> TextOps.simhashHammingPairs(docs),
+      "embedding lsh" -> graft.emb.EmbeddingOps.lshNearDup(
+        graft.emb.EmbeddingOps.embeddings(spark, sfDir)))
+    generators.foreach { case (name, df) =>
+      assert(df.collect().nonEmpty, s"$name emitted no pairs")
+      val plan = df.queryExecution.executedPlan // final adaptive plan
+      val joins = Aqe.collect(plan) { case j: BaseJoinExec => j.joinType }
+      assert(joins == Seq(LeftSemi),
+        s"$name pair generation joins beyond the cap semi-join:\n$plan")
+    }
+  }
+
   test("exact-dup groups plan carries no Window (de-skewed agg + join)") {
     import spark.implicits._
     val c = Seq((1L, "a b"), (2L, "a b"), (3L, "c")).toDF("doc_id", "text")

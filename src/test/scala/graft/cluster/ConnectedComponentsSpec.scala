@@ -89,4 +89,24 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
     val comps = members.collect().map(_.getString(1)).distinct
     assert(comps.toSeq == Seq("n00"))
   }
+
+  test("CC leaves the session's shuffle width alone for concurrent queries") {
+    val key = "spark.sql.shuffle.partitions"
+    assert(spark.conf.get(key) == "4")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poller = new Thread(() =>
+      while (running.get()) seen.add(spark.conf.get(key)))
+    poller.start()
+    try {
+      val chain = (0 until 40).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
+      val (members, _) = ConnectedComponents.run(chain.toDF("id_l", "id_r"))
+      assert(members.collect().map(_.getString(1)).distinct.toSeq == Seq("n00"))
+    } finally {
+      running.set(false)
+      poller.join()
+    }
+    assert(seen.size == 1 && seen.contains("4"),
+      s"a concurrent reader saw widths $seen")
+  }
 }
