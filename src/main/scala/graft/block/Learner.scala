@@ -30,11 +30,14 @@ final case class ConjStats(
   *
   * Execution: where the reference issues ONE POSTGRES QUERY PER
   * CANDIDATE CONJUNCTION (blocking.py:196-254) from a process pool,
-  * here every DP step scores ALL extensions of a base in one batch:
-  * the per-extension inverted indexes are unioned under a `_x` tag
-  * column and aggregated grouped by tag (J3+A1 batched) — see
-  * [[scoreBatch]] for the block-size/coverage split that keeps the
-  * whole search O(k × #seeds-passing) batches with no pair-scale
+  * here the DP runs BREADTH-FIRST and every depth is ONE stats batch:
+  * the `base ∧ x` candidates of every live seed chain are gathered,
+  * deduped by sorted scheme list, and scored together — their
+  * inverted indexes are unioned under an int `_x` candidate tag and
+  * aggregated grouped by tag (J3+A1 batched). A `learn()` with k = 3
+  * and no escalation is three batches (singles, depth 1, depth 2)
+  * however many seeds are refined. See [[scoreAll]] for the
+  * block-size/coverage split that keeps each batch free of pair-scale
   * work. Scores are memoized across seeds (reference @lru_cache,
   * optimizers.py:37-50).
   */
@@ -58,9 +61,12 @@ final case class ConjStats(
   *     schemes this counts a pair once per shared key — an upper bound
   *     that is exactly the JOIN WORK the conjunction induces, which is
   *     what the reduction ratio guards.
-  *   - `positives`/`negatives` = labeled pairs whose two sides share a
-  *     cap-surviving key — a join against the LABELED records only
-  *     (thousands of rows however large the corpus).
+  *   - `positives`/`negatives` = labeled pairs whose two ends share a
+  *     cap-surviving key: each labeled pair's SHARED keys (the
+  *     intersection of its two ends' compound keys, computed on the
+  *     labeled pairs only) are looked up in the surviving blocks
+  *     through a broadcast join — the corpus-scale block table is
+  *     never shuffled for coverage.
   */
 final class Learner(
     records: DataFrame,
@@ -70,26 +76,13 @@ final class Learner(
     seedRrCut: Double = 0.99,
     maxBlockSize: Int = Blocking.DefaultMaxBlockSize,
     idCol: String = "conv_id",
-    maxCompare: Long = 1000000L,
-    dpParallelism: Int = Learner.DefaultDpParallelism) {
+    maxCompare: Long = 1000000L) {
 
   val schemes: Seq[BoundScheme] = Schemes.forAttributes(attrs)
   private val byName: Map[String, BoundScheme] =
     schemes.map(b => b.name -> b).toMap
-  // memoized conjunction stats, keyed by the SORTED scheme list.
-  // ConcurrentHashMaps because seed DP chains run on parallel threads
-  // ([[learnFrom]]): `inflight` is the claim map — chains CONVERGING
-  // on the same base (seed A's argmax is B and vice versa) is
-  // structurally common, not a same-instant rarity, and without a
-  // claim each converged chain would re-run the full corpus-scale
-  // stats batch for the same conjunctions. The first thread to claim
-  // a key computes it; others await the winner's latch and read the
-  // cache ([[scoreBatch]]).
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], ConjStats]
-  private[block] val inflight =
-    new java.util.concurrent.ConcurrentHashMap[
-      Seq[String], java.util.concurrent.CountDownLatch]
+  // memoized conjunction stats, keyed by the SORTED scheme list
+  private val cache = mutable.HashMap.empty[Seq[String], ConjStats]
 
   private val labelsCached = labels.cache()
 
@@ -130,45 +123,38 @@ final class Learner(
     n * (n - 1) / 2.0
   }
 
-  /** Per-row array of 64-bit hashes of the base-conjunction signature
-    * tuples — the cartesian product of the base schemes' per-record
+  /** Per-row array of 64-bit hashes of the conjunction's signature
+    * tuples — the cartesian product of its schemes' per-record
     * signature sets, hash-chained left to right (block statistics need
     * key IDENTITY, not key text; a 64-bit collision merges two blocks
     * in the estimate with probability ~#blocks²/2⁶⁴ — statistical
-    * zero). Empty array ⇔ some base scheme has no valid signature ⇔
-    * the record is in no block of this conjunction.
+    * zero). Empty array ⇔ some scheme has no valid signature ⇔ the
+    * record is in no block of this conjunction. `sig` resolves a
+    * scheme's signature column (a struct field on the coverage side).
     */
-  private def combosCol(base: Seq[String]): Column =
-    base.foldLeft(array(lit(0L))) { (acc, name) =>
-      flatten(transform(acc, h =>
-        transform(col(sigColName(name)), s => xxhash64(h, s))))
+  private def combosCol(conj: Seq[String],
+                        sig: String => Column = n => col(sigColName(n))): Column =
+    conj.foldLeft(array(lit(0L))) { (acc, name) =>
+      flatten(transform(acc, h => transform(sig(name), s => xxhash64(h, s))))
     }
 
-  /** (tag, block-key-hash) incidence rows for `base ∧ x` over every x,
-    * one per (record, extension, compound signature) — produced by a
-    * PURE PROJECTION over the cached signature table: no join anywhere,
-    * so the only shuffle a stats batch ever does is the partial-agg
-    * groupBy on the emitted key. The extension tag is the INT index
-    * into `exts` (callers map back by position), not the scheme-name
-    * string: the tag rides every incidence row through the batch
-    * shuffle, and a 4-byte int vs a ~25-byte name is a third off the
-    * shuffled row (guide §2.3, narrower types).
+  /** (tag, block-key-hash) incidence rows for every conjunction in
+    * `conjs`, one per (input row, conjunction, key in `keys(conj)`) —
+    * a PURE PROJECTION: no join, so the only shuffle a stats batch
+    * does on the corpus is the partial-agg groupBy on the emitted key.
+    * The tag is the INT index into `conjs` (callers map back by
+    * position), not a scheme-name string: it rides every incidence row
+    * through the batch shuffle, and a 4-byte int vs a ~25-byte name is
+    * a third off the shuffled row (guide §2.3, narrower types).
     */
-  private def keyedRows(sigs: DataFrame, base: Seq[String],
-                        exts: Seq[String], keep: Seq[Column]): DataFrame = {
-    val extArr = array(exts.zipWithIndex.map { case (x, i) =>
-      struct(lit(i).as("_x"), col(sigColName(x)).as("sigs")) }: _*)
-    sigs
-      .select((keep :+ combosCol(base).as("_bc")) :+
-        explode(extArr).as("_e"): _*)
-      // the key list is computed as a PLAIN column between the two
-      // generators: an explode whose child dereferences the previous
-      // explode's struct inside nested lambdas trips Catalyst's
-      // attribute binding (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
+  private def keyedRows(df: DataFrame, conjs: Seq[Seq[String]],
+                        keep: Seq[Column],
+                        keys: Seq[String] => Column): DataFrame = {
+    val arr = array(conjs.zipWithIndex.map { case (c, i) =>
+      struct(lit(i).as("_x"), keys(c).as("_ks")) }: _*)
+    df.select(keep :+ explode(arr).as("_e"): _*)
       .select((keep :+ col("_e._x").as("_x")) :+
-        flatten(transform(col("_bc"), h =>
-          transform(col("_e.sigs"), s => xxhash64(h, s)))).as("_ks"): _*)
-      .select((keep :+ col("_x")) :+ explode(col("_ks")).as("sigh"): _*)
+        explode(col("_e._ks")).as("sigh"): _*)
   }
 
   /** The surviving-block-size relation for one stats batch — exposed
@@ -183,11 +169,37 @@ final class Learner(
     * are singletons; this shrinks the spilled block table by roughly
     * that fraction.
     */
-  private[graft] def statsPlan(base: Seq[String], exts: Seq[String]): DataFrame =
-    keyedRows(corpusSigs, base, exts, Nil)
+  private[graft] def statsPlan(conjs: Seq[Seq[String]]): DataFrame =
+    keyedRows(corpusSigs, conjs, Nil, combosCol(_))
       .groupBy(col("_x"), col("sigh"))
       .agg(count(lit(1)).as("_n"))
       .filter(col("_n") > 1 && col("_n") <= maxBlockSize)
+
+  /** (_x, id_l, id_r, label) for every pair in `pairs` (a slice of
+    * the labels) whose two ends share a key of `surviving` under
+    * `conjs(_x)` — one row per shared surviving key, so callers dedupe
+    * pairs. Each pair's SHARED keys come from the labeled
+    * records alone — both ends' signature rows broadcast onto the
+    * pairs, then per conjunction the intersection of the two ends'
+    * compound keys — so the only corpus-scale input, `surviving`, is
+    * the stream side of one broadcast join on (_x, sigh): no exchange
+    * of the block table. The broadcast is bounded by labels ×
+    * conjunctions × shared keys.
+    */
+  private def coverage(conjs: Seq[Seq[String]], surviving: DataFrame,
+                       pairs: DataFrame): DataFrame = {
+    val sigCols = schemes.map(b => col(sigColName(b.name)))
+    def end(side: String) = broadcast(labRecSigs.select(
+      col(idCol).as(s"id_$side"), struct(sigCols: _*).as(s"_$side")))
+    val pairKeys = keyedRows(
+      pairs.join(end("l"), "id_l").join(end("r"), "id_r"), conjs,
+      Seq("id_l", "id_r", "label").map(col),
+      c => array_intersect(combosCol(c, n => col(s"_l.${sigColName(n)}")),
+        combosCol(c, n => col(s"_r.${sigColName(n)}"))))
+    surviving.select("_x", "sigh")
+      .join(broadcast(pairKeys), Seq("_x", "sigh"))
+      .select("_x", "id_l", "id_r", "label")
+  }
 
   /** Optional progress logging (-Dgraft.verbose=true or GRAFT_VERBOSE=1). */
   private val verbose = sys.props.get("graft.verbose").contains("true") ||
@@ -195,126 +207,78 @@ final class Learner(
   private def log(msg: => String): Unit =
     if (verbose) System.err.println(s"[learner] $msg")
 
-  /** Score `base ∧ x` for every x in `exts` — two Spark jobs total.
+  /** Score every not-yet-memoized conjunction in `conjs` — ONE stats
+    * batch, ONE Spark action.
     *
     * Shape: ONE map-only pass over the cached signature table emits
-    * (tag, block-key-hash) incidence rows for every extension at once
-    * ([[keyedRows]] — no corpus-scale join anywhere), then (1) a
+    * (tag, block-key-hash) incidence rows for every conjunction at
+    * once ([[keyedRows]] — no corpus-scale join anywhere), then (1) a
     * grouped count turns them into BLOCK SIZES — n_pairs is
     * Σ C(size,2) over cap-surviving blocks, no pair ever materialized —
-    * and (2) the labeled-record slice's keys are semi-joined against
-    * the surviving blocks to count covered labeled pairs. One
-    * corpus-scale shuffle per DP step regardless of extension count,
-    * with map-side partial aggregation; nothing scales with the pair
-    * count.
+    * and (2) the labeled pairs' shared keys are looked up in the
+    * surviving blocks to count covered labeled pairs ([[coverage]]).
+    * Both per-tag aggregates are unioned and collected once; AQE runs
+    * the two branches' stages concurrently. One corpus-scale shuffle
+    * per batch regardless of candidate count, with map-side partial
+    * aggregation; nothing scales with the pair count.
+    */
+  private def scoreAll(conjs: Seq[Seq[String]]): Unit = {
+    val missing = conjs.distinctBy(_.sorted).filterNot(c => cache.contains(c.sorted))
+    if (missing.isEmpty) return
+    val t0 = System.nanoTime()
+    // block SIZES on the full corpus — a plain groupBy with map-side
+    // partial aggregation over map-only incidence rows; the cap is
+    // applied to the real sizes, exactly as candidatePairs will apply
+    // it at blocking time.
+    // read twice (n_pairs agg + coverage join) → persisted.
+    // MEMORY_AND_DISK (columnar, evictable, lineage kept): the
+    // surviving-block table can be tens of millions of rows per
+    // batch — an un-evictable localCheckpoint OOMed the 8 GB test
+    // JVM, and the round-5 DISK_ONLY answer paid a full disk
+    // write+read per DP batch even when the table fit in memory;
+    // a plain cache spills under pressure instead of pinning.
+    val surviving = statsPlan(missing)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val none = lit(null).cast("long")
+    val nPairs = surviving.groupBy(col("_x"))
+      .agg(sum(col("_n") * (col("_n") - 1) / 2).cast("long").as("n"))
+      .select(col("_x"), col("n"), none.as("pos"), none.as("neg"))
+    // a pair sharing several surviving keys under one tag is counted
+    // once: the per-tag SET of covered pairs dedupes it in the same
+    // shuffle that groups by tag (partial sets merge map-side)
+    def labeled(c: Column, v: Int) =
+      size(filter(c, p => p.getField("label") === v)).cast("long")
+    val covered = coverage(missing, surviving, labelsCached)
+      .groupBy(col("_x"))
+      .agg(collect_set(struct("id_l", "id_r", "label")).as("_c"))
+      .select(col("_x"), none.as("n"), labeled(col("_c"), 1).as("pos"),
+        labeled(col("_c"), 0).as("neg"))
+    val (nRows, covRows) =
+      try nPairs.unionByName(covered).collect().partition(r => !r.isNullAt(1))
+      finally surviving.unpersist()
+    val n = nRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val cov = covRows.map(r => r.getInt(0) -> ((r.getLong(2), r.getLong(3)))).toMap
+    missing.zipWithIndex.foreach { case (c, i) =>
+      val s = n.get(i) match {
+        case Some(np) =>
+          val (pos, neg) = cov.getOrElse(i, (0L, 0L))
+          ConjStats(c, np, pos, neg, 1.0 - np / math.max(nComparisons, 1.0))
+        case None => ConjStats(c, 0L, 0L, 0L, 1.0)
+      }
+      cache(c.sorted) = s
+    }
+    log(s"scored ${missing.size} conjunctions in one batch in " +
+      s"${math.round((System.nanoTime() - t0) / 1e8) / 10.0} s")
+  }
+
+  /** Score `base ∧ x` for every x in `exts` (one batch for the ones
+    * not memoized yet). Returns each conjunction in the CALLER's path
+    * order `base :+ x`: stats live under the sorted key, but the
+    * conjunction a chain sees must be its own path.
     */
   def scoreBatch(base: Seq[String], exts: Seq[String]): Map[String, ConjStats] = {
-    // claim the uncached keys: compute only the ones this thread wins;
-    // await the in-flight winner for the rest (see `inflight` above)
-    val claimed = mutable.ArrayBuffer.empty[String]
-    val awaited =
-      mutable.ArrayBuffer.empty[(String, java.util.concurrent.CountDownLatch)]
-    exts.foreach { x =>
-      val k = (base :+ x).sorted
-      if (!cache.containsKey(k)) {
-        val latch = new java.util.concurrent.CountDownLatch(1)
-        val prev = inflight.putIfAbsent(k, latch)
-        if (prev == null) claimed += x else awaited += ((x, prev))
-      }
-    }
-    val missing = claimed.toSeq
-    val t0 = System.nanoTime()
-    try if (missing.nonEmpty) {
-      val keyCols = Seq("_x", "sigh")
-      // block SIZES on the full corpus — a plain groupBy with map-side
-      // partial aggregation over map-only incidence rows; the cap is
-      // applied to the real sizes, exactly as candidatePairs will apply
-      // it at blocking time.
-      // read twice (n_pairs agg + coverage semi-join) → persisted.
-      // MEMORY_AND_DISK (columnar, evictable, lineage kept): the
-      // surviving-block table can be tens of millions of rows per
-      // batch — an un-evictable localCheckpoint OOMed the 8 GB test
-      // JVM, and the round-5 DISK_ONLY answer paid a full disk
-      // write+read per DP batch even when the table fit in memory;
-      // a plain cache spills under pressure instead of pinning.
-      val surviving = statsPlan(base, missing)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nPairsPlan = surviving.groupBy(col("_x"))
-        .agg(sum(col("_n") * (col("_n") - 1) / 2).cast("long").as("n"))
-      // the n_pairs aggregation and the coverage arm are independent
-      // reads of `surviving` — run them as two CONCURRENT jobs (guide
-      // §2.6: actions are only sequential because the driver calls
-      // them sequentially); the second job's tasks backfill the
-      // first's barrier tail. Concurrent first-materialization of the
-      // cache is safe (per-partition cache locks: one task computes,
-      // the other waits).
-      val nPairsFut = scala.concurrent.Future(
-        nPairsPlan.collect().map(r => missing(r.getInt(0)) -> r.getLong(1))
-          .toMap
-      )(Learner.batchEc)
-      // labeled-pair coverage: both ends share a cap-surviving key —
-      // joins touch only the labeled-record slice, never the corpus.
-      // The cap-survivor lookup is a DOUBLE BROADCAST semi-join
-      // (guide §3.2 shape): the labeled slice's distinct keys prune
-      // `surviving` map-side (no sort, no exchange of the big table),
-      // and the surviving subset — bounded by the labeled key count —
-      // broadcasts back against the labeled incidence rows.
-      val labKeys = keyedRows(labRecSigs, base, missing, Nil).distinct()
-      val survKeys = surviving.select(keyCols.map(col): _*)
-        .join(broadcast(labKeys), keyCols, "left_semi")
-      val labSigs = keyedRows(labRecSigs, base, missing, Seq(col(idCol)))
-        .join(broadcast(survKeys), keyCols, "left_semi")
-      val l = labSigs.select((col(idCol).as("id_l") +: keyCols.map(col)): _*)
-      val r = labSigs.select((col(idCol).as("id_r") +: keyCols.map(col)): _*)
-      val covRows = labelsCached
-        .join(l, "id_l")
-        .join(r, ("id_r" +: keyCols))
-        .select("_x", "id_l", "id_r", "label").distinct()
-        .groupBy(col("_x"))
-        .agg(
-          coalesce(sum(when(col("label") === 1, 1L)), lit(0L)).as("pos"),
-          coalesce(sum(when(col("label") === 0, 1L)), lit(0L)).as("neg"))
-        .collect().map(r => missing(r.getInt(0)) ->
-          ((r.getLong(1), r.getLong(2)))).toMap
-      val nPairsRows = scala.concurrent.Await.result(nPairsFut,
-        scala.concurrent.duration.Duration.Inf)
-      surviving.unpersist()
-      val found = missing.flatMap { x =>
-        nPairsRows.get(x).map { n =>
-          val (pos, neg) = covRows.getOrElse(x, (0L, 0L))
-          x -> ConjStats(base :+ x, n, pos, neg,
-            1.0 - n / math.max(nComparisons, 1.0))
-        }
-      }.toMap
-      missing.foreach { x =>
-        val s = found.getOrElse(x,
-          ConjStats(base :+ x, 0L, 0L, 0L, 1.0))
-        cache.put((base :+ x).sorted, s)
-      }
-      log(s"scored ${missing.size} extensions of [${base.mkString("&")}] " +
-        s"in ${math.round((System.nanoTime() - t0) / 1e8) / 10.0} s")
-    }
-    finally missing.foreach { x => // release claims even on failure —
-      // an un-counted latch would hang every waiter forever
-      Option(inflight.remove((base :+ x).sorted)).foreach(_.countDown())
-    }
-    awaited.foreach(_._2.await())
-    // a winner that failed leaves its key uncached — reclaim and
-    // recompute locally (the winner's own exception is already
-    // propagating up its chain)
-    val orphaned = awaited.map(_._1)
-      .filterNot(x => cache.containsKey((base :+ x).sorted))
-    if (orphaned.nonEmpty) scoreBatch(base, orphaned.toSeq)
-    // return the CALLER's path order, not whichever chain populated the
-    // cache first: stats live under the sorted key, but the conjunction
-    // Seq a chain sees must be its own `base :+ x` — otherwise two
-    // chains converging on one scheme set would hand out the first
-    // computer's ordering, making the learned list depend on chain
-    // completion order under [[learnFrom]]'s parallelism
-    exts.map { x =>
-      val s = cache.get((base :+ x).sorted)
-      x -> s.copy(conjunction = base :+ x)
-    }.toMap
+    scoreAll(exts.map(base :+ _))
+    exts.map(x => x -> cache((base :+ x).sorted).copy(conjunction = base :+ x)).toMap
   }
 
   /** Single-conjunction scoring (tests / spot checks). */
@@ -329,36 +293,47 @@ final class Learner(
     s.positives > 0 && s.rr < 1.0 && s.nPairs > 1 &&
       nGramCount(s.conjunction) <= 1
 
-  /** optimizers.py:73-99 `get_best` for one seed scheme, reusing the
-    * batched singles map. */
-  private def getBestFrom(seed: String, singles: Map[String, ConjStats]): Seq[ConjStats] = {
-    val dp = mutable.ArrayBuffer.empty[ConjStats]
-    val s0 = singles(seed)
-    if (s0.positives == 0 || s0.rr < seedRrCut) return Nil
-    dp += s0
-    var n = 1
-    var done = false
-    while (n < k && !done) {
-      val base = dp(n - 1).conjunction
-      val extNames = schemes.map(_.name)
-        .filterNot(base.contains)
-        .filter(x => nGramCount(base :+ x) <= 1) // prune pre-score; same kept set
-      val candidates = scoreBatch(base, extNames).values.filter(keepIf)
-      if (candidates.isEmpty) done = true
-      else {
-        dp += candidates.maxBy(_.key)
-        n += 1
+  /** The schemes `base` may be extended with — pruned pre-score to
+    * conjunctions with ≤ 1 n-gram scheme (same kept set as `_keep_if`). */
+  private def extensions(base: Seq[String]): Seq[String] =
+    schemes.map(_.name)
+      .filterNot(base.contains)
+      .filter(x => nGramCount(base :+ x) <= 1)
+
+  /** optimizers.py:73-99 `get_best` for every seed in `seeds`, run
+    * BREADTH-FIRST: each depth first scores the candidates of every
+    * live chain in one [[scoreAll]] batch, then each chain takes its
+    * best `_keep_if` extension from the memo (the same `maxBy` over the
+    * same per-base map as a per-seed DP, so ties resolve identically).
+    * A chain with no surviving candidate stops; seeds failing the seed
+    * cut yield no chain. Chains come back in seed order.
+    */
+  private def dpChains(seeds: Seq[String],
+                       singles: Map[String, ConjStats]): Seq[Seq[ConjStats]] = {
+    val chains = seeds.map(singles)
+      .filter(s0 => s0.positives > 0 && s0.rr >= seedRrCut)
+      .map(s0 => mutable.ArrayBuffer(s0))
+    var live = chains
+    var depth = 1
+    while (depth < k && live.nonEmpty) {
+      scoreAll(live.flatMap { c =>
+        val base = c.last.conjunction
+        extensions(base).map(base :+ _)
+      })
+      live = live.filter { c =>
+        val base = c.last.conjunction
+        val candidates = scoreBatch(base, extensions(base)).values.filter(keepIf)
+        if (candidates.nonEmpty) c += candidates.maxBy(_.key)
+        candidates.nonEmpty
       }
+      depth += 1
     }
-    dp.toSeq
+    chains.map(_.toSeq)
   }
 
   def getBest(seed: String): Seq[ConjStats] =
-    getBestFrom(seed, scoreBatch(Nil, schemes.map(_.name)))
+    dpChains(Seq(seed), scoreBatch(Nil, schemes.map(_.name))).flatten
 
-  /** learner.py:51-67 `conjunctions_list`: DP from every seed, flatten,
-    * dedupe, sort desc by (rr, positives, −negatives).
-    */
   /** The min_rr refusal threshold the budget loop will apply —
     * `1 − maxCompare / C(n,2)` over the SAME corpus the stats are
     * computed on ([[graft.pipeline.Dedupe.applicableConjunctions]],
@@ -373,10 +348,9 @@ final class Learner(
     * pair-per-positive cost, which is exactly where the best-first
     * nCovered budget bites — while coverage itself is safe regardless,
     * because the admitted seed (applied later in the same prefix)
-    * blocks a SUPERSET of every refinement's pairs. Each skipped
-    * below-cutoff seed saves k−1 corpus-scale stats batches; skipped
-    * seeds keep their depth-1 stats in the learned list, so the budget
-    * loop still sees (and refuses) them.
+    * blocks a SUPERSET of every refinement's pairs. Skipped seeds
+    * widen no DP batch; they keep their depth-1 stats in the learned
+    * list, so the budget loop still sees (and refuses) them.
     *
     * What the skip assumes — and what guards it: rr is MONOTONE under
     * refinement (`seed ∧ x` blocks a subset of the seed's pairs, so
@@ -404,10 +378,10 @@ final class Learner(
 
   /** Distinct labeled POSITIVE pairs covered by ANY of `conjs` (both
     * ends share a cap-surviving compound key of some conjunction) —
-    * the union counterpart of [[scoreBatch]]'s per-conjunction
-    * coverage arm, same scale shape: one map-only incidence pass over
-    * each cached signature table, one grouped count for the
-    * cap-surviving blocks, coverage joins on the labeled slice only.
+    * the union counterpart of [[scoreAll]]'s per-conjunction coverage,
+    * same helpers and scale shape: one map-only incidence pass over
+    * the cached signature table, one grouped count for the
+    * cap-surviving blocks, and [[coverage]] on the labeled positives.
     * Feeds [[learn]]'s escalation guard; oracle-checked as
     * q60_coverage_guard.
     */
@@ -416,36 +390,16 @@ final class Learner(
     import spark.implicits._
     if (conjs.isEmpty)
       return Seq.empty[(String, String)].toDF("id_l", "id_r")
-    val arr = array(conjs.zipWithIndex.map { case (c, i) =>
-      struct(lit(i).as("_x"), combosCol(c).as("_ks")) }: _*)
-    def rows(sigs: DataFrame, keep: Seq[Column]) = sigs
-      .select(keep :+ explode(arr).as("_e"): _*)
-      .select((keep :+ col("_e._x").as("_x")) :+
-        explode(col("_e._ks")).as("sigh"): _*)
-    val keyCols = Seq("_x", "sigh")
-    val surviving = rows(corpusSigs, Nil)
-      .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("_n"))
-      .filter(col("_n") > 1 && col("_n") <= maxBlockSize)
-    // same double-broadcast semi shape as [[scoreBatch]]'s coverage arm:
-    // prune the corpus-scale survivor table map-side with the labeled
-    // slice's distinct keys, then broadcast the (labeled-key-bounded)
-    // survivor subset back — no sort or exchange of the big table
-    val labKeys = rows(labRecSigs, Nil).distinct()
-    val survKeys = surviving.select(keyCols.map(col): _*)
-      .join(broadcast(labKeys), keyCols, "left_semi")
-    val labSigs = rows(labRecSigs, Seq(col(idCol)))
-      .join(broadcast(survKeys), keyCols, "left_semi")
-    val l = labSigs.select(col(idCol).as("id_l") +: keyCols.map(col): _*)
-    val r = labSigs.select(col(idCol).as("id_r") +: keyCols.map(col): _*)
-    labelsCached.filter(col("label") === 1)
-      .join(l, "id_l")
-      .join(r, "id_r" +: keyCols)
+    coverage(conjs, statsPlan(conjs), labelsCached.filter(col("label") === 1))
       .select("id_l", "id_r").distinct()
   }
 
   private[graft] def coveredPositives(conjs: Seq[Seq[String]]): Long =
     coveredPairs(conjs).count()
 
+  /** learner.py:51-67 `conjunctions_list`: DP from every seed, flatten,
+    * dedupe, sort desc by (rr, positives, −negatives).
+    */
   def learn(): Seq[ConjStats] = {
     val singles = scoreBatch(Nil, schemes.map(_.name))
     // refine only the seeds the budget math says can matter (see
@@ -485,39 +439,18 @@ final class Learner(
 
   /** DP from an explicit seed set (package-private so the seed-budget
     * A/B tool and specs can compare selection policies on one shared
-    * stats cache).
-    *
-    * Seed chains run on `dpParallelism` driver threads: each seed's DP
-    * is sequential in DEPTH (depth n+1 extends depth n's argmax), but
-    * different seeds' chains are independent, and at bench scale each
-    * stats batch is barrier-bound (sub-second tasks behind a driver
-    * collect), so overlapping the chains hides the job-scheduling
-    * latency that otherwise dominates the learner stage. Spark job
-    * submission is thread-safe; the stats cache is concurrent; results
-    * are awaited IN SEED ORDER and both `distinctBy` (keeps first) and
-    * `sortBy` (stable) preserve it, so the learned list is bit-identical
-    * to the sequential one at any parallelism. */
+    * stats cache): the breadth-first [[dpChains]] over `extendSeeds` —
+    * one stats batch per depth for all of them together — plus the
+    * other passing seeds at depth 1. Chains are flattened in seed
+    * order and both `distinctBy` (keeps first) and `sortBy` (stable)
+    * preserve it, so the list equals the per-seed DP's. */
   private[graft] def learnFrom(extendSeeds: Seq[String],
                                singles: Map[String, ConjStats]): Seq[ConjStats] = {
     val passing = schemes.map(_.name).filter { s =>
       val st = singles(s); st.positives > 0 && st.rr >= seedRrCut
     }
     val rest = passing.filterNot(extendSeeds.contains)
-    val par = math.max(1, math.min(dpParallelism, extendSeeds.size))
-    val chains: Seq[Seq[ConjStats]] =
-      if (par <= 1) extendSeeds.map(s => getBestFrom(s, singles))
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        try Await.result(
-          Future.sequence(extendSeeds.map(s =>
-            Future(getBestFrom(s, singles)))), Duration.Inf)
-        finally pool.shutdown()
-      }
-    (chains.flatten ++ rest.map(singles))
+    (dpChains(extendSeeds, singles).flatten ++ rest.map(singles))
       .distinctBy(_.conjunction.sorted)
       .sortBy(_.key)(Ordering[(Double, Long, Long)].reverse)
   }
@@ -532,29 +465,14 @@ final class Learner(
 }
 
 object Learner {
-  /** Shared pool for the per-batch concurrent n_pairs collect — daemon
-    * threads so a crashed driver never hangs on pool shutdown; sized
-    * 2× the chain default (each chain holds at most one in-flight
-    * batch, each batch at most one future). */
-  private[block] val batchEc: scala.concurrent.ExecutionContext =
+  /** Daemon pool for the pipeline's cache-prewarm overlap
+    * ([[graft.pipeline.Dedupe.run]]) — daemon threads so a crashed
+    * driver never hangs on pool shutdown. */
+  private[graft] val prewarmEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "learner-batch-collect")
+        val t = new Thread(r, "learner-prewarm")
         t.setDaemon(true)
         t
       }))
-
-  /** Same pool, exposed for the pipeline's cache-prewarm overlap
-    * ([[graft.pipeline.Dedupe.run]]). */
-  private[graft] def prewarmEc: scala.concurrent.ExecutionContext = batchEc
-
-  /** Concurrent seed DP chains (an execution knob, NOT part of the
-    * learned-output semantics — the result is bit-identical at any
-    * value, so it deliberately stays OUT of the `conjunctions` stage
-    * identity). 4 overlaps enough collect barriers to hide scheduling
-    * latency without stacking 4 corpus-scale DISK_ONLY block tables of
-    * doubtful co-residency on the executor spill volume; 8 measured NO
-    * faster at sf0.1 (72.9 s vs 74.5 s for the conjunctions stage) —
-    * past 4 chains the batches contend for cores, not barriers. */
-  final val DefaultDpParallelism: Int = 4
 }

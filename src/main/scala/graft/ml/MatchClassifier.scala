@@ -5,14 +5,17 @@ import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressio
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Match classifier (reference M2/M3: sklearn RandomForest behind a
   * FastAPI HTTP hop, oagdedupe fastapi/fapi.py:161-184 + orm.py:251-288
-  * 50k-row chunked HTTP scoring). Rebuilt on spark.ml — training is one
-  * job on the tiny labeled set, scoring is ONE distributed
-  * `model.transform` pass with no chunking and no HTTP hops.
+  * 50k-row chunked HTTP scoring). Rebuilt on spark.ml — training runs
+  * over a PINNED copy of the tiny labeled set (one job per L-BFGS
+  * iteration or tree level, plus the summary passes), scoring is ONE
+  * distributed `model.transform` pass with no chunking and no HTTP
+  * hops.
   *
   * Two algorithms behind the same seam: [[Logistic]] (the north star
   * names logistic regression) and [[RandomForest]] (the reference's
@@ -24,11 +27,25 @@ object MatchClassifier {
   val Logistic = "logistic"
   val RandomForest = "random_forest"
 
-  /** Train on labeled pairs carrying feature columns + `label`. */
+  /** Train on labeled pairs carrying feature columns + `label`.
+    *
+    * The input is featurized ONCE: `featureCols :+ "label"` is pinned
+    * with one eager `localCheckpoint()` and the fit reads the pin.
+    * spark.ml's fit makes several passes over its input (class counts,
+    * feature summary, the instance RDD, the training summary), and on
+    * an unpinned plan each pass re-runs the whole upstream
+    * featurization. The pin is released when `train` returns, so the
+    * model's lazily computed training `summary` metrics (which re-read
+    * the training frame) fail afterwards — score with [[score]]
+    * instead.
+    */
   def train(labeledFeatures: DataFrame, featureCols: Seq[String],
             algo: String = Logistic): Transformer = {
-    val assembled = assemble(labeledFeatures, featureCols)
-    algo match {
+    val pinned = labeledFeatures
+      .select((featureCols :+ "label").map(col): _*)
+      .localCheckpoint()
+    val assembled = assemble(pinned, featureCols)
+    try algo match {
       case Logistic =>
         new LogisticRegression()
           .setMaxIter(100)
@@ -46,6 +63,10 @@ object MatchClassifier {
           .setFeaturesCol("features")
           .fit(assembled)
       case a => throw new IllegalArgumentException(s"unknown classifier $a")
+    }
+    finally pinned.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
     }
   }
 

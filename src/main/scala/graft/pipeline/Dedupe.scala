@@ -52,11 +52,7 @@ object Dedupe {
       // the blocking learner may use, and which (attr, metric)
       // similarity columns the classifier sees
       blockingAttrs: Seq[String] = Normalize.blockingAttributes,
-      features: Seq[Distances.AttrSim] = Distances.defaultPlan,
-      // concurrent learner seed-DP chains — an execution knob (the
-      // learned list is bit-identical at any value), so it is NOT part
-      // of the conjunctions stage identity
-      dpParallelism: Int = Learner.DefaultDpParallelism)
+      features: Seq[Distances.AttrSim] = Distances.defaultPlan)
 
   /** min_rr / max_compare stop condition (reference
     * db/postgres/blocking.py:74-86): with n records the full-data
@@ -220,7 +216,7 @@ object Dedupe {
       Some(idConj)) {
       val learner = new Learner(records, labels, cfg.blockingAttrs,
         cfg.k, cfg.seedRrCut, cfg.maxBlockSize,
-        maxCompare = cfg.maxCompare, dpParallelism = cfg.dpParallelism)
+        maxCompare = cfg.maxCompare)
       val learned = learner.learn()
       learner.unpersist()
       learned.toDF()

@@ -146,7 +146,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
     val learner = new graft.block.Learner(recs, labels,
       graft.normalize.Normalize.blockingAttributes)
     val full = learner.statsPlan(
-      Seq("first_nchars_4_head_text"), Seq("acronym_tool_set"))
+      Seq(Seq("first_nchars_4_head_text", "acronym_tool_set")))
       .queryExecution.executedPlan.toString
     learner.unpersist()
     // audit only the batch plan ABOVE the cached signature table — the

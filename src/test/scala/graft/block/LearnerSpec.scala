@@ -88,18 +88,75 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
       .forall(_.conjunction.head != refused))
   }
 
-  test("parallel seed DP chains produce the bit-identical learned list " +
-    "(dpParallelism is an execution knob, not a semantic one)") {
-    val sequential = new Learner(train, labels, Seq("head_text", "role_seq"),
-      k = 3, seedRrCut = 0.0, maxBlockSize = 100, dpParallelism = 1).learn()
-    val parallel = new Learner(train, labels, Seq("head_text", "role_seq"),
-      k = 3, seedRrCut = 0.0, maxBlockSize = 100, dpParallelism = 4).learn()
-    // exact element-wise equality INCLUDING order — stats are a pure
-    // function of the data, chains are awaited in seed order, and
-    // distinctBy/sortBy are order-preserving/stable, so ties must land
-    // identically at any parallelism
-    assert(parallel == sequential)
-    assert(parallel.nonEmpty)
+  private def twoAttrLearner() =
+    new Learner(train, labels, Seq("head_text", "role_seq"),
+      k = 3, seedRrCut = 0.0, maxBlockSize = 100)
+
+  test("breadth-first learn() equals the per-seed DP") {
+    val l = twoAttrLearner()
+    val singles = l.scoreBatch(Nil, l.schemes.map(_.name))
+    val seeds = l.refinableSeeds(singles)
+    val rest = l.schemes.map(_.name)
+      .filter(s => singles(s).positives > 0 && !seeds.contains(s))
+    // every seed's chain on its OWN learner: one batch per depth per
+    // seed, no memo shared across seeds — the per-seed reference DP
+    val chains = seeds.map { s =>
+      val fresh = twoAttrLearner()
+      try fresh.getBest(s) finally fresh.unpersist()
+    }
+    val perSeed = (chains.flatten ++ rest.map(singles))
+      .distinctBy(_.conjunction.sorted)
+      .sortBy(_.key)(Ordering[(Double, Long, Long)].reverse)
+    val learned = l.learn()
+    l.unpersist()
+    assert(seeds.size >= 3 && chains.exists(_.size > 1))
+    // exact element-wise equality INCLUDING order and each
+    // conjunction's scheme order
+    assert(learned == perSeed)
+  }
+
+  test("one stats batch per DP depth") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val l = twoAttrLearner()
+    // distinct SQL executions whose jobs ran inside learn(), told apart
+    // by a local property; a sentinel job after learn() proves the
+    // (asynchronous) listener bus has delivered every earlier job
+    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          p.getProperty("graft.spec") match {
+            case "learn" =>
+              Option(p.getProperty("spark.sql.execution.id")).foreach(execs.add)
+            case "sentinel" => drained.countDown()
+            case _ =>
+          }
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.spec", "learn")
+      l.learn()
+      sc.setLocalProperty("graft.spec", "sentinel")
+      spark.range(1).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty("graft.spec", null)
+      sc.removeSparkListener(listener)
+    }
+    // premise: several refined seeds and no coverage escalation (every
+    // passing seed is refinable) — all read from the memo, no new jobs
+    val singles = l.scoreBatch(Nil, l.schemes.map(_.name))
+    val seeds = l.refinableSeeds(singles)
+    assert(seeds.size >= 3)
+    assert(seeds.size == l.schemes.count(s => singles(s.name).positives > 0))
+    l.unpersist()
+    // k = 3 depths (singles, depth 1, depth 2), one action each, plus
+    // the one corpus count behind rr; a per-seed DP runs 1 + 2·seeds
+    // batches
+    assert(execs.size <= 3 + 1, s"${execs.size} SQL executions in learn()")
   }
 
   test("coverage-gap escalation: refinements of budget-refused seeds " +
@@ -138,8 +195,6 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     // holds multi-scheme refinements and covers BOTH labeled positives
     assert(admitted.nonEmpty && admitted.forall(_.conjunction.size > 1))
     assert(l.coveredPositives(admitted.map(_.conjunction)) == 2L)
-    // no stale in-flight claims leak out of a learn() call
-    assert(l.inflight.isEmpty)
   }
 
   test("ngram constraint: conjunctions never contain 2 ngram schemes") {

@@ -44,6 +44,19 @@ class MatchClassifierSpec extends AnyFunSuite with SparkSuite {
     assert(hi > 0.5 && lo < 0.5 && hi > lo)
   }
 
+  test("train reads each input row exactly once and releases its pin") {
+    val sc = spark.sparkContext
+    Seq(MatchClassifier.Logistic, MatchClassifier.RandomForest).foreach { algo =>
+      val reads = sc.longAccumulator(s"reads-$algo")
+      val tap = udf { (x: Double) => reads.add(1L); x }.asNondeterministic()
+      val input = labeled.withColumn("f1", tap(col("f1")))
+      val before = sc.getPersistentRDDs.keySet
+      MatchClassifier.train(input, cols, algo)
+      assert(reads.value == 6L, s"$algo read the 6 input rows ${reads.value} times")
+      assert(sc.getPersistentRDDs.keySet == before, s"$algo left a pinned RDD")
+    }
+  }
+
   test("random_forest trains, persists and reloads behind the same seam") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-model-rf").toString + "/model"
