@@ -1,14 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.block.{Blocking, BoundScheme, FindNgrams, FirstNChars}
 import graft.normalize.Normalize
 import graft.sim.Distances
 import graft.synth.Transcripts
 
 /** Benchmark main (driver contract): runs on SPARK_GRAFT_SF_DIR at
-  * local[SPARK_GRAFT_CPUS], prints ONE JSON line.
+  * local[N], N = [[GraftSession.cores]], prints ONE JSON line.
   *
   * Headline metric (BASELINE.json): candidate-pairs scored per second.
   * The scored workload is the full similarity vector (3×Jaro-Winkler +
@@ -25,7 +26,7 @@ object Bench {
   /** Quiescent PER-THREAD [[CpuControl.measure]] rate on the bench box
     * (xorshift steps/sec/thread), pinned from
     * `sbt "runMain graft.CpuControl"` at loadavg ≤ 0.5 — the ratio
-    * denominator is `this × ctrlThreads`, so the control scales with
+    * denominator is `this × cpus`, so the control scales with
     * whatever core count the bench runs at (a 8-core scaling-sweep run
     * must not be graded against a 32-thread reference). Calibration
     * 2026-08-17 at 32 threads: quiescent max-of-3 windows ranged
@@ -40,21 +41,52 @@ object Bench {
     */
   final val QuiescentCtrlOpsPerThread: Double = 1.25e10 / 32
 
+  /** The fixed blocking the scoring measurements read: prefix-8 and
+    * ngram-6 on `head_text`, each under the default block-size cap. */
+  private[graft] val FixedConjunctions: Seq[(String, Seq[BoundScheme])] = Seq(
+    "prefix8" -> Seq(BoundScheme(FirstNChars(8), "head_text")),
+    "ngram6" -> Seq(BoundScheme(FindNgrams(6), "head_text")))
+
+  /** prefix-8 ∪ ngram-6 candidate pairs over normalized `records`. */
+  def fixedPairs(records: DataFrame): DataFrame =
+    Blocking.unionPairs(FixedConjunctions.map { case (_, conj) =>
+      Blocking.candidatePairs(records, conj, "conv_id",
+        Blocking.DefaultMaxBlockSize)
+    })
+
+  /** The table the scoring kernel reads: `pairs` hydrated with
+    * [[Distances.featureAttrs]], repartitioned to `parts` and persisted
+    * DISK_ONLY (lazy — the caller's first action fills it).
+    *
+    * The explicit width keeps AQE's size-based coalescing of the join
+    * output from deciding the scoring parallelism: a coarse result makes
+    * the variable-cost similarity pass straggler-bound. DISK_ONLY
+    * columnar cache, not localCheckpoint: the full hydrated pair set is
+    * ~2 GB of strings per million pairs — at 15M pairs an in-memory
+    * checkpoint blows the 8 GB bench heap, while the columnar cache
+    * streams compressed batches whose decode is distributed work that
+    * scales with the cores under test. */
+  def hydrateForScoring(pairs: DataFrame, records: DataFrame,
+                        parts: Int): DataFrame =
+    Distances.hydrate(pairs, records, Distances.featureAttrs)
+      .repartition(parts)
+      .persist(StorageLevel.DISK_ONLY)
+
+  /** Rule-scores hydrated pairs; returns (pairs scored, score sum). The
+    * aggregate forces every similarity column — a bare count() lets
+    * Catalyst prune the feature expressions away. */
+  def evalScored(h: DataFrame): (Long, Double) = {
+    val r = Distances.ruleScore(Distances.featuresFromHydrated(h))
+      .agg(count(lit(1)).as("n"),
+        coalesce(sum(col("score")), lit(0.0)).as("s"))
+      .head()
+    (r.getLong(0), r.getDouble(1))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // 4 tasks per core: similarity cost varies with text length, so
-    // 1-task-per-core waves are straggler-bound; finer tasks let the
-    // scheduler balance (AQE coalesces the small ones back)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession.local()
 
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -75,20 +107,16 @@ object Bench {
     //      pass; if either is >15% below the quiescent reference the
     //      scoring pass is RETRIED once (best-of-three) and the
     //      artifact self-reports epoch_degraded=true. ----
-    val ctrlThreads = cpus.toInt
-    val ctrlBefore = CpuControl.measure(ctrlThreads)
+    val ctrlBefore = CpuControl.measure(cpus)
 
     // ---- phase 1: ingest + normalize (cached once, like a real
     //      pipeline run) ----
-    // Shuffle width is PER-PHASE: the 4-tasks-per-core width set above
-    // suits the straggler-prone scoring kernel (similarity cost varies
-    // with text length; finer tasks rebalance), but normalize/blocking
-    // are uniform shuffle-bound stages that pay 4× width as pure task +
-    // spill-file overhead — same-epoch A/B on this box measured
-    // blocking 16–31 s at 1× vs 116 s at 4× under I/O-throttled
-    // co-tenancy, and ~30 vs ~40 s quiescent. Run them at 1×cores,
-    // restore 4× from hydration on.
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    // Shuffle width is PER-PHASE: normalize/blocking are uniform
+    // shuffle-bound stages that run at the session's 1×cores width (4×
+    // width costs them pure task + spill-file overhead — same-epoch A/B
+    // on this box measured blocking 16–31 s at 1× vs 116 s at 4× under
+    // I/O-throttled co-tenancy, and ~30 vs ~40 s quiescent); hydration
+    // and scoring run at 4 tasks per core (see below).
     val (records, tNormalize) = time {
       val r = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
         .cache()
@@ -97,21 +125,17 @@ object Bench {
     }
 
     // ---- phase 2: blocking (shuffle-bound) ----
-    val prefix8 = Seq(BoundScheme(FirstNChars(8), "head_text"))
-    val ngram6 = Seq(BoundScheme(FindNgrams(6), "head_text"))
     val (allPairs, tBlocking) = time {
-      val p = Blocking.unionPairs(Seq(
-        Blocking.candidatePairs(records, prefix8, "conv_id",
-          Blocking.DefaultMaxBlockSize),
-        Blocking.candidatePairs(records, ngram6, "conv_id",
-          Blocking.DefaultMaxBlockSize)))
+      val p = fixedPairs(records)
         .localCheckpoint() // materialize: scoring timed in isolation
       p.count()
       p
     }
     val nPairs = allPairs.count()
-    // back to scoring width (see phase-1 note)
-    spark.conf.set("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
+    // scoring width: 4 tasks per core — similarity cost varies with
+    // text length, so 1-task-per-core waves are straggler-bound; finer
+    // tasks let the scheduler balance (AQE coalesces the small ones back)
+    spark.conf.set("spark.sql.shuffle.partitions", (cpus * 4).toString)
     // deterministic 1-in-k sample (SPARK_GRAFT_SCORE_DIVISOR, default
     // 1 = score ALL pairs): with the bit-parallel Levenshtein the full
     // 15M-pair pass is ~40 s at 32 cores, and measuring the whole set
@@ -130,31 +154,9 @@ object Bench {
     //      reported separately — at cluster scale this is the
     //      co-partitioned pair⋈record join) ----
     val (hydrated, tHydration) = time {
-      // explicit 4-per-core width for the materialized table the
-      // scoring kernel reads: AQE's size-based coalescing of the join
-      // output otherwise decides the scoring parallelism, and a coarse
-      // result makes the variable-cost similarity pass
-      // straggler-bound. DISK_ONLY columnar cache, not localCheckpoint:
-      // the FULL hydrated pair set is ~2 GB of strings per million
-      // pairs — at 15M pairs an in-memory checkpoint blows the 8 GB
-      // bench heap, while the columnar cache streams compressed
-      // batches whose decode is distributed work that scales with the
-      // cores under test
-      val h = Distances.hydrate(pairs, records, Distances.featureAttrs)
-        .repartition(cpus.toInt * 4)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val h = hydrateForScoring(pairs, records, cpus * 4)
       h.count()
       h
-    }
-
-    // force full evaluation of the similarity columns — a bare count()
-    // lets Catalyst prune every feature expression away
-    def evalScored(h: org.apache.spark.sql.DataFrame): (Long, Double) = {
-      val r = Distances.ruleScore(Distances.featuresFromHydrated(h))
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(col("score")), lit(0.0)).as("s"))
-        .head()
-      (r.getLong(0), r.getDouble(1))
     }
 
     // ---- warmup: codegen + JIT on a small slice of the same plan ----
@@ -214,7 +216,7 @@ object Bench {
 
     // second headline pass (see above)
     val (_, tScoring2) = stealAround(2) { time { evalScored(hydrated) } }
-    val ctrlAfter = CpuControl.measure(ctrlThreads)
+    val ctrlAfter = CpuControl.measure(cpus)
     // quiescent reference: this box, local[32]-epoch with loadavg ≤ 2,
     // re-pinnable via `sbt "runMain graft.CpuControl"` (keep the
     // constant in sync after any hardware change)
@@ -225,12 +227,12 @@ object Bench {
     // moment and the headline stands un-degraded (transient dips right
     // after a Spark action — GC, executor-pool wind-down — must not
     // stamp a quiescent artifact as a degraded epoch)
-    val quiescentRef = QuiescentCtrlOpsPerThread * ctrlThreads
+    val quiescentRef = QuiescentCtrlOpsPerThread * cpus
     val retryNeeded =
       math.min(ctrlBefore, ctrlAfter) / quiescentRef < 0.85
     val (tScoring3, ctrlRetry) = if (retryNeeded) {
       val (_, t3) = stealAround(3) { time { evalScored(hydrated) } }
-      (t3, CpuControl.measure(ctrlThreads))
+      (t3, CpuControl.measure(cpus))
     } else (-1.0, -1.0)
     val ctrlBest = Seq(ctrlBefore, ctrlAfter, ctrlRetry).max
     val ctrlRatio = ctrlBest / quiescentRef
@@ -267,7 +269,7 @@ object Bench {
     // it as pure task/spill-file overhead (measured +80% e2e wall at
     // 128 vs 32) — run the pipeline at RunDedupe's 1×cores width
     val runE2e = !sys.env.get("SPARK_GRAFT_E2E").contains("0")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
     val (_, tE2eLearned) =
       if (runE2e) time { graft.pipeline.Dedupe.run(spark, sfDir).clusters.count() }
       else ((), -1.0)

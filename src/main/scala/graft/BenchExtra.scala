@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.block.{Blocking, BoundScheme, FindNgrams, FirstNChars}
+import graft.block.Blocking
 import graft.normalize.Normalize
 import graft.sim.Distances
 import graft.synth.Transcripts
@@ -12,10 +12,11 @@ import graft.synth.Transcripts
   * graded artifact; this exists so OPTIMIZATION_r06.md can cite
   * stage-isolated numbers without touching the frozen harness.
   *
-  * Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.BenchExtra [sfDir]"            — bench stages
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.BenchExtra [sfDir] features"   — per-feature kernels
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.BenchExtra [sfDir] passes [k]" — long scoring region
+  * Usage (local[N], N = `SPARK_GRAFT_CPUS` or the machine's processor
+  * count; the round-6 figures are N = 32):
+  *   sbt "runMain graft.BenchExtra [sfDir]"            — bench stages
+  *   sbt "runMain graft.BenchExtra [sfDir] features"   — per-feature kernels
+  *   sbt "runMain graft.BenchExtra [sfDir] passes [k]" — long scoring region
   * Per-stage decomposition of `Dedupe.run`:
   *   python3 perfbench/run.py --workload dedupe_cold --trace 1
   */
@@ -23,16 +24,8 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val mode = if (args.length > 1) args(1) else "stages"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession.local()
 
     def time[T](label: String)(f: => T): T = {
       spark.sparkContext.setJobDescription(label)
@@ -44,6 +37,17 @@ object BenchExtra {
     }
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
+    // Bench's materialized scoring table, untimed, at `parts` partitions
+    def scoringTable(parts: Int): DataFrame = {
+      val records = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
+        .cache()
+      records.count()
+      val allPairs = Bench.fixedPairs(records).localCheckpoint()
+      spark.conf.set("spark.sql.shuffle.partitions", (cpus * 4).toString)
+      val h = Bench.hydrateForScoring(allPairs, records, parts)
+      h.count()
+      h
+    }
 
     if (mode == "passes") {
       // Long-region scaling measurement (guide §1.1/§1.3; VERDICT r05
@@ -61,39 +65,17 @@ object BenchExtra {
       val k = if (args.length > 2) args(2).toInt else 5
       val parts = sys.env.get("SPARK_GRAFT_EXTRA_PARTS").map(_.toInt)
         .getOrElse(cpus * 4)
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      val records = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
-        .cache()
-      records.count()
-      val prefix8 = Seq(BoundScheme(FirstNChars(8), "head_text"))
-      val ngram6 = Seq(BoundScheme(FindNgrams(6), "head_text"))
-      val allPairs = Blocking.unionPairs(Seq(
-        Blocking.candidatePairs(records, prefix8, "conv_id",
-          Blocking.DefaultMaxBlockSize),
-        Blocking.candidatePairs(records, ngram6, "conv_id",
-          Blocking.DefaultMaxBlockSize))).localCheckpoint()
-      val nPairs = allPairs.count()
-      spark.conf.set("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      val hydrated = Distances.hydrate(allPairs, records,
-        Distances.featureAttrs)
-        .repartition(parts)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      hydrated.count()
-      def evalScored(h: DataFrame): Unit = {
-        Distances.ruleScore(Distances.featuresFromHydrated(h))
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum(col("score")), lit(0.0)).as("s")).head()
-        ()
-      }
-      evalScored(hydrated.limit(10000)) // codegen + JIT warmup
-      evalScored(hydrated) // one full warm pass (page-cache + decode ramp)
+      val hydrated = scoringTable(parts)
+      val nPairs = hydrated.count()
+      Bench.evalScored(hydrated.limit(10000)) // codegen + JIT warmup
+      Bench.evalScored(hydrated) // one full warm pass (page-cache + decode ramp)
       val per = new Array[Double](k)
       spark.sparkContext.setJobDescription(s"scoring x$k region")
       val t0 = System.nanoTime()
       var i = 0
       while (i < k) {
         val p0 = System.nanoTime()
-        evalScored(hydrated)
+        Bench.evalScored(hydrated)
         per(i) = (System.nanoTime() - p0) / 1e9
         i += 1
       }
@@ -104,29 +86,19 @@ object BenchExtra {
         f"pairs_per_sec=${nPairs / perPass}%.0f " +
         s"per=[${per.map(p => f"$p%.2f").mkString(",")}]")
     } else if (mode == "stages") {
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
       val records = time("normalize (cache+count)") {
         val r = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
           .cache()
         r.count(); r
       }
-      val prefix8 = Seq(BoundScheme(FirstNChars(8), "head_text"))
-      val ngram6 = Seq(BoundScheme(FindNgrams(6), "head_text"))
-      val pairsPrefix = time("blocking prefix8 (noop)") {
-        val p = Blocking.candidatePairs(records, prefix8, "conv_id",
-          Blocking.DefaultMaxBlockSize)
-        noop(p); p
-      }
-      time("blocking ngram6 (noop)") {
-        noop(Blocking.candidatePairs(records, ngram6, "conv_id",
-          Blocking.DefaultMaxBlockSize))
+      Bench.FixedConjunctions.foreach { case (name, conj) =>
+        time(s"blocking $name (noop)") {
+          noop(Blocking.candidatePairs(records, conj, "conv_id",
+            Blocking.DefaultMaxBlockSize))
+        }
       }
       val allPairs = time("blocking union (localCheckpoint)") {
-        val p = Blocking.unionPairs(Seq(
-          Blocking.candidatePairs(records, prefix8, "conv_id",
-            Blocking.DefaultMaxBlockSize),
-          Blocking.candidatePairs(records, ngram6, "conv_id",
-            Blocking.DefaultMaxBlockSize))).localCheckpoint()
+        val p = Bench.fixedPairs(records).localCheckpoint()
         p.count(); p
       }
       spark.conf.set("spark.sql.shuffle.partitions", (cpus * 4).toString)
@@ -138,20 +110,12 @@ object BenchExtra {
           .repartition(cpus * 4))
       }
       val hydrated = time("hydration bench action (persist)") {
-        val h = Distances.hydrate(allPairs, records, Distances.featureAttrs)
-          .repartition(cpus * 4)
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        val h = Bench.hydrateForScoring(allPairs, records, cpus * 4)
         h.count(); h
       }
-      def evalScored(h: DataFrame): Unit = {
-        Distances.ruleScore(Distances.featuresFromHydrated(h))
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum(col("score")), lit(0.0)).as("s")).head()
-        ()
-      }
-      evalScored(hydrated.limit(10000)) // warmup
-      time("scoring pass1")(evalScored(hydrated))
-      time("scoring pass2")(evalScored(hydrated))
+      Bench.evalScored(hydrated.limit(10000)) // warmup
+      time("scoring pass1")(Bench.evalScored(hydrated))
+      time("scoring pass2")(Bench.evalScored(hydrated))
       // kernel-free baseline over the same cache: how much of a scoring
       // pass is columnar-cache scan/decode vs similarity CPU
       time("cache scan baseline (no kernel)") {
@@ -164,32 +128,8 @@ object BenchExtra {
     } else if (mode == "features") {
       // per-feature kernel attribution over the same DISK_ONLY cache the
       // bench scores (which feature owns the scoring seconds)
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      val records = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
-        .cache()
-      records.count()
-      val prefix8 = Seq(BoundScheme(FirstNChars(8), "head_text"))
-      val ngram6 = Seq(BoundScheme(FindNgrams(6), "head_text"))
-      val allPairs = Blocking.unionPairs(Seq(
-        Blocking.candidatePairs(records, prefix8, "conv_id",
-          Blocking.DefaultMaxBlockSize),
-        Blocking.candidatePairs(records, ngram6, "conv_id",
-          Blocking.DefaultMaxBlockSize))).localCheckpoint()
-      spark.conf.set("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      val hydrated = Distances.hydrate(allPairs, records,
-        Distances.featureAttrs)
-        .repartition(cpus * 4)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      hydrated.count()
-      import graft.sim.Similarity
-      val feats = Seq(
-        "jw_head" -> Similarity.jw(col("head_text_l"), col("head_text_r")),
-        "jw_role" -> Similarity.jw(col("role_seq_l"), col("role_seq_r")),
-        "jw_full" -> Similarity.jw(col("full_text_l"), col("full_text_r")),
-        "lev_full" -> Similarity.levSim(col("full_text_l"),
-          col("full_text_r")),
-        "jac_full" -> Similarity.tokenJaccard(col("full_text_l"),
-          col("full_text_r")))
+      val hydrated = scoringTable(cpus * 4)
+      val feats = Distances.defaultPlan.map(f => f.colName -> f.similarity)
       // warmup
       hydrated.limit(10000).agg(sum(feats.map(_._2).reduce(_ + _))).head()
       hydrated.agg(count(lit(1))).head()

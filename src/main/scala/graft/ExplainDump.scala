@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.block.{Blocking, BoundScheme, FindNgrams, FirstNChars}
+import org.apache.spark.sql.DataFrame
 import graft.normalize.Normalize
 import graft.sim.Distances
 import graft.synth.Transcripts
@@ -13,21 +11,18 @@ import graft.synth.Transcripts
   * PushedFilters — before and after each optimization).
   *
   * Usage: sbt "runMain graft.ExplainDump before [sfDir]"
+  *
+  * Runs at local[N], N = `SPARK_GRAFT_CPUS` or the machine's processor
+  * count, with Bench's 4×N scoring shuffle width; the committed r06
+  * dumps are N = 8 (hashpartitioning(…, 32)).
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val tag = if (args.nonEmpty) args(0) else "before"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession.local()
+    spark.conf.set("spark.sql.shuffle.partitions", (cpus * 4).toString)
     val outDir = java.nio.file.Paths.get("plans/r06")
     java.nio.file.Files.createDirectories(outDir)
 
@@ -46,19 +41,9 @@ object ExplainDump {
     val records = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
       .cache()
     records.count()
-    val prefix8 = Seq(BoundScheme(FirstNChars(8), "head_text"))
-    val ngram6 = Seq(BoundScheme(FindNgrams(6), "head_text"))
-    val allPairs = Blocking.unionPairs(Seq(
-      Blocking.candidatePairs(records, prefix8, "conv_id",
-        Blocking.DefaultMaxBlockSize),
-      Blocking.candidatePairs(records, ngram6, "conv_id",
-        Blocking.DefaultMaxBlockSize)))
-      .localCheckpoint()
-    dump("hydration",
-      Distances.hydrate(allPairs, records, Distances.featureAttrs)
-        .repartition(cpus.toInt * 4))
-    val hydrated = Distances.hydrate(allPairs, records, Distances.featureAttrs)
-      .localCheckpoint()
+    val allPairs = Bench.fixedPairs(records).localCheckpoint()
+    val hydrated = Bench.hydrateForScoring(allPairs, records, cpus * 4)
+    dump("hydration", hydrated)
     dump("scoring", Distances.ruleScore(
       Distances.featuresFromHydrated(hydrated)))
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.emb.EmbeddingOps
 
 /** spark-submit / sbt-runMain entry point for the PRODUCTION ANN path:
@@ -22,16 +21,7 @@ object RunAnn {
     val nCentroids = if (args.length > 1) args(1).toInt else 16
     val nprobe = if (args.length > 2) args(2).toInt else 4
     val (nQueries, k) = (8, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val t0 = System.nanoTime()
     val emb = EmbeddingOps.embeddings(spark, sfDir).cache()

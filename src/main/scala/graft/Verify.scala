@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,14 +20,7 @@ object Verify {
     // "pass wrong" against a table that doesn't read.
     var derivedDim: Option[Int] = None
     if (!sqlOnly) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local()
       // probe only when q32 is in scope: a --only subset without it
       // should not pay an embeddings read or warn about one failing
       if (only.forall(_.contains("q32_emb_lsh_pairs")))

@@ -79,8 +79,6 @@ final class Learner(
     maxCompare: Long = 1000000L) {
 
   val schemes: Seq[BoundScheme] = Schemes.forAttributes(attrs)
-  private val byName: Map[String, BoundScheme] =
-    schemes.map(b => b.name -> b).toMap
   // memoized conjunction stats, keyed by the SORTED scheme list
   private val cache = mutable.HashMap.empty[Seq[String], ConjStats]
 
@@ -454,9 +452,6 @@ final class Learner(
       .distinctBy(_.conjunction.sorted)
       .sortBy(_.key)(Ordering[(Double, Long, Long)].reverse)
   }
-
-  def boundConjunction(names: Seq[String]): Seq[BoundScheme] =
-    names.map(byName)
 
   def unpersist(): Unit = {
     corpusSigs.unpersist(); labelsCached.unpersist()

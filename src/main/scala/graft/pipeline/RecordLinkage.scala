@@ -70,18 +70,4 @@ object RecordLinkage {
         .otherwise(lit("right")).as("_type"))
     Result(pairs, scored, clusters)
   }
-
-  /** pairwise F1 vs the planted cross-table truth. */
-  def f1(spark: SparkSession, sfDir: String, scored: DataFrame,
-         threshold: Double = 0.8): (Double, Long, Long, Long) = {
-    val predicted = scored.filter(col("score") > threshold)
-      .select("id_l", "id_r").distinct().cache()
-    val truth = graft.block.Labels.truthPairs(spark, sfDir).cache()
-    val tp = predicted.join(truth, Seq("id_l", "id_r"), "left_semi").count()
-    val fp = predicted.count() - tp
-    val fn = truth.count() - tp
-    val p = if (tp + fp == 0) 0.0 else tp.toDouble / (tp + fp)
-    val r = if (tp + fn == 0) 0.0 else tp.toDouble / (tp + fn)
-    (if (p + r == 0) 0.0 else 2 * p * r / (p + r), tp, fp, fn)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Pair hydration + distance vectorization (reference J4 + M1:
@@ -76,12 +76,6 @@ object Distances {
     rSize <= BigInt(mb) * 1024 * 1024 && !pairsCrediblySmaller
   }
 
-  /** M1: per-attribute JW distance columns on hydrated pairs. */
-  def jwDistances(hydrated: DataFrame, attrs: Seq[String]): DataFrame =
-    attrs.foldLeft(hydrated) { (df, a) =>
-      df.withColumn(a, Similarity.jw(col(s"${a}_l"), col(s"${a}_r")))
-    }
-
   /** One configured similarity feature: `metric` over `attr`, emitted
     * as column `as` (defaults to `{metric}_{attr}` — the reference's
     * runtime-config attribute columns, settings.py:77 +
@@ -89,6 +83,10 @@ object Distances {
   final case class AttrSim(attr: String, metric: String,
                            as: Option[String] = None) {
     def colName: String = as.getOrElse(s"${metric}_$attr")
+
+    /** raw (unquantized) `metric` over hydrated `{attr}_l` / `{attr}_r`. */
+    def similarity: Column =
+      metricCol(metric, col(s"${attr}_l"), col(s"${attr}_r"))
   }
 
   /** Distance-metric menu (the pg_similarity family the reference
@@ -108,8 +106,7 @@ object Distances {
   /** full 17-metric menu (reference docs/source/userguide/distance.md). */
   val fullMenu: Seq[String] = metricMenu ++ alignmentMenu
 
-  def metricCol(metric: String, l: org.apache.spark.sql.Column,
-                r: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def metricCol(metric: String, l: Column, r: Column): Column =
     metric match {
       case "jw" => Similarity.jw(l, r)
       case "jaro" => Similarity.jaroSim(l, r)
@@ -173,12 +170,9 @@ object Distances {
     */
   def featuresFor(pairs: DataFrame, records: DataFrame,
                   plan: Seq[AttrSim],
-                  idCol: String = "conv_id"): DataFrame = {
-    val h = hydrate(pairs, records, plan.map(_.attr).distinct, idCol)
-    h.select((col("id_l") +: col("id_r") +: plan.map(f =>
-      q4(metricCol(f.metric, col(s"${f.attr}_l"), col(s"${f.attr}_r")))
-        .as(f.colName))): _*)
-  }
+                  idCol: String = "conv_id"): DataFrame =
+    featureColumns(
+      hydrate(pairs, records, plan.map(_.attr).distinct, idCol), plan)
 
   def features(pairs: DataFrame, records: DataFrame,
                idCol: String = "conv_id"): DataFrame =
@@ -186,24 +180,20 @@ object Distances {
 
   /** similarity kernel over already-hydrated pairs — map-only (no
     * shuffle), stays in one WholeStageCodegen pass. */
-  def featuresFromHydrated(h: DataFrame): DataFrame = {
-    // each feature quantized via floor(x·10⁴)/10⁴ — IEEE-exact in both
-    // engines (unlike decimal round(), whose half-tie handling differs
-    // between Spark and DuckDB), so identical raw doubles quantize
-    // identically
-    h.select(
-      col("id_l"), col("id_r"),
-      q4(Similarity.jw(col("head_text_l"), col("head_text_r"))).as("jw_head"),
-      q4(Similarity.jw(col("role_seq_l"), col("role_seq_r"))).as("jw_role"),
-      q4(Similarity.jw(col("full_text_l"), col("full_text_r"))).as("jw_full"),
-      q4(Similarity.levSim(col("full_text_l"), col("full_text_r")))
-        .as("lev_full"),
-      q4(Similarity.tokenJaccard(col("full_text_l"), col("full_text_r")))
-        .as("jac_full"))
-  }
+  def featuresFromHydrated(h: DataFrame): DataFrame =
+    featureColumns(h, defaultPlan)
+
+  /** `id_l`, `id_r` and one quantized similarity column per plan entry.
+    * Each feature is quantized via floor(x·10⁴)/10⁴ — IEEE-exact in both
+    * engines (unlike decimal round(), whose half-tie handling differs
+    * between Spark and DuckDB), so identical raw doubles quantize
+    * identically. */
+  private def featureColumns(h: DataFrame, plan: Seq[AttrSim]): DataFrame =
+    h.select((col("id_l") +: col("id_r") +:
+      plan.map(f => q4(f.similarity).as(f.colName))): _*)
 
   /** floor-quantization to 4 digits (exact double ops, engine-portable). */
-  def q4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def q4(c: Column): Column =
     floor(c * lit(10000.0)) / lit(10000.0)
 
   /** Deterministic rule score: mean of the feature vector — the
@@ -213,6 +203,5 @@ object Distances {
     */
   def ruleScore(featured: DataFrame): DataFrame =
     featured.withColumn("score",
-      q4((col("jw_head") + col("jw_role") + col("jw_full") +
-        col("lev_full") + col("jac_full")) / 5.0))
+      q4(featureCols.map(col).reduce(_ + _) / featureCols.size.toDouble))
 }

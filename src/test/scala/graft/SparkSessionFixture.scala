@@ -5,20 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for all suites (JVM-singleton). */
 object SparkSessionFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark 4.1's ChecksumCheckpointFileManager deadlocks the state
-      // store commit under rapid micro-batches (tasks park forever in
-      // ChecksumCheckpointFileManager.awaitResult while its worker
-      // threads sit idle) — observed in the TTL spec; the checksum is
-      // a corruption-detection layer, not a semantics one
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -10,13 +10,23 @@ class RecordLinkageSpec extends AnyFunSuite with SparkSuite {
 
   test("record-linkage mode links the planted cross-table truth at F1 >= 0.99") {
     val result = RecordLinkage.run(spark, sfDir)
-    val (f1, tp, fp, fn) = RecordLinkage.f1(spark, sfDir, result.scored)
+    val (f1, tp, fp, fn) = Dedupe.pairwiseF1(spark, sfDir, result.scored)
     info(s"RL f1=$f1 tp=$tp fp=$fp fn=$fn")
     assert(f1 >= 0.99, s"record-linkage F1 $f1 (tp=$tp fp=$fp fn=$fn)")
     // pairs must cross tables: id_l always from the c-corpus, id_r from d
     val bad = result.pairs.filter(!col("id_l").startsWith("c") ||
       !col("id_r").startsWith("d")).count()
     assert(bad == 0)
+  }
+
+  test("pairwiseF1 leaves the session's persistent RDDs as it found them") {
+    import spark.implicits._
+    val scored = Seq(("c10", "d10", 0.95), ("c11", "d12", 0.9),
+      ("c20", "d20", 0.1)).toDF("id_l", "id_r", "score")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (_, tp, fp, _) = Dedupe.pairwiseF1(spark, sfDir, scored)
+    assert(tp + fp == 2)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("RL clusters carry (cluster, id, _type) with cross-table membership") {
