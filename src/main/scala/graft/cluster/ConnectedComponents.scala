@@ -1,6 +1,7 @@
 package graft.cluster
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an edge DataFrame — replaces
@@ -22,7 +23,10 @@ import org.apache.spark.sql.functions._
   * iterative joins otherwise stack exponentially growing plans) and
   * convergence is detected by an order-insensitive (count, xor-of-hash)
   * fingerprint — one tiny agg per round, the "convergence checkpointed
-  * per superstep" demanded by the north rule.
+  * per superstep" demanded by the north rule. A superstep's checkpoint
+  * is released as soon as the next one is fingerprinted, so a run
+  * leaves only its final round (and, on the encoded path, its id
+  * dictionary) registered.
   */
 object ConnectedComponents {
 
@@ -69,10 +73,18 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     // LAZY checkpoints: every materialized edge set is immediately
     // fingerprinted, and that aggregation is the action that computes
-    // the checkpoint — one job per superstep fewer (the eager form ran
-    // a materialization job AND the fingerprint job per round; at
-    // converged-small edge counts the loop is pure job/barrier
-    // overhead, measured 3.2 s for a 15k-edge graph at local[32]).
+    // the checkpoint's final stage and stores its blocks. Under AQE
+    // `localCheckpoint(eager = false)` is not free: taking the plan's
+    // RDD runs the superstep's shuffle stages at call time, in their
+    // own SQL execution (6–7 jobs per superstep in attach_batch), and
+    // the fingerprint then runs only the final stage. The eager form
+    // would run that final stage twice (materialization job AND
+    // fingerprint job); at converged-small edge counts the loop is pure
+    // job/barrier overhead (3.2 s for a 15k-edge graph at local[32]).
+    // Tried and dropped: folding the fingerprint into an eager
+    // checkpoint with `Dataset.observe` cut attach_batch from 8 to 5
+    // SQL executions and 43 to 40 jobs, but CC wall time stayed the
+    // same (2.95 vs 2.92 s).
     def materialize(df: DataFrame): DataFrame =
       if (reliableCheckpoints) df.checkpoint(eager = false)
       else df.localCheckpoint(eager = false)
@@ -111,8 +123,9 @@ object ConnectedComponents {
       .join(dict.select(col("id").as("a"), col("idx").as("_ea")), "a")
       .join(dict.select(col("id").as("b"), col("idx").as("_eb")), "b")
       .select(col("_ea").as("a"), col("_eb").as("b")))
-    val (members, steps) = loop(encoded, fingerprint(encoded), maxRounds,
-      materialize)
+    val encodedFp = fingerprint(encoded)
+    release(e0)
+    val (members, steps) = loop(encoded, encodedFp, maxRounds, materialize)
     val decoded = members
       .join(dict.select(col("idx").as("id"), col("id").as("_sid")), "id")
       .join(dict.select(col("idx").as("component"), col("id").as("_scomp")),
@@ -145,6 +158,7 @@ object ConnectedComponents {
         math.min(outerPartitions, fp._1 / EdgesPerPartition + 1)).toInt
       val next = materialize(smallStar(largeStar(e, width), width))
       val nfp = fingerprint(next)
+      release(e) // superseded: `next` is computed and checkpointed
       converged = nfp == fp
       fp = nfp
       e = next
@@ -158,6 +172,13 @@ object ConnectedComponents {
       .unionByName(e.select(col("a").as("id"), col("b").as("component")))
       .distinct()
     (members, steps.toSeq)
+  }
+
+  /** Unregister a superseded checkpoint and drop its storage blocks
+    * (a reliable checkpoint's files stay in the checkpoint dir). */
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 
   /** Large-star: for each node u, link every strictly larger neighbor to

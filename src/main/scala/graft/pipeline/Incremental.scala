@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.block.{Blocking, BoundScheme}
 import graft.cluster.ConnectedComponents
+import graft.plans.Evaluated
 import graft.sim.Distances
 
 /** Incremental dedupe — attach a NEW batch of records to an EXISTING
@@ -25,7 +26,11 @@ import graft.sim.Distances
   * side is the precomputable/bucketable half), one map-only scoring
   * pass, one groupBy(id) min(struct) for the argmax attach — partial
   * aggregation, no window — and a CC run sized to the LEFTOVER batch,
-  * not the corpus.
+  * not the corpus. The attach result is evaluated once, nothing pinned:
+  * the leftover anti-join (read by CC and by `fresh`) and the returned
+  * union all read one [[Evaluated.once]] frame, so the linkage
+  * blocking, hydration, scoring and argmax shuffles run once per call
+  * instead of once per consumer, and no storage block is left behind.
   */
 object Incremental {
 
@@ -49,13 +54,13 @@ object Incremental {
     // best existing match per incoming id: max score, tie → min
     // component (min over (-score, component) — an aggregate, not a
     // window)
-    val attached = scored
+    val attached = Evaluated.once(scored
       .join(clusters.withColumnRenamed("id", "id_r"), "id_r")
       .groupBy(col("id_l").as("id"))
       .agg(min(struct((-col("score")).as("neg"), col("component")))
         .as("_best"))
       .select(col("id"), col("_best.component").as("component"),
-        lit(true).as("attached"))
+        lit(true).as("attached")))
     // leftover: incoming records that attached to nothing — dedupe
     // them against each other, then singletons
     val leftover = incoming

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.block.{Blocking, BoundScheme, FirstNChars, FindNgrams}
 import graft.cluster.ConnectedComponents
 import graft.normalize.Normalize
+import graft.plans.Evaluated
 import graft.sim.Distances
 import graft.synth.Transcripts
 
@@ -28,8 +29,10 @@ object RecordLinkage {
 
   def run(spark: SparkSession, sfDir: String,
           threshold: Double = 0.8): Result = {
-    val records = Normalize.normalize(
-      Transcripts.transcripts(spark, sfDir)).cache()
+    // read by both blocking sides and by hydration: evaluated once,
+    // with no cache entry left for the caller to release
+    val records = Evaluated.once(Normalize.normalize(
+      Transcripts.transcripts(spark, sfDir)))
     val left = records.filter(col("conv_id").startsWith("c"))
     val right = records.filter(col("conv_id").startsWith("d"))
 

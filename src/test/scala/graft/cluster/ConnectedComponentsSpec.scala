@@ -109,4 +109,23 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
     assert(seen.size == 1 && seen.contains("4"),
       s"a concurrent reader saw widths $seen")
   }
+
+  test("a run leaves only its final round's checkpoint registered") {
+    val chain = (0 until 40).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
+    // string path: the final round; dictionary-encoded path (forced by
+    // encodeThreshold 0): the final round plus the id dictionary, which
+    // the lazy decode of the result still reads
+    for ((threshold, kept) <-
+           Seq(ConnectedComponents.EncodeEdgeThreshold -> 1, 0L -> 2)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val (members, steps) = ConnectedComponents.run(
+        chain.toDF("id_l", "id_r"), encodeThreshold = threshold)
+      val got = members.collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(got == bruteForce(chain))
+      assert(added.size == kept, s"encodeThreshold $threshold: " +
+        s"${steps.size - 1} rounds left ${added.size} persistent RDDs")
+    }
+  }
 }

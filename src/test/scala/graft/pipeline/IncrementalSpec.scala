@@ -47,4 +47,31 @@ class IncrementalSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2)))
     assert(out.toSeq == Seq(("n7", "n7", false)))
   }
+
+  test("attach reads each existing cluster row exactly once") {
+    val existing = Seq(
+      ("e1", "alpha beta gamma", "u a", "alpha beta gamma delta"),
+      ("e2", "alpha beta gamm", "u a", "alpha beta gamma delta"),
+      ("e9", "zeta eta theta", "u t", "zeta eta theta iota"))
+      .toDF(cols: _*)
+    // every evaluation of the attach plan scans `clusters` again: the
+    // tap counts cluster rows read across all of attach's jobs
+    val reads = spark.sparkContext.longAccumulator("cluster rows read")
+    val tap = org.apache.spark.sql.functions.udf { (c: String) =>
+      reads.add(1); c
+    }.asNondeterministic()
+    val clusters = Seq(("e1", "e1"), ("e2", "e1"), ("e9", "e9"))
+      .toDF("id", "component")
+      .select($"id", tap($"component").as("component"))
+    val incoming = Seq(
+      ("n1", "alpha beta gamma", "u a", "alpha beta gamma delta"),
+      ("n2", "qqq www eee", "u a", "qqq www eee rrr"),
+      ("n3", "qqq www eee", "u a", "qqq www eee rrr"))
+      .toDF(cols: _*)
+    val out = Incremental.attach(existing, clusters, incoming,
+        Seq(BoundScheme(FirstNChars(4), "head_text")))
+      .collect()
+    assert(out.length == 3)
+    assert(reads.value == 3, s"${reads.value} cluster rows read for 3")
+  }
 }

@@ -29,6 +29,18 @@ class RecordLinkageSpec extends AnyFunSuite with SparkSuite {
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
+  test("a linkage run and its F1 leave at most CC's final round registered") {
+    // an earlier run's cache of the same records plan would be reused
+    // by a new cache() and hide its entry
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val result = RecordLinkage.run(spark, sfDir)
+    val (f1, _, _, _) = Dedupe.pairwiseF1(spark, sfDir, result.scored)
+    assert(f1 >= 0.99)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size <= 1, s"persistent RDDs left registered: $added")
+  }
+
   test("RL clusters carry (cluster, id, _type) with cross-table membership") {
     val clusters = RecordLinkage.run(spark, sfDir).clusters
     assert(clusters.columns.toSeq == Seq("cluster", "id", "_type"))
