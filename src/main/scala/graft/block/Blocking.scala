@@ -94,6 +94,63 @@ object Blocking {
       col(idCol), maxBlockSize)
   }
 
+  /** J1 over several conjunctions at once: the deduped union of
+    * [[candidatePairs]] for each of `conjunctions`, as ONE
+    * [[groupedPairs]] pass keyed by (conjunction tag `_x`, exact
+    * signature tuple `_k`) — the cap still applies per conjunction and
+    * key. The conjunctions travel as data ([[conjunctionKeys]] over the
+    * chunk's [[BoundScheme.sigArray]]s), so one conjunction or eight
+    * plan to the same operators and the same exchanges.
+    *
+    * A single conjunction stays on [[candidatePairs]]: its
+    * [[invertedIndex]] explodes compile to whole-stage code, while the
+    * fold here is an interpreted higher-order function.
+    */
+  def chunkPairs(records: DataFrame, conjunctions: Seq[Seq[BoundScheme]],
+                 idCol: String = "conv_id",
+                 maxBlockSize: Int = DefaultMaxBlockSize): DataFrame = {
+    val used = conjunctions.flatten.distinct
+    val at = used.zipWithIndex.toMap
+    val keyed = keyedRows(
+      records.select(col(idCol), array(used.map(_.sigArray): _*).as("_sigs")),
+      Seq(idCol), conjunctionKeys(conjunctions.map(_.map(at)), col("_sigs"),
+        array().cast("array<string>"), (t, s) => concat(t, array(s))))
+    groupedPairs(keyed, Seq("_x", "_k"), col(idCol), maxBlockSize)
+  }
+
+  /** (keep…, `_x`, `_k`) block-key incidence rows: one per input row,
+    * conjunction and key, where `keys` is the row's array of key
+    * arrays, one per conjunction ([[conjunctionKeys]]). The tag `_x` is
+    * the conjunction's INT position (callers map back by position), not
+    * a scheme-name string: it rides every row through the key shuffle,
+    * and a 4-byte int vs a ~25-byte name is a third off the shuffled
+    * row (guide §2.3, narrower types). A pure projection — no join.
+    */
+  private[graft] def keyedRows(df: DataFrame, keep: Seq[String],
+                               keys: Column): DataFrame =
+    df.select(keep.map(col) :+ posexplode(keys).as(Seq("_x", "_ks")): _*)
+      .select(keep.map(col) ++ Seq(col("_x"), explode(col("_ks")).as("_k")): _*)
+
+  /** Per conjunction in `conjunctions` (each a list of indices into
+    * `sigs`, an array of per-scheme signature arrays), the array of the
+    * record's block keys: the cartesian product of its schemes'
+    * signature sets, folded left to right in conjunction order from
+    * `zero` with `step(key so far, signature)`. An empty array means
+    * some scheme has no valid signature, so the record is in no block
+    * of that conjunction.
+    *
+    * The conjunctions are a LITERAL, not one expression subtree each:
+    * the expression is the same size for 3 candidates or 300, so
+    * analysis, optimization and plan-string rendering cost the same
+    * for every stats batch and budget chunk.
+    */
+  private[graft] def conjunctionKeys(conjunctions: Seq[Seq[Int]],
+                                     sigs: Column, zero: Column,
+                                     step: (Column, Column) => Column): Column =
+    transform(typedLit(conjunctions), c => aggregate(c, array(zero),
+      (acc, i) => flatten(transform(acc,
+        k => transform(element_at(sigs, i + 1), s => step(k, s))))))
+
   /** J2: record-linkage variant — pairs cross two tables, no ordering
     * constraint (blocking.py:260-261).
     */

@@ -2,6 +2,7 @@ package graft.block
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 
 /** Stats for one conjunction, reference StatsDict (_typing.py:81-90). */
@@ -33,13 +34,17 @@ final case class ConjStats(
   * here the DP runs BREADTH-FIRST and every depth is ONE stats batch:
   * the `base ∧ x` candidates of every live seed chain are gathered,
   * deduped by sorted scheme list, and scored together — their
-  * inverted indexes are unioned under an int `_x` candidate tag and
+  * block-key incidence rows carry an int `_x` candidate tag and are
   * aggregated grouped by tag (J3+A1 batched). A `learn()` with k = 3
   * and no escalation is three batches (singles, depth 1, depth 2)
-  * however many seeds are refined. See [[scoreAll]] for the
-  * block-size/coverage split that keeps each batch free of pair-scale
-  * work. Scores are memoized across seeds (reference @lru_cache,
-  * optimizers.py:37-50).
+  * however many seeds are refined. The candidates reach Spark as DATA
+  * — one literal list of scheme-index lists folded by
+  * [[Blocking.conjunctionKeys]] — so every batch plans to the same
+  * small plan whether it scores 3 candidates or 300: analysis,
+  * optimization and plan rendering stop growing with the batch. See
+  * [[scoreAll]] for the block-size/coverage split that keeps each
+  * batch free of pair-scale work. Scores are memoized across seeds
+  * (reference @lru_cache, optimizers.py:37-50).
   */
 /** Conjunction statistics are evaluated on the FULL `records` corpus,
   * not a train sample — a deliberate divergence from the reference's
@@ -82,29 +87,23 @@ final class Learner(
   // memoized conjunction stats, keyed by the SORTED scheme list
   private val cache = mutable.HashMap.empty[Seq[String], ConjStats]
 
-  private val labelsCached = labels.cache()
+  // a caller's cached labels are read, not re-registered: unpersist
+  // must drop only what this learner cached itself
+  private val ownsLabels = labels.storageLevel == StorageLevel.NONE
+  private val labelsCached = if (ownsLabels) labels.cache() else labels
 
   private def sigColName(scheme: String): String = s"_s_$scheme"
 
   /** Forward SIGNATURE table: idCol + one validated signature column
-    * per scheme, every column an array<string> (scalar schemes become
-    * 1-element arrays; array schemes are deduped map-side and cleared
-    * of null/"" exactly as [[Blocking.invertedIndex]] filters them).
-    * Computed and cached ONCE — the expensive part of every DP batch
-    * (regex tokenization, n-gram generation over text attributes) runs
-    * one time per record instead of once per batch per record.
+    * per scheme ([[BoundScheme.sigArray]] — every column an
+    * array<string>, exactly the signatures [[Blocking.invertedIndex]]
+    * keeps). Computed and cached ONCE — the expensive part of every DP
+    * batch (regex tokenization, n-gram generation over text attributes)
+    * runs one time per record instead of once per batch per record.
     */
   private def sigTable(df: DataFrame): DataFrame =
-    df.select((col(idCol) +: schemes.map { b =>
-      val e = b.scheme.expr(b.attr)
-      val c =
-        if (b.isArray)
-          filter(array_distinct(e), s => s.isNotNull && s =!= "")
-        else
-          when(e.isNotNull && e =!= "", array(e))
-            .otherwise(array().cast("array<string>"))
-      c.as(sigColName(b.name))
-    }): _*)
+    df.select((col(idCol) +:
+      schemes.map(b => b.sigArray.as(sigColName(b.name)))): _*)
 
   private val corpusSigs = sigTable(records).cache()
   // labeled-record slice of the corpus — both ends of every labeled
@@ -121,44 +120,34 @@ final class Learner(
     n * (n - 1) / 2.0
   }
 
-  /** Per-row array of 64-bit hashes of the conjunction's signature
-    * tuples — the cartesian product of its schemes' per-record
-    * signature sets, hash-chained left to right (block statistics need
-    * key IDENTITY, not key text; a 64-bit collision merges two blocks
-    * in the estimate with probability ~#blocks²/2⁶⁴ — statistical
-    * zero). Empty array ⇔ some scheme has no valid signature ⇔ the
-    * record is in no block of this conjunction. `sig` resolves a
-    * scheme's signature column (a struct field on the coverage side).
-    */
-  private def combosCol(conj: Seq[String],
-                        sig: String => Column = n => col(sigColName(n))): Column =
-    conj.foldLeft(array(lit(0L))) { (acc, name) =>
-      flatten(transform(acc, h => transform(sig(name), s => xxhash64(h, s))))
-    }
+  private val schemeIndex: Map[String, Int] =
+    schemes.map(_.name).zipWithIndex.toMap
 
-  /** (tag, block-key-hash) incidence rows for every conjunction in
-    * `conjs`, one per (input row, conjunction, key in `keys(conj)`) —
-    * a PURE PROJECTION: no join, so the only shuffle a stats batch
-    * does on the corpus is the partial-agg groupBy on the emitted key.
-    * The tag is the INT index into `conjs` (callers map back by
-    * position), not a scheme-name string: it rides every incidence row
-    * through the batch shuffle, and a 4-byte int vs a ~25-byte name is
-    * a third off the shuffled row (guide §2.3, narrower types).
+  /** The signature table's per-scheme columns as one array, in
+    * `schemes` order — the `sigs` operand of [[hashKeys]]. Built at use
+    * time from the cached per-scheme columns. */
+  private def sigsArray: Column =
+    array(schemes.map(b => col(sigColName(b.name))): _*)
+
+  /** Per conjunction in `conjs`, the row's array of 64-bit hashes of
+    * its signature tuples — the cartesian product of the conjunction's
+    * schemes' signature sets, hash-chained left to right from seed 0
+    * (block statistics need key IDENTITY, not key text; a 64-bit
+    * collision merges two blocks in the estimate with probability
+    * ~#blocks²/2⁶⁴ — statistical zero). Empty array ⇔ some scheme has
+    * no valid signature ⇔ the record is in no block of that
+    * conjunction. The conjunctions are passed as a literal list of
+    * scheme indices ([[Blocking.conjunctionKeys]]), so the expression
+    * does not grow with the candidate count.
     */
-  private def keyedRows(df: DataFrame, conjs: Seq[Seq[String]],
-                        keep: Seq[Column],
-                        keys: Seq[String] => Column): DataFrame = {
-    val arr = array(conjs.zipWithIndex.map { case (c, i) =>
-      struct(lit(i).as("_x"), keys(c).as("_ks")) }: _*)
-    df.select(keep :+ explode(arr).as("_e"): _*)
-      .select((keep :+ col("_e._x").as("_x")) :+
-        explode(col("_e._ks")).as("sigh"): _*)
-  }
+  private def hashKeys(conjs: Seq[Seq[String]], sigs: Column): Column =
+    Blocking.conjunctionKeys(conjs.map(_.map(schemeIndex)), sigs, lit(0L),
+      (h, s) => xxhash64(h, s))
 
   /** The surviving-block-size relation for one stats batch — exposed
     * package-private so PlanAuditSpec can pin its shape (no Join, no
-    * Window anywhere: [[keyedRows]] is a pure projection and this adds
-    * one grouped count).
+    * Window anywhere: [[Blocking.keyedRows]] is a pure projection and
+    * this adds one grouped count).
     *
     * `_n > 1`: singleton blocks are dropped before the persist — they
     * contribute C(1,2) = 0 pairs, and a labeled pair BOTH of whose
@@ -168,8 +157,9 @@ final class Learner(
     * that fraction.
     */
   private[graft] def statsPlan(conjs: Seq[Seq[String]]): DataFrame =
-    keyedRows(corpusSigs, conjs, Nil, combosCol(_))
-      .groupBy(col("_x"), col("sigh"))
+    Blocking.keyedRows(corpusSigs.select(sigsArray.as("_sigs")), Nil,
+      hashKeys(conjs, col("_sigs")))
+      .groupBy(col("_x"), col("_k"))
       .agg(count(lit(1)).as("_n"))
       .filter(col("_n") > 1 && col("_n") <= maxBlockSize)
 
@@ -180,22 +170,21 @@ final class Learner(
     * records alone — both ends' signature rows broadcast onto the
     * pairs, then per conjunction the intersection of the two ends'
     * compound keys — so the only corpus-scale input, `surviving`, is
-    * the stream side of one broadcast join on (_x, sigh): no exchange
+    * the stream side of one broadcast join on (_x, _k): no exchange
     * of the block table. The broadcast is bounded by labels ×
     * conjunctions × shared keys.
     */
   private def coverage(conjs: Seq[Seq[String]], surviving: DataFrame,
                        pairs: DataFrame): DataFrame = {
-    val sigCols = schemes.map(b => col(sigColName(b.name)))
     def end(side: String) = broadcast(labRecSigs.select(
-      col(idCol).as(s"id_$side"), struct(sigCols: _*).as(s"_$side")))
-    val pairKeys = keyedRows(
-      pairs.join(end("l"), "id_l").join(end("r"), "id_r"), conjs,
-      Seq("id_l", "id_r", "label").map(col),
-      c => array_intersect(combosCol(c, n => col(s"_l.${sigColName(n)}")),
-        combosCol(c, n => col(s"_r.${sigColName(n)}"))))
-    surviving.select("_x", "sigh")
-      .join(broadcast(pairKeys), Seq("_x", "sigh"))
+      col(idCol).as(s"id_$side"), sigsArray.as(s"_$side")))
+    val pairKeys = Blocking.keyedRows(
+      pairs.join(end("l"), "id_l").join(end("r"), "id_r"),
+      Seq("id_l", "id_r", "label"),
+      zip_with(hashKeys(conjs, col("_l")), hashKeys(conjs, col("_r")),
+        array_intersect))
+    surviving.select("_x", "_k")
+      .join(broadcast(pairKeys), Seq("_x", "_k"))
       .select("_x", "id_l", "id_r", "label")
   }
 
@@ -210,7 +199,9 @@ final class Learner(
     *
     * Shape: ONE map-only pass over the cached signature table emits
     * (tag, block-key-hash) incidence rows for every conjunction at
-    * once ([[keyedRows]] — no corpus-scale join anywhere), then (1) a
+    * once ([[Blocking.keyedRows]] over [[hashKeys]] — no corpus-scale
+    * join anywhere, and one constant-size expression for the whole
+    * batch, the candidates being a literal), then (1) a
     * grouped count turns them into BLOCK SIZES — n_pairs is
     * Σ C(size,2) over cap-surviving blocks, no pair ever materialized —
     * and (2) the labeled pairs' shared keys are looked up in the
@@ -236,7 +227,7 @@ final class Learner(
     // write+read per DP batch even when the table fit in memory;
     // a plain cache spills under pressure instead of pinning.
     val surviving = statsPlan(missing)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val none = lit(null).cast("long")
     val nPairs = surviving.groupBy(col("_x"))
       .agg(sum(col("_n") * (col("_n") - 1) / 2).cast("long").as("n"))
@@ -454,8 +445,9 @@ final class Learner(
   }
 
   def unpersist(): Unit = {
-    corpusSigs.unpersist(); labelsCached.unpersist()
-    labRecSigs.unpersist(); ()
+    corpusSigs.unpersist(); labRecSigs.unpersist()
+    if (ownsLabels) labelsCached.unpersist()
+    ()
   }
 }
 

@@ -88,6 +88,17 @@ final case class BoundScheme(scheme: Scheme, attr: String) {
   def expr: Column = scheme.expr(attr).as(name)
   def isArray: Boolean = scheme.isArray
   def sql: String = scheme.sql(attr)
+
+  /** The record's VALID signatures as one array<string>: array schemes
+    * deduped and cleared of null/"", a scalar scheme as a 1-element
+    * array, or empty when it is null/"" — exactly the rows
+    * [[Blocking.invertedIndex]] keeps, as a set per record. */
+  def sigArray: Column = {
+    val e = scheme.expr(attr)
+    if (isArray) filter(array_distinct(e), s => s.isNotNull && s =!= "")
+    else when(e.isNotNull && e =!= "", array(e))
+      .otherwise(array().cast("array<string>"))
+  }
 }
 
 object Schemes {

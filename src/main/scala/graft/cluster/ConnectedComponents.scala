@@ -1,8 +1,8 @@
 package graft.cluster
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import graft.plans.Checkpoints.release
 
 /** Distributed connected components over an edge DataFrame — replaces
   * the reference's driver-memory networkx clustering
@@ -172,13 +172,6 @@ object ConnectedComponents {
       .unionByName(e.select(col("a").as("id"), col("b").as("component")))
       .distinct()
     (members, steps.toSeq)
-  }
-
-  /** Unregister a superseded checkpoint and drop its storage blocks
-    * (a reliable checkpoint's files stay in the checkpoint dir). */
-  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
   }
 
   /** Large-star: for each node u, link every strictly larger neighbor to

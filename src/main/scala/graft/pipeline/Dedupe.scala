@@ -2,11 +2,12 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.block.{Blocking, ConjStats, Labels, Learner}
+import graft.block.{Blocking, BoundScheme, ConjStats, Labels, Learner}
 import graft.cluster.ConnectedComponents
 import graft.io.TableIO
 import graft.ml.MatchClassifier
 import graft.normalize.Normalize
+import graft.plans.Checkpoints
 import graft.sim.Distances
 import graft.synth.Transcripts
 
@@ -78,6 +79,43 @@ object Dedupe {
       val minRr = 1.0 - maxCompare / nComparisons
       conjunctions.takeWhile(_.rr >= minRr)
     }
+  }
+
+  /** Conjunctions applied per budget step of [[budgetPairs]]. */
+  private val BudgetChunk = 8
+
+  /** Candidate pairs of the best-first `admitted` conjunctions under the
+    * covered-pair budget (n_covered, blocking.py:43-98): the reference
+    * counts after EVERY conjunction (one SQL round-trip each); here
+    * conjunctions are applied in chunks of [[BudgetChunk]] — one
+    * [[Blocking.chunkPairs]] pass (a single grouped-pairs pipeline for
+    * the whole chunk), one conflict-skip append and one count per
+    * chunk — so the budget can overshoot by at most one chunk, and
+    * no chunk starts once `nCovered` pairs are covered.
+    *
+    * Each step's accumulated pairs are checkpointed to cut the
+    * lineage, and the step it replaces is released once the new one
+    * is materialized: only the returned (final) checkpoint stays
+    * registered.
+    */
+  private[graft] def budgetPairs(records: DataFrame,
+                                 admitted: Seq[Seq[BoundScheme]],
+                                 nCovered: Long,
+                                 maxBlockSize: Int): DataFrame = {
+    var acc: DataFrame = null
+    var covered = 0L
+    val chunks = admitted.grouped(BudgetChunk)
+    while (chunks.hasNext && covered < nCovered) {
+      val p = Blocking.chunkPairs(records, chunks.next(), "conv_id",
+        maxBlockSize)
+      val next = (if (acc == null) p
+        else acc.unionByName(p.join(acc, Seq("id_l", "id_r"), "left_anti")))
+        .localCheckpoint()
+      covered = next.count()
+      if (acc != null) Checkpoints.release(acc)
+      acc = next
+    }
+    acc
   }
 
   /** `ccSupersteps` is the connected-components convergence trail; it
@@ -226,34 +264,17 @@ object Dedupe {
     val schemeByName = graft.block.Schemes.byName(cfg.blockingAttrs)
 
     // 5. candidate pairs on FULL data, best conjunctions first, under
-    //    TWO budgets (blocking.py:43-98): the covered-pair budget
-    //    (n_covered) and the min_rr/max_compare refusal — a low-rr
-    //    conjunction late in the list is never applied. The reference
-    //    counts after EVERY conjunction (one SQL round-trip each); here
-    //    conjunctions are applied in chunks — one unioned Spark job +
-    //    one count per chunk — preserving the best-first budget
-    //    semantics at a fraction of the job count.
+    //    TWO budgets (blocking.py:43-98): the min_rr/max_compare
+    //    refusal — a low-rr conjunction late in the list is never
+    //    applied — and the covered-pair budget, see [[budgetPairs]].
     val admitted = applicableConjunctions(conjunctions, nRecords,
       cfg.maxCompare)
     require(admitted.nonEmpty,
       "min_rr stop refused every learned conjunction")
     val pairs = staged("pairs", Seq("records"), Some(idPairs)) {
-      var acc: DataFrame = null
-      var covered = 0L
-      val chunks = admitted.grouped(8)
-      while (chunks.hasNext && covered < cfg.nCovered) {
-        val chunk = chunks.next()
-        val p = chunk.map(s => Blocking.candidatePairs(records,
-            s.conjunction.map(schemeByName), "conv_id",
-            cfg.maxBlockSize))
-          .reduce(_ unionByName _)
-          .dropDuplicates("id_l", "id_r")
-        acc = if (acc == null) p
-          else acc.unionByName(p.join(acc, Seq("id_l", "id_r"), "left_anti"))
-        acc = acc.localCheckpoint() // cut lineage per budget step
-        covered = acc.count()
-      }
-      acc
+      budgetPairs(records,
+        admitted.map(_.conjunction.map(schemeByName)), cfg.nCovered,
+        cfg.maxBlockSize)
     }
 
     // 6. similarity feature vectors (M1; JW/Levenshtein/Jaccard +

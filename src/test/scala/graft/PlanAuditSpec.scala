@@ -161,6 +161,53 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
       s"learner stats batch ranks via a window:\n$plan")
   }
 
+  test("learner stats batch plans to the same expression count for 3 " +
+    "or 100 candidates") {
+    val recs = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
+    import spark.implicits._
+    val labels = Seq(("a", "b", 1)).toDF("id_l", "id_r", "label")
+    val learner = new graft.block.Learner(recs, labels,
+      graft.normalize.Normalize.blockingAttributes)
+    // candidates travel as a literal: the plan must not grow a
+    // subtree per candidate
+    def nodes(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect { case e => e }.size).sum
+      }.sum
+    val pairs = learner.schemes.map(_.name).combinations(2).toSeq
+    val (few, many) = (nodes(learner.statsPlan(pairs.take(3))),
+      nodes(learner.statsPlan(pairs.take(100))))
+    learner.unpersist()
+    assert(few == many,
+      s"stats batch expression count grows with candidates: $few vs $many")
+  }
+
+  test("budget chunk emitter plans 1 and 8 conjunctions to the same " +
+    "exchanges, joining only through the cap left_semi") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.block.{Blocking, Schemes}
+    object Aqe extends AdaptiveSparkPlanHelper
+    val recs = Normalize.normalize(Transcripts.transcripts(spark, sfDir))
+      .localCheckpoint()
+    val schemes = Schemes.forAttributes(Normalize.blockingAttributes)
+    val eight = (0 until 8).map(i => Seq(schemes(i), schemes(i + 11)))
+    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+      Aqe.collect(df.queryExecution.executedPlan) { case e: Exchange => e }.size
+    val one = Blocking.chunkPairs(recs, eight.take(1))
+    val all = Blocking.chunkPairs(recs, eight)
+    assert(exchanges(one) > 0 && exchanges(one) == exchanges(all),
+      s"chunk exchanges grow with conjunctions:\n${all.queryExecution.executedPlan}")
+    assert(all.collect().nonEmpty, "chunk emitted no pairs")
+    val joins = Aqe.collect(all.queryExecution.executedPlan) {
+      case j: BaseJoinExec => j.joinType }
+    assert(joins == Seq(LeftSemi),
+      s"chunk pair generation joins beyond the cap semi-join:\n" +
+        all.queryExecution.executedPlan)
+  }
+
   test("zip-join and ordered-result plans carry no unpartitioned Window") {
     // q17/q48 rank via range-partitioned zipWithIndex — the plan must
     // not contain a WindowExec at all (an unpartitioned row_number

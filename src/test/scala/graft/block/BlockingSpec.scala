@@ -112,6 +112,38 @@ class BlockingSpec extends AnyFunSuite with SparkSuite {
     assert(salted == uncapped)
   }
 
+  test("chunk emitter equals the deduped union of per-conjunction " +
+    "candidatePairs") {
+    // `jo` opens 5 names (over cap 3) but only 3 cities (under it): the
+    // cap must apply per conjunction, not per key text; null and ""
+    // signatures block nothing
+    val d = Seq(
+      ("r1", "john smith", "boston"),
+      ("r2", "john smyth", "bost"),
+      ("r3", "jane smith", "jolt"),
+      ("r4", "joe jones", "jo"),
+      ("r5", "john smith", null),
+      ("r6", null, "jones"),
+      ("r7", "", ""),
+      ("r8", "jo", "boss")).toDF("conv_id", "name", "city")
+    val conjs = Seq(
+      Seq(BoundScheme(FirstNChars(2), "name")),
+      Seq(BoundScheme(FirstNChars(2), "city")),
+      Seq(BoundScheme(FindNgrams(4), "name")),
+      Seq(BoundScheme(Acronym, "name"), BoundScheme(FindNgrams(3), "city")),
+      Seq(BoundScheme(ExactMatch, "name")),
+      Seq(BoundScheme(LastNChars(4), "name"), BoundScheme(FirstNChars(2), "city")))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val expected = conjs.flatMap(c =>
+      pairs(Blocking.candidatePairs(d, c, maxBlockSize = 3))).toSet
+    val chunk = pairs(Blocking.chunkPairs(d, conjs, maxBlockSize = 3))
+    assert(chunk.toSet == expected)
+    assert(chunk.distinct.size == chunk.size, "chunk pairs not deduped")
+    assert(expected.contains(("r3", "r4")) && !expected.contains(("r4", "r8")),
+      "fixture lost its per-conjunction cap case")
+  }
+
   test("record-linkage pairs cross tables without ordering constraint") {
     val left = Seq(("l1", "john smith"), ("l2", "zzz")).toDF("conv_id", "name")
     val right = Seq(("r1", "john smyth")).toDF("conv_id", "name")

@@ -197,6 +197,21 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     assert(l.coveredPositives(admitted.map(_.conjunction)) == 2L)
   }
 
+  test("unpersist leaves a caller-cached labels frame cached") {
+    // the pipeline caches its labels and reads them again after the
+    // learner (classifier training): the learner must not drop them
+    val own = labels.filter($"label" >= 0).cache()
+    try {
+      own.count()
+      val l = new Learner(train, own, Seq("head_text"), k = 2,
+        seedRrCut = 0.0, maxBlockSize = 100)
+      l.score(Seq("exactmatch_head_text"))
+      l.unpersist()
+      assert(own.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "learner.unpersist() dropped the caller's labels cache")
+    } finally own.unpersist()
+  }
+
   test("ngram constraint: conjunctions never contain 2 ngram schemes") {
     val conjs = learner().learn()
     conjs.foreach { c =>
