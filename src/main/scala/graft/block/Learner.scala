@@ -188,11 +188,8 @@ final class Learner(
       .select("_x", "id_l", "id_r", "label")
   }
 
-  /** Optional progress logging (-Dgraft.verbose=true or GRAFT_VERBOSE=1). */
-  private val verbose = sys.props.get("graft.verbose").contains("true") ||
-    sys.env.get("GRAFT_VERBOSE").contains("1")
-  private def log(msg: => String): Unit =
-    if (verbose) System.err.println(s"[learner] $msg")
+  /** Optional progress logging ([[graft.Verbose]]). */
+  private def log(msg: => String): Unit = graft.Verbose.log("learner")(msg)
 
   /** Score every not-yet-memoized conjunction in `conjs` — ONE stats
     * batch, ONE Spark action.

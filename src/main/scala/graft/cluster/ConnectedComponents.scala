@@ -2,10 +2,12 @@ package graft.cluster
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 import graft.plans.Checkpoints.release
 
-/** Distributed connected components over an edge DataFrame — replaces
-  * the reference's driver-memory networkx clustering
+/** Connected components over an edge DataFrame — replaces the
+  * reference's driver-memory networkx clustering
   * (oagdedupe cluster/cluster.py:45-81), which cannot hold 10^10-node
   * graphs.
   *
@@ -24,26 +26,26 @@ import graft.plans.Checkpoints.release
   * convergence is detected by an order-insensitive (count, xor-of-hash)
   * fingerprint — one tiny agg per round, the "convergence checkpointed
   * per superstep" demanded by the north rule. A superstep's checkpoint
-  * is released as soon as the next one is fingerprinted, so a run
-  * leaves only its final round (and, on the encoded path, its id
-  * dictionary) registered.
+  * is released as soon as the next one is fingerprinted, so a
+  * distributed run leaves only its final round (and, on the encoded
+  * path, its id dictionary) registered.
+  *
+  * Three paths, chosen from the normalized edge count that the round-0
+  * fingerprint already yields:
+  *   - driver (at most [[EdgesPerPartition]] edges, string / long / int
+  *     ids): the edge set is collected once and [[DriverStars]] runs the
+  *     same rounds in driver memory — same `(id, component)` rows, same
+  *     superstep trail, no per-round Spark job, nothing left registered;
+  *   - distributed: the superstep loop below;
+  *   - encoded (string ids above [[EncodeEdgeThreshold]] edges): the
+  *     loop over dictionary-encoded long ids.
+  * With `GRAFT_VERBOSE=1` each run logs its path, edge count and
+  * rounds as one `[cc]` line.
   */
 object ConnectedComponents {
 
   final case class Superstep(round: Int, edges: Long, fingerprint: Long)
 
-  /** @param edges DataFrame with columns (id_l, id_r); ids any orderable
-    *              atomic type (string conv_ids or long indices).
-    * @param reliableCheckpoints per-superstep materialization strategy:
-    *              false (default) = `localCheckpoint` — executor-storage
-    *              pinned, right for a single JVM; true = reliable
-    *              `checkpoint()` to the SparkContext's checkpoint dir
-    *              (caller must `setCheckpointDir`) — survives executor
-    *              loss, the cluster-grade choice under dynamic
-    *              allocation.
-    * @return (id, component) where component = min member id, plus the
-    *         supersteps metric trail.
-    */
   /** Target edges per shuffle partition during the iteration. Each
     * superstep is ~6 exchanges; sizing partitions to the LIVE edge
     * count (known free from the convergence fingerprint) keeps a
@@ -52,7 +54,12 @@ object ConnectedComponents {
     * graph pays cpus×4 near-empty tasks per exchange per round, and
     * scheduling overhead DOMINATES (measured: q13 at sf0.1 took 46 s
     * at local[32]/128 partitions vs 19 s at local[8]/32 — more cores
-    * made it slower). */
+    * made it slower).
+    *
+    * Also the driver-path threshold: at or below it every exchange of
+    * the distributed loop already runs at width 1, i.e. on one core,
+    * so running the rounds in driver memory gives up no parallelism
+    * and drops only the per-round jobs and barriers. */
   val EdgesPerPartition = 200000L
 
   /** Edge count above which STRING node ids are dictionary-encoded to
@@ -65,12 +72,34 @@ object ConnectedComponents {
     * on strings; above it the superstep shuffles dwarf the encode. */
   val EncodeEdgeThreshold = 1000000L
 
+  /** @param edges DataFrame with columns (id_l, id_r); ids any orderable
+    *              atomic type (string conv_ids or long indices).
+    * @param reliableCheckpoints per-superstep materialization strategy:
+    *              false (default) = `localCheckpoint` — executor-storage
+    *              pinned, right for a single JVM; true = reliable
+    *              `checkpoint()` to the SparkContext's checkpoint dir
+    *              (caller must `setCheckpointDir`) — survives executor
+    *              loss, the cluster-grade choice under dynamic
+    *              allocation. The driver path checkpoints nothing past
+    *              the normalized edge set it collects.
+    * @return (id, component) where component = min member id, plus the
+    *         supersteps metric trail.
+    */
   def run(edges: DataFrame, maxRounds: Int = 50,
           reliableCheckpoints: Boolean = false,
           encodeThreshold: Long = EncodeEdgeThreshold)
+      : (DataFrame, Seq[Superstep]) =
+    runWith(edges, maxRounds, reliableCheckpoints, encodeThreshold,
+      driverThreshold = EdgesPerPartition)
+
+  /** [[run]] with the driver/distributed choice exposed: a normalized
+    * edge set of at most `driverThreshold` edges runs on the driver
+    * (`-1` forces the distributed loop, whatever `encodeThreshold`). */
+  private[cluster] def runWith(edges: DataFrame, maxRounds: Int,
+                               reliableCheckpoints: Boolean,
+                               encodeThreshold: Long,
+                               driverThreshold: Long)
       : (DataFrame, Seq[Superstep]) = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val spark = edges.sparkSession
     // LAZY checkpoints: every materialized edge set is immediately
     // fingerprinted, and that aggregation is the action that computes
     // the checkpoint's final stage and stores its blocks. Under AQE
@@ -79,8 +108,11 @@ object ConnectedComponents {
     // own SQL execution (6–7 jobs per superstep in attach_batch), and
     // the fingerprint then runs only the final stage. The eager form
     // would run that final stage twice (materialization job AND
-    // fingerprint job); at converged-small edge counts the loop is pure
-    // job/barrier overhead (3.2 s for a 15k-edge graph at local[32]).
+    // fingerprint job). At the edge counts the pipeline clusters after
+    // its score threshold, those per-superstep jobs and barriers were
+    // the whole cost of the loop (3.2 s for a 15k-edge graph at
+    // local[32]); such graphs now take the driver path, which
+    // materializes only `e0`.
     // Tried and dropped: folding the fingerprint into an eager
     // checkpoint with `Dataset.observe` cut attach_batch from 8 to 5
     // SQL executions and 43 to 40 jobs, but CC wall time stayed the
@@ -89,7 +121,8 @@ object ConnectedComponents {
       if (reliableCheckpoints) df.checkpoint(eager = false)
       else df.localCheckpoint(eager = false)
     // normalize once: undirected, canonical a<b, deduped — materialized
-    // because the loop (and the encode decision) scans it repeatedly
+    // because the fingerprint, then the driver collect or the loop (and
+    // the encode), all read it
     val e0 = materialize(edges
       .select(col("id_l").as("a"), col("id_r").as("b"))
       .filter(col("a") =!= col("b"))
@@ -97,14 +130,33 @@ object ConnectedComponents {
         greatest(col("a"), col("b")).as("b"))
       .distinct())
     val fp0 = fingerprint(e0)
-    val stringIds = edges.schema("id_l").dataType == StringType
-    if (!stringIds || fp0._1 <= encodeThreshold)
-      return loop(e0, fp0, maxRounds, materialize)
-    // Dictionary-encode (see EncodeEdgeThreshold). ORDER-PRESERVING:
-    // ids assigned by zipWithIndex over range-sorted distinct ids, so
-    // min-over-idx ≡ min-over-id, the canonical a<b orientation
-    // survives encoding, and the decoded component is the same min
-    // member id the string-keyed run produces.
+    val idType = e0.schema("a").dataType
+    val (path, (members, steps)) =
+      if (fp0._1 <= driverThreshold && DriverStars.supports(idType)) {
+        val out = DriverStars.run(e0, fp0, maxRounds)
+        release(e0)
+        "driver" -> out
+      } else if (idType != StringType || fp0._1 <= encodeThreshold)
+        "distributed" -> loop(e0, fp0, maxRounds, materialize)
+      else
+        "encoded" -> encodedLoop(e0, maxRounds, reliableCheckpoints,
+          materialize)
+    graft.Verbose.log("cc")(
+      s"path=$path edges=${fp0._1} rounds=${steps.size - 1}")
+    (members, steps)
+  }
+
+  /** [[loop]] over dictionary-encoded string ids (see
+    * [[EncodeEdgeThreshold]]). ORDER-PRESERVING: ids assigned by
+    * zipWithIndex over range-sorted distinct ids, so min-over-idx ≡
+    * min-over-id, the canonical a<b orientation survives encoding, and
+    * the decoded component is the same min member id the string-keyed
+    * run produces. */
+  private def encodedLoop(e0: DataFrame, maxRounds: Int,
+                          reliableCheckpoints: Boolean,
+                          materialize: DataFrame => DataFrame)
+      : (DataFrame, Seq[Superstep]) = {
+    val spark = e0.sparkSession
     val nodes = e0.select(col("a").as("id"))
       .unionByName(e0.select(col("b").as("id")))
       .distinct()

@@ -35,6 +35,16 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
     members.collect().map(r => r.getString(0) -> r.getString(1)).toMap
   }
 
+  /** The distributed superstep loop, forced: without `driverThreshold
+    * = -1` a graph this small runs on the driver, whatever the other
+    * knobs say. */
+  private def distributedCC(df: org.apache.spark.sql.DataFrame,
+                            encodeThreshold: Long =
+                              ConnectedComponents.EncodeEdgeThreshold,
+                            reliableCheckpoints: Boolean = false) =
+    ConnectedComponents.runWith(df, maxRounds = 50, reliableCheckpoints,
+      encodeThreshold, driverThreshold = -1L)
+
   test("simple chain + triangle + isolated pair") {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "e"),
       ("f", "g"), ("g", "h"), ("h", "i"))
@@ -62,10 +72,10 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
       f"n${rnd.nextInt(30)}%02d")).filter(e => e._1 != e._2)
     val df = edges.toDF("id_l", "id_r")
     // encodeThreshold = 0 forces the dict-encode path a big graph takes
-    val (enc, encSteps) = ConnectedComponents.run(df, encodeThreshold = 0L)
+    val (enc, encSteps) = distributedCC(df, encodeThreshold = 0L)
     val got = enc.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == bruteForce(edges))
-    assert(got == sparkCC(edges)) // direct path, same components
+    assert(got == sparkCC(edges)) // default (driver) path, same components
     assert(encSteps.nonEmpty)
   }
 
@@ -76,8 +86,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
     spark.sparkContext.setCheckpointDir(dir)
     val edges = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id_l", "id_r")
     val (local, _) = ConnectedComponents.run(edges)
-    val (reliable, _) = ConnectedComponents.run(edges,
-      reliableCheckpoints = true)
+    val (reliable, _) = distributedCC(edges, reliableCheckpoints = true)
     assert(reliable.collect().toSet == local.collect().toSet)
   }
 
@@ -100,7 +109,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
     poller.start()
     try {
       val chain = (0 until 40).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
-      val (members, _) = ConnectedComponents.run(chain.toDF("id_l", "id_r"))
+      val (members, _) = distributedCC(chain.toDF("id_l", "id_r"))
       assert(members.collect().map(_.getString(1)).distinct.toSeq == Seq("n00"))
     } finally {
       running.set(false)
@@ -118,7 +127,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
     for ((threshold, kept) <-
            Seq(ConnectedComponents.EncodeEdgeThreshold -> 1, 0L -> 2)) {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val (members, steps) = ConnectedComponents.run(
+      val (members, steps) = distributedCC(
         chain.toDF("id_l", "id_r"), encodeThreshold = threshold)
       val got = members.collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -127,5 +136,94 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
       assert(added.size == kept, s"encodeThreshold $threshold: " +
         s"${steps.size - 1} rounds left ${added.size} persistent RDDs")
     }
+  }
+
+  /** Both paths on one edge frame: members, schema and trail must agree. */
+  private def assertPathsAgree(df: org.apache.spark.sql.DataFrame,
+                               what: String): Int = {
+    val (dMembers, dSteps) = ConnectedComponents.run(df)
+    val (sMembers, sSteps) = distributedCC(df)
+    assert(dMembers.schema == sMembers.schema, what)
+    assert(dMembers.collect().toSet == sMembers.collect().toSet, what)
+    assert(dSteps == sSteps, what)
+    dSteps.size - 1
+  }
+
+  test("driver path equals the distributed path: members, schema, trail") {
+    val rnd = new scala.util.Random(2024)
+    // "Ａ" (U+FF21) sorts before "😀" (U+1F600) in UTF-8 bytes, as
+    // Spark compares strings, but after it in Java's UTF-16 order
+    assert("Ａ".compareTo("😀") > 0)
+    val prefixes = Seq("a", "Ａ", "😀", "é", "z")
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
+    for (nEdges <- Seq(5, 60, 400, 2000)) {
+      val nNodes = nEdges * 6 / 5 + 2
+      val ends = Seq.fill(nEdges)((rnd.nextInt(nNodes), rnd.nextInt(nNodes)))
+      val strings = ends.map { case (x, y) =>
+        (prefixes(x % prefixes.size) + x, prefixes(y % prefixes.size) + y)
+      }
+      rounds += assertPathsAgree(strings.toDF("id_l", "id_r"),
+        s"string ids, $nEdges edges")
+      val longs = ends.map { case (x, y) =>
+        ((x - nNodes / 2) * 7919L, (y - nNodes / 2) * 7919L)
+      }
+      rounds += assertPathsAgree(longs.toDF("id_l", "id_r"),
+        s"long ids, $nEdges edges")
+    }
+    // a shuffled-label chain needs the most rounds
+    val perm = rnd.shuffle((0 to 300).toList)
+    val chain = perm.zip(perm.tail).map { case (x, y) =>
+      (prefixes(x % prefixes.size) + x, prefixes(y % prefixes.size) + y)
+    }
+    rounds += assertPathsAgree(chain.toDF("id_l", "id_r"), "shuffled chain")
+    assert(rounds.max >= 4, s"rounds $rounds")
+    val empty = Seq.empty[(String, String)].toDF("id_l", "id_r")
+    assert(assertPathsAgree(empty, "no edges") == 1)
+    val loops = Seq(("x", "x"), ("😀", "😀")).toDF("id_l", "id_r")
+    assert(assertPathsAgree(loops, "self loops only") == 1)
+    val utf8 = Seq(("😀", "Ａ")).toDF("id_l", "id_r")
+    assert(ConnectedComponents.run(utf8)._1.collect().map(_.getString(1))
+      .distinct.toSeq == Seq("Ａ"))
+  }
+
+  test("a driver-path run leaves no checkpoint and runs no per-round job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val chain = (0 until 40).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
+    val df = chain.toDF("id_l", "id_r")
+    // jobs started inside run() and the members collect, told apart by
+    // a local property; a sentinel job proves the (asynchronous)
+    // listener bus has delivered every earlier one
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.spec")).foreach {
+          case "cc" => jobs.incrementAndGet()
+          case "sentinel" => drained.countDown()
+          case _ =>
+        }
+    }
+    val before = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    val (got, steps) = try {
+      sc.setLocalProperty("graft.spec", "cc")
+      val (members, steps) = ConnectedComponents.run(df)
+      val got = members.collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      sc.setLocalProperty("graft.spec", "sentinel")
+      spark.range(1).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (got, steps)
+    } finally {
+      sc.setLocalProperty("graft.spec", null)
+      sc.removeSparkListener(listener)
+    }
+    assert(got == bruteForce(chain))
+    assert(steps.size >= 3)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    // normalize (1) + fingerprint (2) + one collect, whatever the round
+    // count (7 here); the distributed loop adds 8–9 jobs per round
+    assert(jobs.get <= 4, s"${jobs.get} jobs for ${steps.size - 1} rounds")
   }
 }
