@@ -274,6 +274,11 @@ final class Learner(
   private def nGramCount(conj: Seq[String]): Int =
     conj.count(_.startsWith("find_ngrams"))
 
+  /** The seed cut (optimizers.py:87): a depth-1 conjunction seeds the
+    * DP only if it covers a positive and its rr clears `seedRrCut`. */
+  private def passesSeedCut(s: ConjStats): Boolean =
+    s.positives > 0 && s.rr >= seedRrCut
+
   /** optimizers.py:52-61 `_keep_if`. */
   private def keepIf(s: ConjStats): Boolean =
     s.positives > 0 && s.rr < 1.0 && s.nPairs > 1 &&
@@ -297,7 +302,7 @@ final class Learner(
   private def dpChains(seeds: Seq[String],
                        singles: Map[String, ConjStats]): Seq[Seq[ConjStats]] = {
     val chains = seeds.map(singles)
-      .filter(s0 => s0.positives > 0 && s0.rr >= seedRrCut)
+      .filter(passesSeedCut)
       .map(s0 => mutable.ArrayBuffer(s0))
     var live = chains
     var depth = 1
@@ -355,10 +360,7 @@ final class Learner(
   private[graft] def refinableSeeds(singles: Map[String, ConjStats]): Seq[String] = {
     val minRr = budgetMinRr
     schemes.map(_.name)
-      .filter { s =>
-        val st = singles(s); st.positives > 0 && st.rr >= seedRrCut
-      }
-      .filter(s => singles(s).rr >= minRr)
+      .filter(s => passesSeedCut(singles(s)) && singles(s).rr >= minRr)
       .sortBy(s => singles(s).key)(Ordering[(Double, Long, Long)].reverse)
   }
 
@@ -394,9 +396,7 @@ final class Learner(
     // candidate from a process pool, optimizers.py:73-99; at Spark
     // batch costs a below-cutoff seed's refinements are corpus-scale
     // work for conjunctions the budget loop usually refuses.)
-    val passing = schemes.map(_.name).filter { s =>
-      val st = singles(s); st.positives > 0 && st.rr >= seedRrCut
-    }
+    val passing = schemes.map(_.name).filter(s => passesSeedCut(singles(s)))
     val primary = refinableSeeds(singles)
     val learned = learnFrom(primary, singles)
     if (passing.size == primary.size) return learned
@@ -432,9 +432,7 @@ final class Learner(
     * preserve it, so the list equals the per-seed DP's. */
   private[graft] def learnFrom(extendSeeds: Seq[String],
                                singles: Map[String, ConjStats]): Seq[ConjStats] = {
-    val passing = schemes.map(_.name).filter { s =>
-      val st = singles(s); st.positives > 0 && st.rr >= seedRrCut
-    }
+    val passing = schemes.map(_.name).filter(s => passesSeedCut(singles(s)))
     val rest = passing.filterNot(extendSeeds.contains)
     (dpChains(extendSeeds, singles).flatten ++ rest.map(singles))
       .distinctBy(_.conjunction.sorted)
@@ -446,17 +444,4 @@ final class Learner(
     if (ownsLabels) labelsCached.unpersist()
     ()
   }
-}
-
-object Learner {
-  /** Daemon pool for the pipeline's cache-prewarm overlap
-    * ([[graft.pipeline.Dedupe.run]]) — daemon threads so a crashed
-    * driver never hangs on pool shutdown. */
-  private[graft] val prewarmEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "learner-prewarm")
-        t.setDaemon(true)
-        t
-      }))
 }

@@ -2,9 +2,8 @@ package graft.cluster
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
 import graft.plans.Checkpoints.release
+import graft.plans.Evaluated
 
 /** Connected components over an edge DataFrame — replaces the
   * reference's driver-memory networkx clustering
@@ -26,19 +25,15 @@ import graft.plans.Checkpoints.release
   * convergence is detected by an order-insensitive (count, xor-of-hash)
   * fingerprint — one tiny agg per round, the "convergence checkpointed
   * per superstep" demanded by the north rule. A superstep's checkpoint
-  * is released as soon as the next one is fingerprinted, so a
-  * distributed run leaves only its final round (and, on the encoded
-  * path, its id dictionary) registered.
+  * is released as soon as the next one is fingerprinted.
   *
-  * Three paths, chosen from the normalized edge count that the round-0
-  * fingerprint already yields:
+  * Two paths, chosen by one bounded read of the normalized edge set:
   *   - driver (at most [[EdgesPerPartition]] edges, string / long / int
-  *     ids): the edge set is collected once and [[DriverStars]] runs the
-  *     same rounds in driver memory — same `(id, component)` rows, same
-  *     superstep trail, no per-round Spark job, nothing left registered;
-  *   - distributed: the superstep loop below;
-  *   - encoded (string ids above [[EncodeEdgeThreshold]] edges): the
-  *     loop over dictionary-encoded long ids.
+  *     ids): [[DriverStars]] runs the same rounds over the read rows in
+  *     driver memory — same `(id, component)` rows, same superstep
+  *     trail, no per-round Spark job;
+  *   - distributed: the superstep loop below, for graphs that do not
+  *     fit the driver.
   * With `GRAFT_VERBOSE=1` each run logs its path, edge count and
   * rounds as one `[cc]` line.
   */
@@ -62,149 +57,87 @@ object ConnectedComponents {
     * and drops only the per-round jobs and barriers. */
   val EdgesPerPartition = 200000L
 
-  /** Edge count above which STRING node ids are dictionary-encoded to
-    * dense longs before the superstep loop. Every superstep is ~6
-    * exchanges keyed on node id over O(log n) rounds — long keys cut
-    * shuffle bytes and comparator cost — but the encode itself is a
-    * fixed ~5 jobs + 4 joins (distinct, range-sort, zipWithIndex,
-    * encode ×2, decode ×2): measured +3.4 s on a 15k-edge graph whose
-    * whole CC takes 4 s. Below this threshold the loop runs directly
-    * on strings; above it the superstep shuffles dwarf the encode. */
-  val EncodeEdgeThreshold = 1000000L
+  /** Rounds after which a run that has not converged fails. */
+  private[cluster] val MaxRounds = 50
 
   /** @param edges DataFrame with columns (id_l, id_r); ids any orderable
     *              atomic type (string conv_ids or long indices).
-    * @param reliableCheckpoints per-superstep materialization strategy:
-    *              false (default) = `localCheckpoint` — executor-storage
-    *              pinned, right for a single JVM; true = reliable
-    *              `checkpoint()` to the SparkContext's checkpoint dir
-    *              (caller must `setCheckpointDir`) — survives executor
-    *              loss, the cluster-grade choice under dynamic
-    *              allocation. The driver path checkpoints nothing past
-    *              the normalized edge set it collects.
     * @return (id, component) where component = min member id, plus the
     *         supersteps metric trail.
+    *
+    * Registration: a driver-path run leaves no storage registered (its
+    * result is a local frame). A distributed run leaves its final
+    * round's checkpoint registered, because the returned frame reads
+    * it lazily; nothing releases it but the ContextCleaner.
     */
-  def run(edges: DataFrame, maxRounds: Int = 50,
-          reliableCheckpoints: Boolean = false,
-          encodeThreshold: Long = EncodeEdgeThreshold)
-      : (DataFrame, Seq[Superstep]) =
-    runWith(edges, maxRounds, reliableCheckpoints, encodeThreshold,
-      driverThreshold = EdgesPerPartition)
+  def run(edges: DataFrame): (DataFrame, Seq[Superstep]) =
+    runWith(edges, driverThreshold = EdgesPerPartition)
 
   /** [[run]] with the driver/distributed choice exposed: a normalized
-    * edge set of at most `driverThreshold` edges runs on the driver
-    * (`-1` forces the distributed loop, whatever `encodeThreshold`). */
-  private[cluster] def runWith(edges: DataFrame, maxRounds: Int,
-                               reliableCheckpoints: Boolean,
-                               encodeThreshold: Long,
-                               driverThreshold: Long)
+    * edge set of at most `driverThreshold` edges runs on the driver,
+    * a larger one on the distributed loop (`-1` forces the loop). */
+  private[cluster] def runWith(edges: DataFrame, driverThreshold: Long)
       : (DataFrame, Seq[Superstep]) = {
-    // LAZY checkpoints: every materialized edge set is immediately
-    // fingerprinted, and that aggregation is the action that computes
-    // the checkpoint's final stage and stores its blocks. Under AQE
-    // `localCheckpoint(eager = false)` is not free: taking the plan's
-    // RDD runs the superstep's shuffle stages at call time, in their
-    // own SQL execution (6–7 jobs per superstep in attach_batch), and
-    // the fingerprint then runs only the final stage. The eager form
-    // would run that final stage twice (materialization job AND
-    // fingerprint job). At the edge counts the pipeline clusters after
-    // its score threshold, those per-superstep jobs and barriers were
-    // the whole cost of the loop (3.2 s for a 15k-edge graph at
-    // local[32]); such graphs now take the driver path, which
-    // materializes only `e0`.
-    // Tried and dropped: folding the fingerprint into an eager
-    // checkpoint with `Dataset.observe` cut attach_batch from 8 to 5
-    // SQL executions and 43 to 40 jobs, but CC wall time stayed the
-    // same (2.95 vs 2.92 s).
-    def materialize(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-    // normalize once: undirected, canonical a<b, deduped — materialized
-    // because the fingerprint, then the driver collect or the loop (and
-    // the encode), all read it
-    val e0 = materialize(edges
+    // normalize once: undirected, canonical a<b, deduped — evaluated
+    // once with no storage pinned, so the bounded read and the loop
+    // share its shuffle output and the caller's plan is not re-derived
+    val e0 = Evaluated.once(edges
       .select(col("id_l").as("a"), col("id_r").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct())
-    val fp0 = fingerprint(e0)
     val idType = e0.schema("a").dataType
-    val (path, (members, steps)) =
-      if (fp0._1 <= driverThreshold && DriverStars.supports(idType)) {
-        val out = DriverStars.run(e0, fp0, maxRounds)
-        release(e0)
-        "driver" -> out
-      } else if (idType != StringType || fp0._1 <= encodeThreshold)
-        "distributed" -> loop(e0, fp0, maxRounds, materialize)
-      else
-        "encoded" -> encodedLoop(e0, maxRounds, reliableCheckpoints,
-          materialize)
+    // one bounded read picks the path: at most driverThreshold + 1 rows
+    // ever reach the driver, and a read that stops short of that is
+    // the whole edge set
+    val small =
+      if (driverThreshold < 0 || !DriverStars.supports(idType)) None
+      else Some(e0.limit(Math.toIntExact(driverThreshold + 1)).collect())
+        .filter(_.length <= driverThreshold)
+    val (path, (members, steps)) = small match {
+      case Some(rows) =>
+        "driver" -> DriverStars.run(rows, idType, e0.sparkSession)
+      case None => "distributed" -> loop(e0)
+    }
     graft.Verbose.log("cc")(
-      s"path=$path edges=${fp0._1} rounds=${steps.size - 1}")
+      s"path=$path edges=${steps.head.edges} rounds=${steps.size - 1}")
     (members, steps)
   }
 
-  /** [[loop]] over dictionary-encoded string ids (see
-    * [[EncodeEdgeThreshold]]). ORDER-PRESERVING: ids assigned by
-    * zipWithIndex over range-sorted distinct ids, so min-over-idx ≡
-    * min-over-id, the canonical a<b orientation survives encoding, and
-    * the decoded component is the same min member id the string-keyed
-    * run produces. */
-  private def encodedLoop(e0: DataFrame, maxRounds: Int,
-                          reliableCheckpoints: Boolean,
-                          materialize: DataFrame => DataFrame)
-      : (DataFrame, Seq[Superstep]) = {
-    val spark = e0.sparkSession
-    val nodes = e0.select(col("a").as("id"))
-      .unionByName(e0.select(col("b").as("id")))
-      .distinct()
-      .repartitionByRange(col("id"))
-      .sortWithinPartitions(col("id"))
-    val dictSchema = StructType(Seq(
-      StructField("id", StringType, nullable = false),
-      StructField("idx", LongType, nullable = false)))
-    val dict0 = spark.createDataFrame(
-      nodes.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row(r.getString(0), i)
-      }, dictSchema)
-    val dict = if (reliableCheckpoints) dict0.checkpoint()
-               else dict0.localCheckpoint()
-    val encoded = materialize(e0
-      .join(dict.select(col("id").as("a"), col("idx").as("_ea")), "a")
-      .join(dict.select(col("id").as("b"), col("idx").as("_eb")), "b")
-      .select(col("_ea").as("a"), col("_eb").as("b")))
-    val encodedFp = fingerprint(encoded)
-    release(e0)
-    val (members, steps) = loop(encoded, encodedFp, maxRounds, materialize)
-    val decoded = members
-      .join(dict.select(col("idx").as("id"), col("id").as("_sid")), "id")
-      .join(dict.select(col("idx").as("component"), col("id").as("_scomp")),
-        "component")
-      .select(col("_sid").as("id"), col("_scomp").as("component"))
-    (decoded, steps)
-  }
-
   /** The alternating large-star/small-star loop over a normalized
-    * (undirected, canonical, deduped, materialized) edge set. Each
-    * round's star width comes from the live edge count (see
-    * [[EdgesPerPartition]]), capped at the session's shuffle width,
-    * and is passed to the stars as explicit repartition widths — the
-    * session conf is read, never set, so concurrent queries on the
-    * same session keep their own shuffle width. */
-  private def loop(e0: DataFrame, fp0: (Long, Long), maxRounds: Int,
-                   materialize: DataFrame => DataFrame)
-      : (DataFrame, Seq[Superstep]) = {
+    * (undirected, canonical, deduped) edge set. Each round's star
+    * width comes from the live edge count (see [[EdgesPerPartition]]),
+    * capped at the session's shuffle width, and is passed to the stars
+    * as explicit repartition widths — the session conf is read, never
+    * set, so concurrent queries on the same session keep their own
+    * shuffle width. */
+  private def loop(e0: DataFrame): (DataFrame, Seq[Superstep]) = {
     val outerPartitions =
       e0.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong
-    var e = e0
-    val steps = scala.collection.mutable.ArrayBuffer.empty[Superstep]
-    var fp = fp0
-    steps += Superstep(0, fp._1, fp._2)
+    // LAZY checkpoints: every materialized edge set is immediately
+    // fingerprinted, and that aggregation is the action that computes
+    // the checkpoint's final stage and stores its blocks. Under AQE
+    // `localCheckpoint(eager = false)` is not free: taking the plan's
+    // RDD runs the superstep's shuffle stages at call time, in their
+    // own SQL execution (6–7 jobs per superstep on a 100-edge graph), and
+    // the fingerprint then runs only the final stage. The eager form
+    // would run that final stage twice (materialization job AND
+    // fingerprint job). Graphs small enough for those per-superstep
+    // jobs and barriers to be the whole cost take the driver path.
+    // Tried and dropped: folding the fingerprint into an eager
+    // checkpoint with `Dataset.observe` cut attach_batch from 8 to 5
+    // SQL executions and 43 to 40 jobs, but CC wall time stayed the
+    // same (2.95 vs 2.92 s).
+    def materialize(df: DataFrame): DataFrame =
+      df.localCheckpoint(eager = false)
+    var e = materialize(e0)
+    var fp = fingerprint(e)
+    val steps =
+      scala.collection.mutable.ArrayBuffer(Superstep(0, fp._1, fp._2))
     var round = 0
     var converged = false
-    while (!converged && round < maxRounds) {
+    while (!converged && round < MaxRounds) {
       round += 1
       val width = math.max(1L,
         math.min(outerPartitions, fp._1 / EdgesPerPartition + 1)).toInt
@@ -216,7 +149,7 @@ object ConnectedComponents {
       e = next
       steps += Superstep(round, fp._1, fp._2)
     }
-    require(converged, s"CC did not converge in $maxRounds rounds")
+    require(converged, s"CC did not converge in $MaxRounds rounds")
 
     // converged edge set is a star: (member, root). Roots appear only on
     // the right; add them as their own component members.

@@ -1,15 +1,15 @@
 package graft.cluster
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import ConnectedComponents.Superstep
+import ConnectedComponents.{MaxRounds, Superstep}
 
 /** The large-star/small-star rounds of [[ConnectedComponents]] over a
   * collected edge set, in driver memory: same rounds, same edge sets
   * per round, same `Superstep` trail and the same `(id, component)`
-  * rows as the distributed loop, with no Spark job after the collect.
+  * rows as the distributed loop, with no Spark job at all.
   *
   * Bit-identity rests on three rules. Ids are ordered as Spark orders
   * them (strings as `UTF8String`, i.e. by UTF-8 bytes, not by Java's
@@ -44,15 +44,13 @@ private[cluster] object DriverStars {
   /** Whether ids of this type can run on the driver bit-identically. */
   def supports(dt: DataType): Boolean = idType(dt).isDefined
 
-  /** Run the rounds over a normalized (undirected, canonical a<b,
-    * deduplicated) edge set `e0` whose round-0 fingerprint is `fp0`.
-    * The result is a local frame: nothing of `e0` is read after
-    * `collect`. */
-  def run(e0: DataFrame, fp0: (Long, Long), maxRounds: Int)
+  /** Run the rounds over the rows `(a, b)` of a normalized
+    * (undirected, canonical a<b, deduplicated) edge set whose ids are
+    * of type `dt`. Round 0's fingerprint is computed here, as every
+    * later round's is. The result is a local frame. */
+  def run(rows: Array[Row], dt: DataType, spark: SparkSession)
       : (DataFrame, Seq[Superstep]) = {
-    val dt = e0.schema("a").dataType
     val t = idType(dt).get
-    val rows = e0.collect()
     // distinct ids in Spark's order: rank r is the r-th smallest id
     val ids: Array[(AnyRef, AnyRef)] =
       (rows.iterator.map(_.get(0)) ++ rows.iterator.map(_.get(1)))
@@ -74,12 +72,12 @@ private[cluster] object DriverStars {
 
     var e = rows.map(r => pack(rank.get(r.get(0)), rank.get(r.get(1))))
     val n = ids.length
+    var fp = fingerprint(e)
     val steps =
-      scala.collection.mutable.ArrayBuffer(Superstep(0, fp0._1, fp0._2))
-    var fp = fp0
+      scala.collection.mutable.ArrayBuffer(Superstep(0, fp._1, fp._2))
     var round = 0
     var converged = false
-    while (!converged && round < maxRounds) {
+    while (!converged && round < MaxRounds) {
       round += 1
       val next = smallStar(largeStar(e, n), n)
       val nfp = fingerprint(next)
@@ -88,7 +86,7 @@ private[cluster] object DriverStars {
       e = next
       steps += Superstep(round, fp._1, fp._2)
     }
-    require(converged, s"CC did not converge in $maxRounds rounds")
+    require(converged, s"CC did not converge in $MaxRounds rounds")
 
     // converged edge set is a star (member, root): the loop's
     // members = {(b, b)} ∪ {(a, b)}, deduplicated
@@ -96,7 +94,6 @@ private[cluster] object DriverStars {
       .map(x => Row(ids(hi(x))._2, ids(lo(x))._2))
     val schema = StructType(Seq(StructField("id", dt),
       StructField("component", dt)))
-    val spark = e0.sparkSession
     (spark.createDataFrame(java.util.Arrays.asList(members: _*), schema),
       steps.toSeq)
   }

@@ -164,6 +164,16 @@ object Dedupe {
       strat(1).unionByName(strat(0))
     } else labelsAll
 
+  /** Daemon pool for [[run]]'s cache-prewarm overlap — daemon threads
+    * so a crashed driver never hangs on pool shutdown. */
+  private val prewarmEc: scala.concurrent.ExecutionContext =
+    scala.concurrent.ExecutionContext.fromExecutor(
+      java.util.concurrent.Executors.newCachedThreadPool(r => {
+        val t = new Thread(r, "learner-prewarm")
+        t.setDaemon(true)
+        t
+      }))
+
   /** `turns` overrides the default parquet ingest with a user-supplied
     * transcript-turn DataFrame of [[graft.synth.Transcripts.turnSchema]]
     * shape — the reference's documented CSV entry path
@@ -249,7 +259,7 @@ object Dedupe {
     val tfN = tfN0.cache()
     scala.concurrent.Future {
       tfN.count(); tfW.count()
-    }(graft.block.Learner.prewarmEc)
+    }(prewarmEc)
     val conjunctions = staged("conjunctions", Seq("records"),
       Some(idConj)) {
       val learner = new Learner(records, labels, cfg.blockingAttrs,

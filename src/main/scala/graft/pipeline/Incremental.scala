@@ -27,10 +27,9 @@ import graft.sim.Distances
   * pass, one groupBy(id) min(struct) for the argmax attach — partial
   * aggregation, no window — and a CC run sized to the LEFTOVER batch,
   * not the corpus. A leftover graph of at most 200k edges (an ingest
-  * batch's, in practice) runs CC's rounds on the driver: after the
-  * normalize and fingerprint CC collects the edges once, with no
-  * per-round job and no checkpoint left behind; a larger one takes the
-  * distributed loop. The attach result is evaluated once, nothing
+  * batch's, in practice) runs CC's rounds on the driver: CC collects
+  * the edges once, with no per-round job and no checkpoint left
+  * behind; a larger one takes the distributed loop. The attach result is evaluated once, nothing
   * pinned: the leftover anti-join (read by CC and by `fresh`) and the
   * returned union all read one [[Evaluated.once]] frame, so the
   * linkage blocking, hydration, scoring and argmax shuffles run once

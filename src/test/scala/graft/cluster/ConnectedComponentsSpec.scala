@@ -36,14 +36,9 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
   }
 
   /** The distributed superstep loop, forced: without `driverThreshold
-    * = -1` a graph this small runs on the driver, whatever the other
-    * knobs say. */
-  private def distributedCC(df: org.apache.spark.sql.DataFrame,
-                            encodeThreshold: Long =
-                              ConnectedComponents.EncodeEdgeThreshold,
-                            reliableCheckpoints: Boolean = false) =
-    ConnectedComponents.runWith(df, maxRounds = 50, reliableCheckpoints,
-      encodeThreshold, driverThreshold = -1L)
+    * = -1` a graph this small runs on the driver. */
+  private def distributedCC(df: org.apache.spark.sql.DataFrame) =
+    ConnectedComponents.runWith(df, driverThreshold = -1L)
 
   test("simple chain + triangle + isolated pair") {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "e"),
@@ -63,31 +58,6 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
         f"n${rnd.nextInt(26)}%02d")).filter(e => e._1 != e._2)
       assert(sparkCC(edges) == bruteForce(edges))
     }
-  }
-
-  test("dictionary-encoded path (forced) equals the direct string path " +
-    "and brute force") {
-    val rnd = new scala.util.Random(7)
-    val edges = Seq.fill(30)((f"n${rnd.nextInt(30)}%02d",
-      f"n${rnd.nextInt(30)}%02d")).filter(e => e._1 != e._2)
-    val df = edges.toDF("id_l", "id_r")
-    // encodeThreshold = 0 forces the dict-encode path a big graph takes
-    val (enc, encSteps) = distributedCC(df, encodeThreshold = 0L)
-    val got = enc.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got == bruteForce(edges))
-    assert(got == sparkCC(edges)) // default (driver) path, same components
-    assert(encSteps.nonEmpty)
-  }
-
-  test("reliable checkpoints produce identical components") {
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val edges = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id_l", "id_r")
-    val (local, _) = ConnectedComponents.run(edges)
-    val (reliable, _) = distributedCC(edges, reliableCheckpoints = true)
-    assert(reliable.collect().toSet == local.collect().toSet)
   }
 
   test("superstep trail is recorded and converges") {
@@ -121,21 +91,14 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
 
   test("a run leaves only its final round's checkpoint registered") {
     val chain = (0 until 40).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
-    // string path: the final round; dictionary-encoded path (forced by
-    // encodeThreshold 0): the final round plus the id dictionary, which
-    // the lazy decode of the result still reads
-    for ((threshold, kept) <-
-           Seq(ConnectedComponents.EncodeEdgeThreshold -> 1, 0L -> 2)) {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val (members, steps) = distributedCC(
-        chain.toDF("id_l", "id_r"), encodeThreshold = threshold)
-      val got = members.collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(got == bruteForce(chain))
-      assert(added.size == kept, s"encodeThreshold $threshold: " +
-        s"${steps.size - 1} rounds left ${added.size} persistent RDDs")
-    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (members, steps) = distributedCC(chain.toDF("id_l", "id_r"))
+    val got = members.collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(got == bruteForce(chain))
+    assert(added.size == 1,
+      s"${steps.size - 1} rounds left ${added.size} persistent RDDs")
   }
 
   /** Both paths on one edge frame: members, schema and trail must agree. */
@@ -222,8 +185,36 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
     assert(got == bruteForce(chain))
     assert(steps.size >= 3)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
-    // normalize (1) + fingerprint (2) + one collect, whatever the round
-    // count (7 here); the distributed loop adds 8–9 jobs per round
-    assert(jobs.get <= 4, s"${jobs.get} jobs for ${steps.size - 1} rounds")
+    // 2 jobs, whatever the round count (7 here): the normalize's
+    // shuffle-map stage and one bounded read; the distributed loop adds
+    // 8–9 jobs per round
+    assert(jobs.get <= 2, s"${jobs.get} jobs for ${steps.size - 1} rounds")
+  }
+
+  test("the driver threshold counts normalized edges, not raw rows") {
+    val threshold = 6L
+    // 9 raw rows — a duplicate, a reversed and a self-loop edge among
+    // them — normalize to exactly `threshold` edges
+    val atThreshold = Seq(("a", "b"), ("b", "a"), ("a", "b"), ("b", "c"),
+      ("c", "c"), ("c", "d"), ("x", "y"), ("y", "z"), ("p", "q"))
+    val overThreshold = atThreshold :+ ("q" -> "r")
+    val sc = spark.sparkContext
+    // at the threshold: the driver path, nothing registered; one edge
+    // over: the distributed loop, its final round registered. The
+    // trail must equal the other path's (`otherPath` forces it).
+    for ((edges, kept, otherPath) <- Seq(
+           (atThreshold, 0, -1L), (overThreshold, 1, threshold + 1))) {
+      val df = edges.toDF("id_l", "id_r")
+      val before = sc.getPersistentRDDs.keySet
+      val (members, steps) = ConnectedComponents.runWith(df, threshold)
+      val got = members.collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(got == bruteForce(edges))
+      assert(steps.head.edges == threshold + kept)
+      assert(added.size == kept, s"${steps.head.edges} edges left " +
+        s"${added.size} persistent RDDs")
+      assert(steps == ConnectedComponents.runWith(df, otherPath)._2)
+    }
   }
 }
