@@ -1,70 +1,126 @@
 package graft.ml
 
 import org.apache.spark.ml.Transformer
-import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel, RandomForestClassificationModel, RandomForestClassifier}
+import org.apache.spark.ml.classification.{GraftModelBridge, LogisticRegression, LogisticRegressionModel, RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import graft.plans.Evaluated
 
 /** Match classifier (reference M2/M3: sklearn RandomForest behind a
   * FastAPI HTTP hop, oagdedupe fastapi/fapi.py:161-184 + orm.py:251-288
-  * 50k-row chunked HTTP scoring). Rebuilt on spark.ml — training runs
-  * over a PINNED copy of the tiny labeled set (one job per L-BFGS
-  * iteration or tree level, plus the summary passes), scoring is ONE
-  * distributed `model.transform` pass with no chunking and no HTTP
-  * hops.
+  * 50k-row chunked HTTP scoring). Models are spark.ml models; scoring
+  * is ONE distributed `model.transform` pass with no chunking and no
+  * HTTP hops.
   *
   * Two algorithms behind the same seam: [[Logistic]] (the north star
   * names logistic regression) and [[RandomForest]] (the reference's
   * actual sklearn model). Both are ProbabilisticClassificationModels,
   * so [[score]] reads P(match) identically from either.
+  *
+  * Training, like the reference's in-process sklearn fit, is sized for
+  * a small labeled set. A logistic training set of at most
+  * [[DriverFitRows]] rows is fitted on the driver ([[DriverLogistic]]:
+  * the same objective, no Spark job per iteration) into a real
+  * `LogisticRegressionModel`; a larger one, and every random forest,
+  * is fitted by spark.ml over a pinned copy of the input (one job per
+  * L-BFGS iteration or tree level, plus the summary passes).
   */
 object MatchClassifier {
 
   val Logistic = "logistic"
   val RandomForest = "random_forest"
 
+  /** Logistic training sets of at most this many rows are fitted on
+    * the driver: 100k rows × a handful of features is a few MB, and a
+    * Newton step over them takes milliseconds. */
+  private val DriverFitRows = 100000
+
   /** Train on labeled pairs carrying feature columns + `label`.
     *
-    * The input is featurized ONCE: `featureCols :+ "label"` is pinned
-    * with one eager `localCheckpoint()` and the fit reads the pin.
-    * spark.ml's fit makes several passes over its input (class counts,
-    * feature summary, the instance RDD, the training summary), and on
-    * an unpinned plan each pass re-runs the whole upstream
-    * featurization. The pin is released when `train` returns, so the
-    * model's lazily computed training `summary` metrics (which re-read
-    * the training frame) fail afterwards — score with [[score]]
-    * instead.
+    * The input is featurized ONCE. For [[Logistic]], `featureCols :+
+    * "label"` is evaluated once (`Evaluated.once`) and one bounded read
+    * of at most [[DriverFitRows]] + 1 rows picks the path: a read that
+    * stops short is the whole training set and is fitted on the
+    * driver; otherwise spark.ml fits a pin of the same evaluated frame.
+    *
+    * The spark.ml paths pin their input with one eager
+    * `localCheckpoint()`, because spark.ml's fit makes several passes
+    * over it (class counts, feature summary, the instance RDD, the
+    * training summary), and on an unpinned plan each pass re-runs the
+    * whole upstream featurization. The pin is released when `train`
+    * returns, so the model's lazily computed training `summary`
+    * metrics (which re-read the training frame) fail afterwards; a
+    * driver-fitted model has no summary. Score with [[score]] instead.
+    *
+    * With `GRAFT_VERBOSE=1` each call logs its path, rows and
+    * iterations as one `[ml]` line.
     */
   def train(labeledFeatures: DataFrame, featureCols: Seq[String],
-            algo: String = Logistic): Transformer = {
-    val pinned = labeledFeatures
-      .select((featureCols :+ "label").map(col): _*)
-      .localCheckpoint()
-    val assembled = assemble(pinned, featureCols)
-    try algo match {
+            algo: String = Logistic): Transformer =
+    trainWith(labeledFeatures, featureCols, algo, DriverFitRows)
+
+  /** [[train]] with the driver/spark.ml choice exposed: a logistic
+    * training set of at most `driverRows` rows is fitted on the driver,
+    * a larger one by spark.ml (`-1` forces spark.ml). */
+  private[graft] def trainWith(labeledFeatures: DataFrame,
+                               featureCols: Seq[String], algo: String,
+                               driverRows: Int): Transformer = {
+    val input = labeledFeatures.select((featureCols :+ "label").map(col): _*)
+    algo match {
       case Logistic =>
-        new LogisticRegression()
+        val lr = new LogisticRegression()
           .setMaxIter(100)
           .setRegParam(0.0)
           .setLabelCol("label")
           .setFeaturesCol("features")
-          .fit(assembled)
+        val evaluated = if (driverRows < 0) input else Evaluated.once(input)
+        // one bounded read: at most driverRows + 1 rows reach the driver
+        val small =
+          if (driverRows < 0) None
+          else Some(evaluated.limit(driverRows + 1).collect())
+            .filter(_.length <= driverRows)
+        small match {
+          case Some(rows) =>
+            val fit = DriverLogistic.fit(rows, featureCols, lr.getMaxIter,
+              lr.getTol)
+            graft.Verbose.log("ml")(
+              s"path=driver rows=${rows.length} iters=${fit.iterations}")
+            GraftModelBridge.logisticModel(lr, fit.coefficients,
+              fit.intercept, fit.numClasses)
+          case None =>
+            pinned(evaluated, featureCols)(lr.fit)(
+              m => s"iters=${m.summary.totalIterations}")
+        }
       case RandomForest =>
         // reference defaults (sklearn RandomForestClassifier wrapped in
         // fapi.py:161-184); seeded for deterministic resume
-        new RandomForestClassifier()
+        val rf = new RandomForestClassifier()
           .setNumTrees(100)
           .setSeed(42L)
           .setLabelCol("label")
           .setFeaturesCol("features")
-          .fit(assembled)
+        pinned(input, featureCols)(rf.fit)(_ => s"trees=${rf.getNumTrees}")
       case a => throw new IllegalArgumentException(s"unknown classifier $a")
     }
-    finally pinned.queryExecution.logical match {
+  }
+
+  /** spark.ml's `fit` over one eager pin of `input`, released on
+    * return; `detail` ends the model's `[ml]` log line. */
+  private def pinned[M <: Transformer](input: DataFrame,
+                                       featureCols: Seq[String])
+                                      (fit: DataFrame => M)
+                                      (detail: M => String): M = {
+    val pin = input.localCheckpoint()
+    try {
+      val model = fit(assemble(pin, featureCols))
+      graft.Verbose.log("ml")(
+        s"path=spark rows=${pin.count()} ${detail(model)}")
+      model
+    } finally pin.queryExecution.logical match {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }

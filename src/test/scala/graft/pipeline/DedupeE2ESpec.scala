@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
+import graft.ml.MatchClassifier
 
 /** The BASELINE.json gate: the full learned-blocking pipeline must
   * reproduce the planted entity clusters at pairwise F1 ≥ 0.99 on the
@@ -67,29 +69,65 @@ class DedupeE2ESpec extends AnyFunSuite with SparkSuite {
     assert(resumed.clusters.orderBy("id").collect().toSeq == firstClusters)
   }
 
-  test("random_forest classifier reaches the same F1 gate (fixed blocking)") {
+  /** The planted labels and fixed-blocking candidate pairs, featurized
+    * with the pipeline's feature vector (5 distances + TF-IDF cosine),
+    * passed to `check` with the feature column names. */
+  private def withFixedBlocking(check: (DataFrame, DataFrame, Seq[String]) => Unit)
+      : Unit = {
     import graft.block.{Blocking, BoundScheme, FirstNChars, Labels}
-    import graft.ml.MatchClassifier
     import graft.sim.Distances
     val records = graft.normalize.Normalize.normalize(
       graft.synth.Transcripts.transcripts(spark, sfDir)).cache()
     val labels = Labels.plantedLabels(spark, sfDir)
     val pairs = Blocking.candidatePairs(records,
       Seq(BoundScheme(FirstNChars(8), "head_text")))
-    // same feature vector as the pipeline: 5 distances + TF-IDF cosine
-    def featurize(p: org.apache.spark.sql.DataFrame) =
+    def featurize(p: DataFrame) =
       Distances.features(p, records)
         .join(graft.sim.TfIdf.cosine(p.select("id_l", "id_r"), records),
           Seq("id_l", "id_r"))
     val cols = Seq("jw_head", "jw_role", "jw_full", "lev_full", "jac_full",
       "tfidf_cos")
-    val model = MatchClassifier.train(
+    try check(
       featurize(labels.select("id_l", "id_r")).join(labels, Seq("id_l", "id_r")),
-      cols, MatchClassifier.RandomForest)
-    val scored = MatchClassifier.score(model, featurize(pairs), cols)
-    val (f1, tp, fp, fn) = Dedupe.pairwiseF1(spark, sfDir, scored)
-    info(s"RF f1=$f1 tp=$tp fp=$fp fn=$fn")
-    assert(f1 >= 0.99, s"RF pairwise F1 $f1 below gate (tp=$tp fp=$fp fn=$fn)")
-    records.unpersist()
+      featurize(pairs), cols)
+    finally records.unpersist()
+  }
+
+  test("random_forest classifier reaches the same F1 gate (fixed blocking)") {
+    withFixedBlocking { (train, pairFeatures, cols) =>
+      val model = MatchClassifier.train(train, cols, MatchClassifier.RandomForest)
+      val scored = MatchClassifier.score(model, pairFeatures, cols)
+      val (f1, tp, fp, fn) = Dedupe.pairwiseF1(spark, sfDir, scored)
+      info(s"RF f1=$f1 tp=$tp fp=$fp fn=$fn")
+      assert(f1 >= 0.99, s"RF pairwise F1 $f1 below gate (tp=$tp fp=$fp fn=$fn)")
+    }
+  }
+
+  test("logistic fits on the driver and in spark.ml match the same pairs " +
+    "(fixed blocking)") {
+    import org.apache.spark.ml.classification.LogisticRegressionModel
+    withFixedBlocking { (train0, pairFeatures, cols) =>
+      val train = train0.cache()
+      val feats = pairFeatures.cache()
+      def matches(m: LogisticRegressionModel) =
+        MatchClassifier.score(m, feats, cols).filter(col("score") > 0.8)
+          .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      val d = MatchClassifier.train(train, cols)
+        .asInstanceOf[LogisticRegressionModel]
+      val s = MatchClassifier.trainWith(train, cols, MatchClassifier.Logistic,
+        driverRows = -1).asInstanceOf[LogisticRegressionModel]
+      // the labeled set is separable: the two fits stop at different
+      // finite coefficients, so predictions are compared, not weights
+      val drift = (d.coefficients.toArray :+ d.intercept)
+        .zip(s.coefficients.toArray :+ s.intercept)
+        .map { case (x, y) => math.abs(x - y) }.max
+      val (md, ms) = (matches(d), matches(s))
+      info(f"${train.count()} labels, ${feats.count()} pairs, ${md.size} " +
+        f"matched; driver ${d.coefficients} ${d.intercept}%.3f, spark.ml " +
+        f"${s.coefficients} ${s.intercept}%.3f, drift $drift%.3f")
+      assert(!d.hasSummary && s.hasSummary, "each fit took its own path")
+      assert(md.nonEmpty && md == ms)
+      train.unpersist(); feats.unpersist()
+    }
   }
 }
