@@ -115,13 +115,14 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     assert(learned == perSeed)
   }
 
-  test("one stats batch per DP depth") {
+  /** Run `body`, counting the jobs it starts and the distinct SQL
+    * executions they belong to (told apart by a local property; a
+    * sentinel job afterwards proves the asynchronous listener bus has
+    * delivered every earlier job). */
+  private def counting[T](body: => T): (T, Int, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val l = twoAttrLearner()
-    // distinct SQL executions whose jobs ran inside learn(), told apart
-    // by a local property; a sentinel job after learn() proves the
-    // (asynchronous) listener bus has delivered every earlier job
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
@@ -129,6 +130,7 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
         Option(e.properties).foreach { p =>
           p.getProperty("graft.spec") match {
             case "learn" =>
+              jobs.incrementAndGet()
               Option(p.getProperty("spark.sql.execution.id")).foreach(execs.add)
             case "sentinel" => drained.countDown()
             case _ =>
@@ -138,25 +140,118 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty("graft.spec", "learn")
-      l.learn()
+      val t = body
       sc.setLocalProperty("graft.spec", "sentinel")
       spark.range(1).collect()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (t, jobs.get, execs.size)
     } finally {
       sc.setLocalProperty("graft.spec", null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("one stats batch per DP depth") {
+    val l = twoAttrLearner().withDriverChars(-1)
+    val (_, _, execs) = counting(l.learn())
     // premise: several refined seeds and no coverage escalation (every
     // passing seed is refinable) — all read from the memo, no new jobs
     val singles = l.scoreBatch(Nil, l.schemes.map(_.name))
     val seeds = l.refinableSeeds(singles)
     assert(seeds.size >= 3)
     assert(seeds.size == l.schemes.count(s => singles(s.name).positives > 0))
+    assert(l.path == "spark")
     l.unpersist()
     // k = 3 depths (singles, depth 1, depth 2), one action each, plus
-    // the one corpus count behind rr; a per-seed DP runs 1 + 2·seeds
-    // batches
-    assert(execs.size <= 3 + 1, s"${execs.size} SQL executions in learn()")
+    // at most one for the corpus sum behind rr; a per-seed DP runs
+    // 1 + 2·seeds batches
+    assert(execs <= 3 + 1, s"$execs SQL executions in learn()")
+  }
+
+  test("a driver-path learn() runs only the bounded reads' jobs and " +
+    "registers nothing") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val l = twoAttrLearner()
+    val (learned, jobs, _) = counting(l.learn())
+    assert(l.path == "driver" && learned.nonEmpty)
+    l.unpersist()
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    // one job, the corpus sum; the labels and the signature table are
+    // local relations here, read with no job. The Spark path runs 3
+    // stats batches on top.
+    assert(jobs <= 1, s"$jobs jobs in a driver-path learn()")
+  }
+
+  test("the path bound counts attribute chars, not rows") {
+    // three rows, over the char bound between them
+    val long = "abcdefghij" * 70001
+    val recs = Seq(("a", long, "u a"), ("b", long, "u a"),
+      ("c", long.reverse, "t t")).toDF("conv_id", "head_text", "role_seq")
+    val big = new Learner(recs, labels, Seq("head_text", "role_seq"))
+    assert(big.path == "spark")
+    // the same rows with short strings take the driver path
+    val small = new Learner(recs.withColumn("head_text", $"conv_id"), labels,
+      Seq("head_text", "role_seq"))
+    assert(small.path == "driver")
+  }
+
+  /** Every conjunction with at most one n-gram scheme of up to three
+    * of `l`'s schemes. */
+  private def candidates(l: Learner): Seq[Seq[String]] = {
+    val names = l.schemes.map(_.name)
+    (1 to 3).flatMap(names.combinations)
+      .filter(_.count(_.startsWith("find_ngrams")) <= 1)
+  }
+
+  /** learn() and every scored conjunction on the driver path equal the
+    * forced Spark path's; `all` adds candidates to score on both. */
+  private def assertPathsAgree(make: () => Learner,
+                               all: Learner => Seq[Seq[String]]): Unit = {
+    val (driver, sparkPath) = (make(), make().withDriverChars(-1))
+    try {
+      assert(driver.learn() == sparkPath.learn())
+      driver.scoreAll(all(driver))
+      sparkPath.scoreAll(all(sparkPath))
+      assert(driver.path == "driver" && sparkPath.path == "spark")
+      assert(driver.memo.nonEmpty)
+      assert(driver.memo == sparkPath.memo)
+    } finally { driver.unpersist(); sparkPath.unpersist() }
+  }
+
+  test("driver and Spark stats paths agree on every candidate: " +
+    "edge-case fixture") {
+    // the 6 records plus: a null and an "" attribute (null / "" and
+    // empty-array signatures), repeated n-grams, role "t t" exactly at
+    // the cap of 3 and role "u a" over it (4 rows)
+    val recs = train.union(Seq[(String, String, String)](
+      ("r7", null, "u a"), ("r8", "", ""),
+      ("r9", "aaaaaaaaaaaa", "t t"), ("r10", "aaaaaaaaab", "t t"),
+      ("r11", "gamma delta", "a t")).toDF("conv_id", "head_text", "role_seq"))
+    // a duplicate label row, a pair with an end missing from the
+    // corpus, a reversed pair, pairs sharing only an at-cap or an
+    // over-cap role key
+    val labs = Seq(("r1", "r2", 1), ("r1", "r2", 1), ("r2", "r1", 1),
+      ("r5", "r6", 0), ("r3", "zz", 1), ("r9", "r10", 1),
+      ("r3", "r11", 0), ("r6", "r9", 1), ("r5", "r7", 1))
+      .toDF("id_l", "id_r", "label")
+    assertPathsAgree(() => new Learner(recs, labs, Seq("head_text", "role_seq"),
+      k = 3, seedRrCut = 0.0, maxBlockSize = 3), candidates)
+  }
+
+  test("driver and Spark stats paths agree on every candidate: " +
+    "planted sf0.001, all 33 schemes") {
+    val sfDir = "/root/testdata/sf0.001"
+    val recs = graft.normalize.Normalize.normalize(
+      graft.synth.Transcripts.transcripts(spark, sfDir)).cache()
+    val labs = Labels.plantedLabels(spark, sfDir).cache()
+    try {
+      // the scored memo of learn() (every depth's candidates) and all
+      // 33 single-scheme conjunctions
+      assertPathsAgree(() => new Learner(recs, labs,
+        graft.normalize.Normalize.blockingAttributes),
+        l => l.schemes.map(b => Seq(b.name)))
+    } finally { recs.unpersist(); labs.unpersist() }
   }
 
   test("coverage-gap escalation: refinements of budget-refused seeds " +
@@ -183,6 +278,7 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
       .toDF("id_l", "id_r", "label")
     val l = new Learner(recs, labs, Seq("head_text", "role_seq"), k = 3,
       seedRrCut = 0.0, maxBlockSize = 100, maxCompare = 2L)
+      .withDriverChars(-1)
     val singles = l.scoreBatch(Nil, l.schemes.map(_.name))
     // premise: covering seeds exist but every one is budget-refused at
     // depth 1, so the eager criterion refines nothing
@@ -195,6 +291,12 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     // holds multi-scheme refinements and covers BOTH labeled positives
     assert(admitted.nonEmpty && admitted.forall(_.conjunction.size > 1))
     assert(l.coveredPositives(admitted.map(_.conjunction)) == 2L)
+    // the driver path's guard escalates to the same list
+    val d = new Learner(recs, labs, Seq("head_text", "role_seq"), k = 3,
+      seedRrCut = 0.0, maxBlockSize = 100, maxCompare = 2L)
+    assert(d.learn() == learned && d.path == "driver")
+    assert(d.coveredPositives(admitted.map(_.conjunction)) == 2L)
+    l.unpersist()
   }
 
   test("unpersist leaves a caller-cached labels frame cached") {
@@ -204,7 +306,7 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     try {
       own.count()
       val l = new Learner(train, own, Seq("head_text"), k = 2,
-        seedRrCut = 0.0, maxBlockSize = 100)
+        seedRrCut = 0.0, maxBlockSize = 100).withDriverChars(-1)
       l.score(Seq("exactmatch_head_text"))
       l.unpersist()
       assert(own.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
