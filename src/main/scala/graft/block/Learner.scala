@@ -1,6 +1,6 @@
 package graft.block
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
@@ -50,11 +50,12 @@ final case class ConjStats(
   * at the first batch, one job sums the corpus rows and the blocking
   * attributes' chars (an attribute of n chars has at most 3n + 8
   * signatures, so the sum bounds the signature table without
-  * evaluating a scheme). At most 200,000 rows and 2,000,000 chars,
-  * with at most 20,000 label rows in one bounded read, collect the
-  * validated signature table once, and every later batch runs no
-  * Spark job: each candidate's block keys are built with the plan's
-  * own hash chain — from 0, per scheme in conjunction order,
+  * evaluating a scheme). At most 200,000 rows and 2,000,000 chars
+  * ([[SmallCorpus]]), with at most 20,000 label rows in one bounded
+  * read, collect the validated signature table once, and every later
+  * batch runs no Spark job: each candidate's block keys are built
+  * with the plan's own hash chain — from 0, per scheme in conjunction
+  * order,
   * `XxHash64Function.hash(sig, StringType, hash(h, LongType, 42))`,
   * which is what `xxhash64(h, sig)` evaluates — so both paths give
   * identical `ConjStats`. Larger corpora take the Spark batches.
@@ -135,16 +136,8 @@ final class Learner(
     cached(corpusSigs.join(ids, Seq(idCol), "left_semi"))
   }
 
-  /** (rows, Σ attribute chars) of the corpus — one job, no exchange:
-    * per-partition sums folded on the driver. The char sum bounds the
-    * signature table without evaluating any scheme: an attribute of
-    * length n has at most 3n + 8 signatures. */
-  private lazy val volume: (Long, Long) = {
-    val chars = attrs.map(a => coalesce(length(col(a)).cast("long"), lit(0L)))
-      .reduce(_ + _)
-    records.select(chars).as(Encoders.scalaLong).rdd.aggregate((0L, 0L))(
-      (v, c) => (v._1 + 1, v._2 + c), (a, b) => (a._1 + b._1, a._2 + b._2))
-  }
+  /** (rows, Σ attribute chars) of the corpus ([[SmallCorpus.volume]]). */
+  private lazy val volume: (Long, Long) = SmallCorpus.volume(records, attrs)
   private lazy val nComparisons: Double = {
     val n = volume._1.toDouble
     n * (n - 1) / 2.0
@@ -152,19 +145,18 @@ final class Learner(
 
   // the driver path's char bound; the test seam sets -1 to force the
   // Spark path
-  private var driverChars = Learner.DriverChars
+  private var driverChars = SmallCorpus.MaxChars
   private var pathChosen = false
 
   /** The driver path's data, or None for the Spark path — chosen once,
-    * at the first stats batch: a corpus of at most `DriverRows` rows
-    * and `driverChars` attribute chars whose labels fit one bounded
-    * read of at most `DriverLabels` rows. The signature table is then
-    * collected once; nothing is cached. */
+    * at the first stats batch: a [[SmallCorpus]] (with `driverChars`
+    * as its char bound) whose labels fit one bounded read of at most
+    * `DriverLabels` rows. The signature table is then collected once;
+    * nothing is cached. */
   private lazy val local: Option[DriverStats] = {
     pathChosen = true
     val idType = records.schema(idCol).dataType
-    val (rows, chars) = volume
-    if (rows > Learner.DriverRows || chars > driverChars ||
+    if (!SmallCorpus.fits(volume, driverChars) ||
         !DriverStats.supports(idType) ||
         Seq("id_l", "id_r").exists(labels.schema(_).dataType != idType)) None
     else {
@@ -548,11 +540,6 @@ final class Learner(
 }
 
 object Learner {
-  // driver-path bounds (see `local`). Measured on 4 vCPUs: a corpus of
-  // 2.42M attribute chars learns in 14 s on the driver vs 32–47 s in
-  // Spark batches, and the collected signature table is about 53 bytes
-  // per char (52 MB at sf0.01), so the bound leaves room in a 3 GB heap
-  private val DriverRows = 200000L
-  private val DriverChars = 2000000L
+  // the driver path's label-row bound (see `local`)
   private val DriverLabels = 20000
 }

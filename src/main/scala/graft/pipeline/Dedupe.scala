@@ -2,7 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.block.{Blocking, BoundScheme, ConjStats, Labels, Learner}
+import graft.block.{Blocking, BoundScheme, ConjStats, DriverPairs, Labels,
+  Learner, SmallCorpus}
 import graft.cluster.ConnectedComponents
 import graft.io.TableIO
 import graft.ml.MatchClassifier
@@ -84,38 +85,73 @@ object Dedupe {
   /** Conjunctions applied per budget step of [[budgetPairs]]. */
   private val BudgetChunk = 8
 
+  /** The most pairs, summed over the admitted conjunctions' `nPairs`,
+    * that [[budgetPairs]] emits on the driver. A conjunction's `nPairs`
+    * counts a pair once per shared key, so the sum bounds every pair the
+    * driver path holds at once. */
+  private[graft] val DriverPairBound = 200000L
+
   /** Candidate pairs of the best-first `admitted` conjunctions under the
     * covered-pair budget (n_covered, blocking.py:43-98): the reference
     * counts after EVERY conjunction (one SQL round-trip each); here
-    * conjunctions are applied in chunks of [[BudgetChunk]] — one
-    * [[Blocking.chunkPairs]] pass (a single grouped-pairs pipeline for
-    * the whole chunk), one conflict-skip append and one count per
-    * chunk — so the budget can overshoot by at most one chunk, and
-    * no chunk starts once `nCovered` pairs are covered.
+    * conjunctions are applied in chunks of [[BudgetChunk]], with one
+    * conflict-skip append and one count per chunk, so the budget can
+    * overshoot by at most one chunk, and no chunk starts once `nCovered`
+    * pairs are covered.
     *
-    * Each step's accumulated pairs are checkpointed to cut the
-    * lineage, and the step it replaces is released once the new one
-    * is materialized: only the returned (final) checkpoint stays
-    * registered.
+    * Two paths, one loop. A small corpus ([[graft.block.SmallCorpus]]
+    * over the admitted schemes' attributes, with string, long or int
+    * ids) whose admitted conjunctions bound the pairs (`bound`, their
+    * summed `nPairs`, at most `driverBound`) runs on the driver: its
+    * validated signature table is collected once and every chunk is
+    * [[graft.block.DriverPairs]], with no Spark job; the result is a
+    * local frame and nothing is checkpointed. Otherwise each chunk is
+    * one [[Blocking.chunkPairs]] pass (a single grouped-pairs pipeline
+    * for the whole chunk); each step's accumulated pairs are
+    * checkpointed to cut the lineage, and the step it replaces is
+    * released once the new one is materialized: only the returned
+    * (final) checkpoint stays registered. A test may pass
+    * `driverBound = -1` to force the Spark path.
     */
   private[graft] def budgetPairs(records: DataFrame,
                                  admitted: Seq[Seq[BoundScheme]],
+                                 bound: Long,
                                  nCovered: Long,
-                                 maxBlockSize: Int): DataFrame = {
+                                 maxBlockSize: Int,
+                                 driverBound: Long = DriverPairBound)
+      : DataFrame = {
+    lazy val volume = SmallCorpus.volume(records,
+      admitted.flatten.map(_.attr).distinct)
+    val driver =
+      if (bound <= driverBound && SmallCorpus.fits(volume))
+        DriverPairs(records, admitted.flatten.distinct, "conv_id",
+          maxBlockSize)
+      else None
     var acc: DataFrame = null
     var covered = 0L
-    val chunks = admitted.grouped(BudgetChunk)
-    while (chunks.hasNext && covered < nCovered) {
-      val p = Blocking.chunkPairs(records, chunks.next(), "conv_id",
-        maxBlockSize)
-      val next = (if (acc == null) p
-        else acc.unionByName(p.join(acc, Seq("id_l", "id_r"), "left_anti")))
-        .localCheckpoint()
-      covered = next.count()
-      if (acc != null) Checkpoints.release(acc)
-      acc = next
+    var chunks = 0
+    val it = admitted.grouped(BudgetChunk)
+    while (it.hasNext && covered < nCovered) {
+      val chunk = it.next()
+      covered = driver match {
+        case Some(d) => d.add(chunk)
+        case None =>
+          val p = Blocking.chunkPairs(records, chunk, "conv_id", maxBlockSize)
+          val next = (if (acc == null) p
+            else acc.unionByName(p.join(acc, Seq("id_l", "id_r"), "left_anti")))
+            .localCheckpoint()
+          val n = next.count()
+          if (acc != null) Checkpoints.release(acc)
+          acc = next
+          n
+      }
+      chunks += 1
     }
-    acc
+    // the line reads `volume`, so the Spark path sums it only when logging
+    graft.Verbose.log("blocking")(
+      s"path=${driver.fold("spark")(_ => "driver")} rows=${volume._1} " +
+      s"chars=${volume._2} bound=$bound chunks=$chunks pairs=$covered")
+    driver.fold(acc)(_.frame)
   }
 
   /** `ccSupersteps` is the connected-components convergence trail; it
@@ -182,7 +218,15 @@ object Dedupe {
     * here; everything downstream is source-agnostic. */
   def run(spark: SparkSession, sfDir: String, cfg: Config = Config(),
           workDir: Option[String] = None,
-          turns: Option[DataFrame] = None): Result = {
+          turns: Option[DataFrame] = None): Result =
+    runWith(spark, sfDir, cfg, workDir, turns, DriverPairBound)
+
+  /** [[run]] with [[budgetPairs]]' driver bound exposed (`-1` forces
+    * the Spark budget loop). */
+  private[graft] def runWith(spark: SparkSession, sfDir: String, cfg: Config,
+                             workDir: Option[String],
+                             turns: Option[DataFrame],
+                             driverBound: Long): Result = {
     val io = workDir.map(new TableIO(spark, _))
     def staged(name: String, inputs: Seq[String],
                identity: Option[String] = None)(f: => DataFrame): DataFrame =
@@ -283,8 +327,9 @@ object Dedupe {
       "min_rr stop refused every learned conjunction")
     val pairs = staged("pairs", Seq("records"), Some(idPairs)) {
       budgetPairs(records,
-        admitted.map(_.conjunction.map(schemeByName)), cfg.nCovered,
-        cfg.maxBlockSize)
+        admitted.map(_.conjunction.map(schemeByName)),
+        admitted.map(_.nPairs).sum, cfg.nCovered, cfg.maxBlockSize,
+        driverBound)
     }
 
     // 6. similarity feature vectors (M1; JW/Levenshtein/Jaccard +

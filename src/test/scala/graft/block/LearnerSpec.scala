@@ -115,42 +115,6 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     assert(learned == perSeed)
   }
 
-  /** Run `body`, counting the jobs it starts and the distinct SQL
-    * executions they belong to (told apart by a local property; a
-    * sentinel job afterwards proves the asynchronous listener bus has
-    * delivered every earlier job). */
-  private def counting[T](body: => T): (T, Int, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { p =>
-          p.getProperty("graft.spec") match {
-            case "learn" =>
-              jobs.incrementAndGet()
-              Option(p.getProperty("spark.sql.execution.id")).foreach(execs.add)
-            case "sentinel" => drained.countDown()
-            case _ =>
-          }
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.spec", "learn")
-      val t = body
-      sc.setLocalProperty("graft.spec", "sentinel")
-      spark.range(1).collect()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (t, jobs.get, execs.size)
-    } finally {
-      sc.setLocalProperty("graft.spec", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("one stats batch per DP depth") {
     val l = twoAttrLearner().withDriverChars(-1)
     val (_, _, execs) = counting(l.learn())

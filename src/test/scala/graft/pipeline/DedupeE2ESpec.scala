@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
+import graft.block.{Labels, Learner, Schemes}
 import graft.ml.MatchClassifier
 
 /** The BASELINE.json gate: the full learned-blocking pipeline must
@@ -69,12 +70,63 @@ class DedupeE2ESpec extends AnyFunSuite with SparkSuite {
     assert(resumed.clusters.orderBy("id").collect().toSeq == firstClusters)
   }
 
+  test("in-memory runs score the same rows on both budget paths") {
+    // the driver path's local pairs frame carries a row count, so the
+    // hydration gate may plan a different join shape than for the
+    // Spark path's checkpoint; the scored rows must not differ
+    def scored(driverBound: Long) = {
+      val r = Dedupe.runWith(spark, sfDir, Dedupe.Config(), None, None,
+        driverBound)
+      val rows = r.scored.collect().toSet
+      Seq(r.pairs, r.scored).foreach(graft.plans.Checkpoints.release)
+      r.records.unpersist()
+      rows
+    }
+    val driver = scored(Dedupe.DriverPairBound)
+    val sparkPath = scored(-1)
+    assert(driver.nonEmpty && driver == sparkPath,
+      s"${(driver -- sparkPath).size} driver-only, " +
+        s"${(sparkPath -- driver).size} Spark-only scored rows")
+  }
+
+  test("driver and Spark budget paths emit the same pairs: planted " +
+    "sf0.001 and its learned list") {
+    val recs = graft.normalize.Normalize.normalize(
+      graft.synth.Transcripts.transcripts(spark, sfDir)).cache()
+    val labs = Labels.plantedLabels(spark, sfDir).cache()
+    try {
+      val cfg = Dedupe.Config()
+      val learner = new Learner(recs, labs, cfg.blockingAttrs, cfg.k,
+        cfg.seedRrCut, cfg.maxBlockSize, maxCompare = cfg.maxCompare)
+      val learned = learner.learn()
+        .sortBy(_.key)(Ordering[(Double, Long, Long)].reverse)
+      learner.unpersist()
+      val admitted = Dedupe.applicableConjunctions(learned, recs.count(),
+        cfg.maxCompare)
+      val byName = Schemes.byName(cfg.blockingAttrs)
+      val conjs = admitted.map(_.conjunction.map(byName))
+      val bound = admitted.map(_.nPairs).sum
+      assert(conjs.size > 8 && bound <= Dedupe.DriverPairBound)
+      Seq(cfg.nCovered, 1L).foreach { nCovered =>
+        def run(driverBound: Long) = Dedupe.budgetPairs(recs, conjs, bound,
+          nCovered, cfg.maxBlockSize, driverBound)
+        def pairs(df: DataFrame) =
+          df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+        val driver = pairs(run(Dedupe.DriverPairBound))
+        val sparkPath = run(-1)
+        assert(driver.nonEmpty && driver == pairs(sparkPath),
+          s"nCovered=$nCovered")
+        graft.plans.Checkpoints.release(sparkPath)
+      }
+    } finally { recs.unpersist(); labs.unpersist() }
+  }
+
   /** The planted labels and fixed-blocking candidate pairs, featurized
     * with the pipeline's feature vector (5 distances + TF-IDF cosine),
     * passed to `check` with the feature column names. */
   private def withFixedBlocking(check: (DataFrame, DataFrame, Seq[String]) => Unit)
       : Unit = {
-    import graft.block.{Blocking, BoundScheme, FirstNChars, Labels}
+    import graft.block.{Blocking, BoundScheme, FirstNChars}
     import graft.sim.Distances
     val records = graft.normalize.Normalize.normalize(
       graft.synth.Transcripts.transcripts(spark, sfDir)).cache()

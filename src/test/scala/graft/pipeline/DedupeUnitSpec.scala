@@ -1,10 +1,15 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
-import graft.block.{Blocking, BoundScheme, ConjStats, FirstNChars, LastNChars}
+import graft.block.{Acronym, Blocking, BoundScheme, ConjStats, ExactMatch,
+  FindNgrams, FirstNChars, LastNChars, Scheme}
 
 class DedupeUnitSpec extends AnyFunSuite with SparkSuite {
+
+  private def pairs(df: DataFrame): Set[(String, String)] =
+    df.collect().map(r => (r.getString(0), r.getString(1))).toSet
 
   test("min_rr/max_compare stop refuses low-rr conjunctions") {
     val conjs = Seq(
@@ -33,20 +38,96 @@ class DedupeUnitSpec extends AnyFunSuite with SparkSuite {
     // 9 conjunctions = 2 chunks; the 9th alone pairs c1/c2 ("a" suffix)
     val conjs = (1 to 8).map(n => Seq(BoundScheme(FirstNChars(n), "name"))) :+
       Seq(BoundScheme(LastNChars(1), "name"))
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
     def union(cs: Seq[Seq[BoundScheme]]) = cs.flatMap(c =>
       pairs(Blocking.candidatePairs(recs, c, maxBlockSize = 100))).toSet
     val sc = spark.sparkContext
+    // the Spark loop, forced: these conjunctions would run on the driver
+    def budget(nCovered: Long) =
+      Dedupe.budgetPairs(recs, conjs, 0L, nCovered, 100, driverBound = -1)
     val before = sc.getPersistentRDDs.keySet
-    val all = Dedupe.budgetPairs(recs, conjs, Long.MaxValue, 100)
+    val all = budget(Long.MaxValue)
     val registered = sc.getPersistentRDDs.keySet -- before
     assert(pairs(all) == union(conjs) && pairs(all).contains(("c1", "c2")))
     assert(registered.size == 1,
       s"superseded budget checkpoints left registered: $registered")
     // a covered budget stops before the second chunk
-    val first = Dedupe.budgetPairs(recs, conjs, 1L, 100)
+    val first = budget(1L)
     assert(pairs(first) == union(conjs.take(8)))
     Seq(all, first).foreach(graft.plans.Checkpoints.release)
+  }
+
+  // long ids (9 < 10, unlike "10" < "9"); names and roles with a null
+  // and an "" value, a repeated conv_id row (3), role "t t" exactly at
+  // the cap of 3 and role prefix "u" one over it (4 incidences)
+  private lazy val edgeRecs = {
+    import spark.implicits._
+    Seq[(Long, String, String)](
+      (1L, "alpha beta", "u a"), (2L, "alpha beta", "u a"),
+      (3L, "alpha gamma", "u t"), (3L, "alpha gamma", "u t"),
+      (4L, null, "t t"), (5L, "", "t t"), (6L, "alphabet", null),
+      (9L, "gamma delta", "t t"), (10L, "gamma delta", "a a"),
+      (20L, "delta", "")).toDF("conv_id", "name", "role")
+  }
+
+  // 9 conjunctions = 2 chunks, among them two multi-scheme ones (one
+  // with an n-gram scheme); the 9th alone pairs 10 with 1 and 2
+  private val edgeConjs: Seq[Seq[BoundScheme]] = {
+    def name(s: Scheme) = BoundScheme(s, "name")
+    def role(s: Scheme) = BoundScheme(s, "role")
+    Seq(Seq(name(ExactMatch)), Seq(name(FirstNChars(2))),
+      Seq(role(ExactMatch)), Seq(role(FirstNChars(1))),
+      Seq(name(FindNgrams(4)), role(FirstNChars(1))),
+      Seq(name(FirstNChars(2)), role(ExactMatch)),
+      Seq(name(LastNChars(2))), Seq(name(Acronym)),
+      Seq(role(LastNChars(1))))
+  }
+
+  private def longPairs(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("driver and Spark budget paths emit the same pairs: edge-case " +
+    "fixture") {
+    val sc = spark.sparkContext
+    Seq(Long.MaxValue, 1L).foreach { nCovered =>
+      val before = sc.getPersistentRDDs.keySet
+      val driver = Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L, nCovered, 3)
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+      val sparkPath = Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L, nCovered, 3,
+        driverBound = -1)
+      assert(driver.schema == sparkPath.schema)
+      assert(longPairs(driver) == longPairs(sparkPath), s"nCovered=$nCovered")
+      graft.plans.Checkpoints.release(sparkPath)
+    }
+    val all = longPairs(Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L,
+      Long.MaxValue, 3))
+    // premises: the at-cap role block pairs, the over-cap prefix block
+    // and the repeated row do not, ids compare as numbers, and the 2nd
+    // chunk adds pairs that nCovered = 1 leaves out
+    assert(Set((4L, 5L), (4L, 9L), (5L, 9L), (9L, 10L), (1L, 10L))
+      .subsetOf(all))
+    assert(!all.contains((1L, 3L)) && !all.contains((3L, 3L)))
+    val first = longPairs(Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L, 1L, 3))
+    assert(first.nonEmpty && !first.contains((1L, 10L)))
+    // a list whose summed nPairs is over the bound takes the Spark path,
+    // which leaves its final checkpoint registered
+    val before = sc.getPersistentRDDs.keySet
+    val over = Dedupe.budgetPairs(edgeRecs, edgeConjs,
+      Dedupe.DriverPairBound + 1, Long.MaxValue, 3)
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+    assert(longPairs(over) == all)
+    graft.plans.Checkpoints.release(over)
+  }
+
+  test("a driver-path budget call runs at most 2 jobs and registers " +
+    "nothing") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (pairs, jobs, _) = counting(Dedupe.budgetPairs(edgeRecs, edgeConjs,
+      0L, Long.MaxValue, 3))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    // the corpus volume sum and the signature collect; the Spark loop
+    // runs several jobs per chunk
+    assert(jobs <= 2, s"$jobs jobs in a driver-path budget call")
+    assert(pairs.count() > 0)
   }
 }
