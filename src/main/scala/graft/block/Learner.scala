@@ -46,19 +46,12 @@ final case class ConjStats(
   * batch free of pair-scale work. Scores are memoized across seeds
   * (reference @lru_cache, optimizers.py:37-50).
   *
-  * A small corpus is scored on the DRIVER instead ([[DriverStats]]):
-  * at the first batch, one job sums the corpus rows and the blocking
-  * attributes' chars (an attribute of n chars has at most 3n + 8
-  * signatures, so the sum bounds the signature table without
-  * evaluating a scheme). At most 200,000 rows and 2,000,000 chars
-  * ([[SmallCorpus]]), with at most 20,000 label rows in one bounded
-  * read, collect the validated signature table once, and every later
-  * batch runs no Spark job: each candidate's block keys are built
-  * with the plan's own hash chain — from 0, per scheme in conjunction
-  * order,
-  * `XxHash64Function.hash(sig, StringType, hash(h, LongType, 42))`,
-  * which is what `xxhash64(h, sig)` evaluates — so both paths give
-  * identical `ConjStats`. Larger corpora take the Spark batches.
+  * Given a driver-side block engine ([[DriverBlocks]], built by the
+  * caller for a small corpus; None means the Spark batches), a learner
+  * whose labels fit one bounded read of at most 20,000 rows scores every
+  * batch on the driver instead, with no Spark job: exact signature-tuple
+  * keys, the same `ConjStats` as the Spark batches (see [[DriverBlocks]]
+  * for the one case where they may differ, a 64-bit hash collision).
   */
 /** Conjunction statistics are evaluated on the FULL `records` corpus,
   * not a train sample — a deliberate divergence from the reference's
@@ -95,7 +88,8 @@ final class Learner(
     seedRrCut: Double = 0.99,
     maxBlockSize: Int = Blocking.DefaultMaxBlockSize,
     idCol: String = "conv_id",
-    maxCompare: Long = 1000000L) {
+    maxCompare: Long = 1000000L,
+    blocks: Option[DriverBlocks] = None) {
 
   val schemes: Seq[BoundScheme] = Schemes.forAttributes(attrs)
   // memoized conjunction stats, keyed by the SORTED scheme list
@@ -119,7 +113,8 @@ final class Learner(
     * keeps). On the Spark path it is computed and cached ONCE — the
     * expensive part of every DP batch (regex tokenization, n-gram
     * generation over text attributes) runs one time per record instead
-    * of once per batch per record; the driver path collects it once.
+    * of once per batch per record. (A driver-side engine collects its
+    * own.)
     */
   private def sigTable(df: DataFrame): DataFrame =
     df.select((col(idCol) +:
@@ -136,46 +131,25 @@ final class Learner(
     cached(corpusSigs.join(ids, Seq(idCol), "left_semi"))
   }
 
-  /** (rows, Σ attribute chars) of the corpus ([[SmallCorpus.volume]]). */
-  private lazy val volume: (Long, Long) = SmallCorpus.volume(records, attrs)
   private lazy val nComparisons: Double = {
-    val n = volume._1.toDouble
+    val n = blocks.fold(records.count())(_.rows).toDouble
     n * (n - 1) / 2.0
   }
 
-  // the driver path's char bound; the test seam sets -1 to force the
-  // Spark path
-  private var driverChars = SmallCorpus.MaxChars
-  private var pathChosen = false
-
-  /** The driver path's data, or None for the Spark path — chosen once,
-    * at the first stats batch: a [[SmallCorpus]] (with `driverChars`
-    * as its char bound) whose labels fit one bounded read of at most
-    * `DriverLabels` rows. The signature table is then collected once;
+  /** The driver path's statistics, or None for the Spark path: an
+    * engine given and labels of its id type that fit one bounded read
+    * of at most `DriverLabels` rows. Chosen at the first stats batch;
     * nothing is cached. */
-  private lazy val local: Option[DriverStats] = {
-    pathChosen = true
-    val idType = records.schema(idCol).dataType
-    if (!SmallCorpus.fits(volume, driverChars) ||
-        !DriverStats.supports(idType) ||
-        Seq("id_l", "id_r").exists(labels.schema(_).dataType != idType)) None
+  private lazy val local: Option[DriverBlocks#Stats] = blocks.flatMap { b =>
+    if (Seq("id_l", "id_r").exists(labels.schema(_).dataType != b.idType)) None
     else {
       val label = col("label")
-      val labeled = DriverStats.collect(labels.select(col("id_l"),
+      val labeled = DriverBlocks.collect(labels.select(col("id_l"),
         col("id_r"), label, coalesce(label === 1, lit(false)),
         coalesce(label === 0, lit(false))).limit(Learner.DriverLabels + 1))
       if (labeled.length > Learner.DriverLabels) None
-      else Some(DriverStats(DriverStats.collect(sigTable(records)), labeled,
-        idType, labels.schema("label").dataType, schemes.size, maxBlockSize))
+      else Some(b.stats(labeled, labels.schema("label").dataType, maxBlockSize))
     }
-  }
-
-  /** [[local]] with the char bound exposed (`-1` forces the Spark
-    * path); set before the first stats batch. */
-  private[graft] def withDriverChars(chars: Long): this.type = {
-    require(!pathChosen, "the stats path is already chosen")
-    driverChars = chars
-    this
   }
 
   /** "driver" or "spark": the stats path, choosing it if needed. */
@@ -190,6 +164,8 @@ final class Learner(
 
   private val schemeIndex: Map[String, Int] =
     schemes.map(_.name).zipWithIndex.toMap
+  private val byName: Map[String, BoundScheme] =
+    schemes.map(b => b.name -> b).toMap
 
   /** The signature table's per-scheme columns as one array, in
     * `schemes` order — the `sigs` operand of [[hashKeys]]. Built at use
@@ -267,7 +243,7 @@ final class Learner(
     if (missing.isEmpty) return
     val t0 = System.nanoTime()
     val counts = local match {
-      case Some(d) => missing.map(c => d.stats(c.map(schemeIndex)))
+      case Some(d) => missing.map(c => d(c.map(byName)))
       case None => sparkBatch(missing)
     }
     missing.zip(counts).foreach { case (c, s) =>
@@ -469,7 +445,7 @@ final class Learner(
     * driver path. */
   private[graft] def coveredPositives(conjs: Seq[Seq[String]]): Long =
     local match {
-      case Some(d) => d.coveredPositives(conjs.map(_.map(schemeIndex)))
+      case Some(d) => d.coveredPositives(conjs.map(_.map(byName)))
       case None => coveredPairs(conjs).count()
     }
 
@@ -511,8 +487,7 @@ final class Learner(
           s"escalating to full DP over all ${passing.size} passing seeds")
         learnFrom(passing, singles)
       }
-    log(s"path=$path rows=${volume._1} chars=${volume._2} " +
-      s"candidates=$nScored batches=$nBatches")
+    log(s"path=$path candidates=$nScored batches=$nBatches")
     result
   }
 

@@ -2,8 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.block.{Blocking, BoundScheme, ConjStats, DriverPairs, Labels,
-  Learner, SmallCorpus}
+import graft.block.{Blocking, BoundScheme, ConjStats, DriverBlocks, Labels,
+  Learner, Schemes}
 import graft.cluster.ConnectedComponents
 import graft.io.TableIO
 import graft.ml.MatchClassifier
@@ -99,34 +99,27 @@ object Dedupe {
     * overshoot by at most one chunk, and no chunk starts once `nCovered`
     * pairs are covered.
     *
-    * Two paths, one loop. A small corpus ([[graft.block.SmallCorpus]]
-    * over the admitted schemes' attributes, with string, long or int
-    * ids) whose admitted conjunctions bound the pairs (`bound`, their
-    * summed `nPairs`, at most `driverBound`) runs on the driver: its
-    * validated signature table is collected once and every chunk is
-    * [[graft.block.DriverPairs]], with no Spark job; the result is a
-    * local frame and nothing is checkpointed. Otherwise each chunk is
-    * one [[Blocking.chunkPairs]] pass (a single grouped-pairs pipeline
-    * for the whole chunk); each step's accumulated pairs are
-    * checkpointed to cut the lineage, and the step it replaces is
-    * released once the new one is materialized: only the returned
-    * (final) checkpoint stays registered. A test may pass
-    * `driverBound = -1` to force the Spark path.
+    * Two paths, one loop. Given admitted conjunctions that bound the
+    * pairs (`bound`, their summed `nPairs`, at most [[DriverPairBound]];
+    * only then is `blocks` read) and a driver-side block engine
+    * ([[graft.block.DriverBlocks]], over every scheme of `admitted`),
+    * every chunk runs in driver memory with exact signature-tuple keys
+    * and no Spark job; the result is a local frame and nothing is
+    * checkpointed. Otherwise each chunk is one [[Blocking.chunkPairs]]
+    * pass (a single grouped-pairs pipeline for the whole chunk); each
+    * step's accumulated pairs are checkpointed to cut the lineage, and
+    * the step it replaces is released once the new one is
+    * materialized: only the returned (final) checkpoint stays
+    * registered.
     */
   private[graft] def budgetPairs(records: DataFrame,
                                  admitted: Seq[Seq[BoundScheme]],
                                  bound: Long,
                                  nCovered: Long,
                                  maxBlockSize: Int,
-                                 driverBound: Long = DriverPairBound)
-      : DataFrame = {
-    lazy val volume = SmallCorpus.volume(records,
-      admitted.flatten.map(_.attr).distinct)
+                                 blocks: => Option[DriverBlocks]): DataFrame = {
     val driver =
-      if (bound <= driverBound && SmallCorpus.fits(volume))
-        DriverPairs(records, admitted.flatten.distinct, "conv_id",
-          maxBlockSize)
-      else None
+      if (bound <= DriverPairBound) blocks.map(_.pairs(maxBlockSize)) else None
     var acc: DataFrame = null
     var covered = 0L
     var chunks = 0
@@ -147,10 +140,9 @@ object Dedupe {
       }
       chunks += 1
     }
-    // the line reads `volume`, so the Spark path sums it only when logging
     graft.Verbose.log("blocking")(
-      s"path=${driver.fold("spark")(_ => "driver")} rows=${volume._1} " +
-      s"chars=${volume._2} bound=$bound chunks=$chunks pairs=$covered")
+      s"path=${driver.fold("spark")(_ => "driver")} bound=$bound " +
+      s"chunks=$chunks pairs=$covered")
     driver.fold(acc)(_.frame)
   }
 
@@ -219,14 +211,14 @@ object Dedupe {
   def run(spark: SparkSession, sfDir: String, cfg: Config = Config(),
           workDir: Option[String] = None,
           turns: Option[DataFrame] = None): Result =
-    runWith(spark, sfDir, cfg, workDir, turns, DriverPairBound)
+    runWith(spark, sfDir, cfg, workDir, turns, driverBlocks = true)
 
-  /** [[run]] with [[budgetPairs]]' driver bound exposed (`-1` forces
-    * the Spark budget loop). */
+  /** [[run]], where `driverBlocks = false` gives the learner and the
+    * budget loop no driver-side block engine (their Spark paths). */
   private[graft] def runWith(spark: SparkSession, sfDir: String, cfg: Config,
                              workDir: Option[String],
                              turns: Option[DataFrame],
-                             driverBound: Long): Result = {
+                             driverBlocks: Boolean): Result = {
     val io = workDir.map(new TableIO(spark, _))
     def staged(name: String, inputs: Seq[String],
                identity: Option[String] = None)(f: => DataFrame): DataFrame =
@@ -266,7 +258,20 @@ object Dedupe {
     //    stage: on resume the (dominant-cost) DP search is skipped
     //    entirely.
     import spark.implicits._
-    val nRecords = records.count()
+    // one job sums the corpus rows and blocking-attribute chars: the rows
+    // are n for rr and TF-IDF, and both decide whether the learner and
+    // the budget loop share a driver-side block engine, built at its
+    // first use (one signature collect) and dropped after the pairs stage
+    val volume = DriverBlocks.volume(records, cfg.blockingAttrs)
+    val nRecords = volume._1
+    var built: Option[DriverBlocks] = null
+    def blocks: Option[DriverBlocks] = {
+      if (built == null) built =
+        if (!driverBlocks) None
+        else DriverBlocks(records, Schemes.forAttributes(cfg.blockingAttrs),
+          volume)
+      built
+    }
     // stage IDENTITY: every stage output depends on config knobs the
     // _SUCCESS marker alone can't see, so each stage records a
     // CUMULATIVE fingerprint (the input fingerprint + its own knobs +
@@ -308,14 +313,14 @@ object Dedupe {
       Some(idConj)) {
       val learner = new Learner(records, labels, cfg.blockingAttrs,
         cfg.k, cfg.seedRrCut, cfg.maxBlockSize,
-        maxCompare = cfg.maxCompare)
+        maxCompare = cfg.maxCompare, blocks = blocks)
       val learned = learner.learn()
       learner.unpersist()
       learned.toDF()
     }.as[ConjStats].collect().toSeq
       .sortBy(_.key)(Ordering[(Double, Long, Long)].reverse)
     require(conjunctions.nonEmpty, "learner found no viable conjunction")
-    val schemeByName = graft.block.Schemes.byName(cfg.blockingAttrs)
+    val schemeByName = Schemes.byName(cfg.blockingAttrs)
 
     // 5. candidate pairs on FULL data, best conjunctions first, under
     //    TWO budgets (blocking.py:43-98): the min_rr/max_compare
@@ -328,9 +333,9 @@ object Dedupe {
     val pairs = staged("pairs", Seq("records"), Some(idPairs)) {
       budgetPairs(records,
         admitted.map(_.conjunction.map(schemeByName)),
-        admitted.map(_.nPairs).sum, cfg.nCovered, cfg.maxBlockSize,
-        driverBound)
+        admitted.map(_.nPairs).sum, cfg.nCovered, cfg.maxBlockSize, blocks)
     }
+    built = None
 
     // 6. similarity feature vectors (M1; JW/Levenshtein/Jaccard +
     //    TF-IDF cosine — the north star's batched similarity vector).

@@ -1,5 +1,6 @@
 package graft.block
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 
@@ -26,9 +27,14 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     ("r1", "r2", 1),
     ("r5", "r6", 0)).toDF("id_l", "id_r", "label")
 
+  /** The driver-side block engine over `attrs`' schemes of `recs`. */
+  private def engine(recs: DataFrame, attrs: Seq[String]) =
+    DriverBlocks(recs, Schemes.forAttributes(attrs))
+
   private def learner(seedCut: Double = 0.0) =
     new Learner(train, labels, Seq("head_text"), k = 2,
-      seedRrCut = seedCut, maxBlockSize = 100)
+      seedRrCut = seedCut, maxBlockSize = 100,
+      blocks = engine(train, Seq("head_text")))
 
   test("score: stats match hand computation (J3+A1+A2)") {
     val s = learner().score(Seq("exactmatch_head_text"))
@@ -65,7 +71,8 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     // the DP must not spend corpus-scale batches refining seeds the
     // budget already refuses at depth 1
     val l = new Learner(train, labels, Seq("head_text"), k = 2,
-      seedRrCut = 0.0, maxBlockSize = 100, maxCompare = 1L)
+      seedRrCut = 0.0, maxBlockSize = 100, maxCompare = 1L,
+      blocks = engine(train, Seq("head_text")))
     val singles = l.scoreBatch(Nil, l.schemes.map(_.name))
     assert(math.abs(l.budgetMinRr - 14.0 / 15.0) < 1e-12)
     // find_ngrams_4 over head_text: r1/r2 share 7 four-gram keys ⇒
@@ -88,9 +95,12 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
       .forall(_.conjunction.head != refused))
   }
 
-  private def twoAttrLearner() =
+  private lazy val twoAttrEngine = engine(train, Seq("head_text", "role_seq"))
+
+  private def twoAttrLearner(driver: Boolean = true) =
     new Learner(train, labels, Seq("head_text", "role_seq"),
-      k = 3, seedRrCut = 0.0, maxBlockSize = 100)
+      k = 3, seedRrCut = 0.0, maxBlockSize = 100,
+      blocks = if (driver) twoAttrEngine else None)
 
   test("breadth-first learn() equals the per-seed DP") {
     val l = twoAttrLearner()
@@ -116,7 +126,7 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("one stats batch per DP depth") {
-    val l = twoAttrLearner().withDriverChars(-1)
+    val l = twoAttrLearner(driver = false)
     val (_, _, execs) = counting(l.learn())
     // premise: several refined seeds and no coverage escalation (every
     // passing seed is refinable) — all read from the memo, no new jobs
@@ -127,7 +137,7 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     assert(l.path == "spark")
     l.unpersist()
     // k = 3 depths (singles, depth 1, depth 2), one action each, plus
-    // at most one for the corpus sum behind rr; a per-seed DP runs
+    // at most one for the corpus count behind rr; a per-seed DP runs
     // 1 + 2·seeds batches
     assert(execs <= 3 + 1, s"$execs SQL executions in learn()")
   }
@@ -135,29 +145,16 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
   test("a driver-path learn() runs only the bounded reads' jobs and " +
     "registers nothing") {
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val l = twoAttrLearner()
+    val before = sc.getPersistentRDDs.keySet
     val (learned, jobs, _) = counting(l.learn())
     assert(l.path == "driver" && learned.nonEmpty)
     l.unpersist()
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
-    // one job, the corpus sum; the labels and the signature table are
-    // local relations here, read with no job. The Spark path runs 3
-    // stats batches on top.
-    assert(jobs <= 1, s"$jobs jobs in a driver-path learn()")
-  }
-
-  test("the path bound counts attribute chars, not rows") {
-    // three rows, over the char bound between them
-    val long = "abcdefghij" * 70001
-    val recs = Seq(("a", long, "u a"), ("b", long, "u a"),
-      ("c", long.reverse, "t t")).toDF("conv_id", "head_text", "role_seq")
-    val big = new Learner(recs, labels, Seq("head_text", "role_seq"))
-    assert(big.path == "spark")
-    // the same rows with short strings take the driver path
-    val small = new Learner(recs.withColumn("head_text", $"conv_id"), labels,
-      Seq("head_text", "role_seq"))
-    assert(small.path == "driver")
+    // the engine is built beforehand, and the labels are a local
+    // relation here, read with no job; the Spark path runs a corpus
+    // count and 3 stats batches
+    assert(jobs == 0, s"$jobs jobs in a driver-path learn()")
   }
 
   /** Every conjunction with at most one n-gram scheme of up to three
@@ -168,11 +165,14 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
       .filter(_.count(_.startsWith("find_ngrams")) <= 1)
   }
 
-  /** learn() and every scored conjunction on the driver path equal the
-    * forced Spark path's; `all` adds candidates to score on both. */
-  private def assertPathsAgree(make: () => Learner,
-                               all: Learner => Seq[Seq[String]]): Unit = {
-    val (driver, sparkPath) = (make(), make().withDriverChars(-1))
+  /** learn() and every scored conjunction on the driver path (`make`
+    * given an engine) equal the Spark path's (given None); `all` adds
+    * candidates to score on both. Returns the scored memo. */
+  private def assertPathsAgree(make: Option[DriverBlocks] => Learner,
+                               blocks: Option[DriverBlocks],
+                               all: Learner => Seq[Seq[String]])
+      : Map[Seq[String], ConjStats] = {
+    val (driver, sparkPath) = (make(blocks), make(None))
     try {
       assert(driver.learn() == sparkPath.learn())
       driver.scoreAll(all(driver))
@@ -180,6 +180,7 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
       assert(driver.path == "driver" && sparkPath.path == "spark")
       assert(driver.memo.nonEmpty)
       assert(driver.memo == sparkPath.memo)
+      driver.memo
     } finally { driver.unpersist(); sparkPath.unpersist() }
   }
 
@@ -187,20 +188,29 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     "edge-case fixture") {
     // the 6 records plus: a null and an "" attribute (null / "" and
     // empty-array signatures), repeated n-grams, role "t t" exactly at
-    // the cap of 3 and role "u a" over it (4 rows)
+    // the cap of 3 and role "u a" over it (4 rows), and two rows whose
+    // (head, role) tuples concatenate to the same "abc"
     val recs = train.union(Seq[(String, String, String)](
       ("r7", null, "u a"), ("r8", "", ""),
       ("r9", "aaaaaaaaaaaa", "t t"), ("r10", "aaaaaaaaab", "t t"),
-      ("r11", "gamma delta", "a t")).toDF("conv_id", "head_text", "role_seq"))
+      ("r11", "gamma delta", "a t"),
+      ("r12", "ab", "c"), ("r13", "a", "bc"))
+      .toDF("conv_id", "head_text", "role_seq"))
     // a duplicate label row, a pair with an end missing from the
     // corpus, a reversed pair, pairs sharing only an at-cap or an
-    // over-cap role key
+    // over-cap role key, and the concatenation-equal pair
     val labs = Seq(("r1", "r2", 1), ("r1", "r2", 1), ("r2", "r1", 1),
       ("r5", "r6", 0), ("r3", "zz", 1), ("r9", "r10", 1),
-      ("r3", "r11", 0), ("r6", "r9", 1), ("r5", "r7", 1))
+      ("r3", "r11", 0), ("r6", "r9", 1), ("r5", "r7", 1), ("r12", "r13", 1))
       .toDF("id_l", "id_r", "label")
-    assertPathsAgree(() => new Learner(recs, labs, Seq("head_text", "role_seq"),
-      k = 3, seedRrCut = 0.0, maxBlockSize = 3), candidates)
+    val attrs = Seq("head_text", "role_seq")
+    val memo = assertPathsAgree(b => new Learner(recs, labs, attrs,
+      k = 3, seedRrCut = 0.0, maxBlockSize = 3, blocks = b),
+      engine(recs, attrs), candidates)
+    // exact keys are tuples: ("ab", "c") and ("a", "bc") share no block,
+    // so only r1/r2 pair, covering (r1, r2) and (r2, r1)
+    val exact = memo(Seq("exactmatch_head_text", "exactmatch_role_seq"))
+    assert(exact.nPairs == 1 && exact.positives == 2)
   }
 
   test("driver and Spark stats paths agree on every candidate: " +
@@ -212,9 +222,9 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     try {
       // the scored memo of learn() (every depth's candidates) and all
       // 33 single-scheme conjunctions
-      assertPathsAgree(() => new Learner(recs, labs,
-        graft.normalize.Normalize.blockingAttributes),
-        l => l.schemes.map(b => Seq(b.name)))
+      val attrs = graft.normalize.Normalize.blockingAttributes
+      assertPathsAgree(b => new Learner(recs, labs, attrs, blocks = b),
+        engine(recs, attrs), l => l.schemes.map(b => Seq(b.name)))
     } finally { recs.unpersist(); labs.unpersist() }
   }
 
@@ -242,7 +252,6 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
       .toDF("id_l", "id_r", "label")
     val l = new Learner(recs, labs, Seq("head_text", "role_seq"), k = 3,
       seedRrCut = 0.0, maxBlockSize = 100, maxCompare = 2L)
-      .withDriverChars(-1)
     val singles = l.scoreBatch(Nil, l.schemes.map(_.name))
     // premise: covering seeds exist but every one is budget-refused at
     // depth 1, so the eager criterion refines nothing
@@ -257,7 +266,8 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     assert(l.coveredPositives(admitted.map(_.conjunction)) == 2L)
     // the driver path's guard escalates to the same list
     val d = new Learner(recs, labs, Seq("head_text", "role_seq"), k = 3,
-      seedRrCut = 0.0, maxBlockSize = 100, maxCompare = 2L)
+      seedRrCut = 0.0, maxBlockSize = 100, maxCompare = 2L,
+      blocks = engine(recs, Seq("head_text", "role_seq")))
     assert(d.learn() == learned && d.path == "driver")
     assert(d.coveredPositives(admitted.map(_.conjunction)) == 2L)
     l.unpersist()
@@ -270,7 +280,7 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     try {
       own.count()
       val l = new Learner(train, own, Seq("head_text"), k = 2,
-        seedRrCut = 0.0, maxBlockSize = 100).withDriverChars(-1)
+        seedRrCut = 0.0, maxBlockSize = 100)
       l.score(Seq("exactmatch_head_text"))
       l.unpersist()
       assert(own.storageLevel != org.apache.spark.storage.StorageLevel.NONE,

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
-import graft.block.{Labels, Learner, Schemes}
+import graft.block.{DriverBlocks, Labels, Learner, Schemes}
 import graft.ml.MatchClassifier
 
 /** The BASELINE.json gate: the full learned-blocking pipeline must
@@ -74,16 +74,16 @@ class DedupeE2ESpec extends AnyFunSuite with SparkSuite {
     // the driver path's local pairs frame carries a row count, so the
     // hydration gate may plan a different join shape than for the
     // Spark path's checkpoint; the scored rows must not differ
-    def scored(driverBound: Long) = {
+    def scored(driverBlocks: Boolean) = {
       val r = Dedupe.runWith(spark, sfDir, Dedupe.Config(), None, None,
-        driverBound)
+        driverBlocks)
       val rows = r.scored.collect().toSet
       Seq(r.pairs, r.scored).foreach(graft.plans.Checkpoints.release)
       r.records.unpersist()
       rows
     }
-    val driver = scored(Dedupe.DriverPairBound)
-    val sparkPath = scored(-1)
+    val driver = scored(driverBlocks = true)
+    val sparkPath = scored(driverBlocks = false)
     assert(driver.nonEmpty && driver == sparkPath,
       s"${(driver -- sparkPath).size} driver-only, " +
         s"${(sparkPath -- driver).size} Spark-only scored rows")
@@ -96,8 +96,10 @@ class DedupeE2ESpec extends AnyFunSuite with SparkSuite {
     val labs = Labels.plantedLabels(spark, sfDir).cache()
     try {
       val cfg = Dedupe.Config()
+      val blocks = DriverBlocks(recs, Schemes.forAttributes(cfg.blockingAttrs))
       val learner = new Learner(recs, labs, cfg.blockingAttrs, cfg.k,
-        cfg.seedRrCut, cfg.maxBlockSize, maxCompare = cfg.maxCompare)
+        cfg.seedRrCut, cfg.maxBlockSize, maxCompare = cfg.maxCompare,
+        blocks = blocks)
       val learned = learner.learn()
         .sortBy(_.key)(Ordering[(Double, Long, Long)].reverse)
       learner.unpersist()
@@ -108,12 +110,12 @@ class DedupeE2ESpec extends AnyFunSuite with SparkSuite {
       val bound = admitted.map(_.nPairs).sum
       assert(conjs.size > 8 && bound <= Dedupe.DriverPairBound)
       Seq(cfg.nCovered, 1L).foreach { nCovered =>
-        def run(driverBound: Long) = Dedupe.budgetPairs(recs, conjs, bound,
-          nCovered, cfg.maxBlockSize, driverBound)
+        def run(b: Option[DriverBlocks]) = Dedupe.budgetPairs(recs, conjs,
+          bound, nCovered, cfg.maxBlockSize, b)
         def pairs(df: DataFrame) =
           df.collect().map(r => (r.getString(0), r.getString(1))).toSet
-        val driver = pairs(run(Dedupe.DriverPairBound))
-        val sparkPath = run(-1)
+        val driver = pairs(run(blocks))
+        val sparkPath = run(None)
         assert(driver.nonEmpty && driver == pairs(sparkPath),
           s"nCovered=$nCovered")
         graft.plans.Checkpoints.release(sparkPath)

@@ -3,8 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
-import graft.block.{Acronym, Blocking, BoundScheme, ConjStats, ExactMatch,
-  FindNgrams, FirstNChars, LastNChars, Scheme}
+import graft.block.{Acronym, Blocking, BoundScheme, ConjStats, DriverBlocks,
+  ExactMatch, FindNgrams, FirstNChars, LastNChars, Scheme}
 
 class DedupeUnitSpec extends AnyFunSuite with SparkSuite {
 
@@ -43,7 +43,7 @@ class DedupeUnitSpec extends AnyFunSuite with SparkSuite {
     val sc = spark.sparkContext
     // the Spark loop, forced: these conjunctions would run on the driver
     def budget(nCovered: Long) =
-      Dedupe.budgetPairs(recs, conjs, 0L, nCovered, 100, driverBound = -1)
+      Dedupe.budgetPairs(recs, conjs, 0L, nCovered, 100, None)
     val before = sc.getPersistentRDDs.keySet
     val all = budget(Long.MaxValue)
     val registered = sc.getPersistentRDDs.keySet -- before
@@ -58,7 +58,9 @@ class DedupeUnitSpec extends AnyFunSuite with SparkSuite {
 
   // long ids (9 < 10, unlike "10" < "9"); names and roles with a null
   // and an "" value, a repeated conv_id row (3), role "t t" exactly at
-  // the cap of 3 and role prefix "u" one over it (4 incidences)
+  // the cap of 3 and role prefix "u" one over it (4 incidences), and
+  // rows 30 and 31, whose (name, role) tuples concatenate to the same
+  // "q xzt" but share no block
   private lazy val edgeRecs = {
     import spark.implicits._
     Seq[(Long, String, String)](
@@ -66,10 +68,11 @@ class DedupeUnitSpec extends AnyFunSuite with SparkSuite {
       (3L, "alpha gamma", "u t"), (3L, "alpha gamma", "u t"),
       (4L, null, "t t"), (5L, "", "t t"), (6L, "alphabet", null),
       (9L, "gamma delta", "t t"), (10L, "gamma delta", "a a"),
-      (20L, "delta", "")).toDF("conv_id", "name", "role")
+      (20L, "delta", ""), (30L, "q x", "zt"), (31L, "q", " xzt"))
+      .toDF("conv_id", "name", "role")
   }
 
-  // 9 conjunctions = 2 chunks, among them two multi-scheme ones (one
+  // 10 conjunctions = 2 chunks, among them three multi-scheme ones (one
   // with an n-gram scheme); the 9th alone pairs 10 with 1 and 2
   private val edgeConjs: Seq[Seq[BoundScheme]] = {
     def name(s: Scheme) = BoundScheme(s, "name")
@@ -79,8 +82,11 @@ class DedupeUnitSpec extends AnyFunSuite with SparkSuite {
       Seq(name(FindNgrams(4)), role(FirstNChars(1))),
       Seq(name(FirstNChars(2)), role(ExactMatch)),
       Seq(name(LastNChars(2))), Seq(name(Acronym)),
-      Seq(role(LastNChars(1))))
+      Seq(role(LastNChars(1))), Seq(name(ExactMatch), role(ExactMatch)))
   }
+
+  private lazy val edgeEngine =
+    DriverBlocks(edgeRecs, edgeConjs.flatten.distinct)
 
   private def longPairs(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -90,44 +96,48 @@ class DedupeUnitSpec extends AnyFunSuite with SparkSuite {
     val sc = spark.sparkContext
     Seq(Long.MaxValue, 1L).foreach { nCovered =>
       val before = sc.getPersistentRDDs.keySet
-      val driver = Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L, nCovered, 3)
+      val driver = Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L, nCovered, 3,
+        edgeEngine)
       assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
       val sparkPath = Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L, nCovered, 3,
-        driverBound = -1)
+        None)
       assert(driver.schema == sparkPath.schema)
       assert(longPairs(driver) == longPairs(sparkPath), s"nCovered=$nCovered")
       graft.plans.Checkpoints.release(sparkPath)
     }
     val all = longPairs(Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L,
-      Long.MaxValue, 3))
-    // premises: the at-cap role block pairs, the over-cap prefix block
-    // and the repeated row do not, ids compare as numbers, and the 2nd
-    // chunk adds pairs that nCovered = 1 leaves out
+      Long.MaxValue, 3, edgeEngine))
+    // premises: the at-cap role block pairs, the over-cap prefix block,
+    // the repeated row and the concatenation-equal tuples do not, ids
+    // compare as numbers, and the 2nd chunk adds pairs that
+    // nCovered = 1 leaves out
     assert(Set((4L, 5L), (4L, 9L), (5L, 9L), (9L, 10L), (1L, 10L))
       .subsetOf(all))
-    assert(!all.contains((1L, 3L)) && !all.contains((3L, 3L)))
-    val first = longPairs(Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L, 1L, 3))
+    assert(!all.contains((1L, 3L)) && !all.contains((3L, 3L)) &&
+      !all.contains((30L, 31L)))
+    val first = longPairs(Dedupe.budgetPairs(edgeRecs, edgeConjs, 0L, 1L, 3,
+      edgeEngine))
     assert(first.nonEmpty && !first.contains((1L, 10L)))
     // a list whose summed nPairs is over the bound takes the Spark path,
     // which leaves its final checkpoint registered
     val before = sc.getPersistentRDDs.keySet
     val over = Dedupe.budgetPairs(edgeRecs, edgeConjs,
-      Dedupe.DriverPairBound + 1, Long.MaxValue, 3)
+      Dedupe.DriverPairBound + 1, Long.MaxValue, 3, edgeEngine)
     assert((sc.getPersistentRDDs.keySet -- before).size == 1)
     assert(longPairs(over) == all)
     graft.plans.Checkpoints.release(over)
   }
 
-  test("a driver-path budget call runs at most 2 jobs and registers " +
+  test("a budgetPairs call given an engine runs 0 jobs and registers " +
     "nothing") {
     val sc = spark.sparkContext
+    val blocks = edgeEngine
     val before = sc.getPersistentRDDs.keySet
     val (pairs, jobs, _) = counting(Dedupe.budgetPairs(edgeRecs, edgeConjs,
-      0L, Long.MaxValue, 3))
+      0L, Long.MaxValue, 3, blocks))
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
-    // the corpus volume sum and the signature collect; the Spark loop
-    // runs several jobs per chunk
-    assert(jobs <= 2, s"$jobs jobs in a driver-path budget call")
+    // the Spark loop runs several jobs per chunk
+    assert(jobs == 0, s"$jobs jobs in a driver-path budget call")
     assert(pairs.count() > 0)
   }
 }
