@@ -1,6 +1,6 @@
 package graft.block
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.SQLExecution
@@ -234,13 +234,17 @@ private[graft] object DriverBlocks {
   val MaxRows = 200000L
   val MaxChars = 2000000L
 
-  /** (rows, Σ chars of `attrs`) of `records` — one job, no exchange:
-    * per-partition sums folded on the driver. */
-  def volume(records: DataFrame, attrs: Seq[String]): (Long, Long) = {
-    val chars = attrs.map(a => coalesce(length(col(a)).cast("long"), lit(0L)))
-      .reduce(_ + _)
-    records.select(chars).as(Encoders.scalaLong).rdd.aggregate((0L, 0L))(
-      (v, c) => (v._1 + 1, v._2 + c), (a, b) => (a._1 + b._1, a._2 + b._2))
+  /** The rows of `records` and, per list of `attrs`, the Σ of their
+    * chars — one job, no exchange: per-partition sums folded on the
+    * driver. */
+  def volume(records: DataFrame, attrs: Seq[String]*): (Long, Seq[Long]) = {
+    val chars = attrs.map(_.map(a =>
+      coalesce(length(col(a)).cast("long"), lit(0L))).reduce(_ + _))
+    val k = attrs.size
+    val sums = records.select(chars: _*).rdd.aggregate(new Array[Long](k + 1))(
+      (v, r) => { v(0) += 1; for (i <- 0 until k) v(i + 1) += r.getLong(i); v },
+      (a, b) => { for (i <- a.indices) a(i) += b(i); a })
+    (sums(0), sums.toSeq.tail)
   }
 
   /** `df`'s rows as Spark-internal rows, as one SQL execution — strings
@@ -253,8 +257,10 @@ private[graft] object DriverBlocks {
 
   /** The engine over `schemes`, keyed by each record's `conv_id`, after
     * one [[volume]] job over their attributes. */
-  def apply(records: DataFrame, schemes: Seq[BoundScheme]): Option[DriverBlocks] =
-    apply(records, schemes, volume(records, schemes.map(_.attr).distinct))
+  def apply(records: DataFrame, schemes: Seq[BoundScheme]): Option[DriverBlocks] = {
+    val (rows, chars) = volume(records, schemes.map(_.attr).distinct)
+    apply(records, schemes, (rows, chars.head))
+  }
 
   /** The engine over `schemes` for a corpus of the given `volume`, with
     * one collect; None, with no job, when the corpus is not small or its

@@ -28,9 +28,17 @@ private[ml] object DriverLogistic {
                        numClasses: Int, iterations: Int)
 
   /** Fit rows whose columns are `featureCols` followed by the label
-    * (0 or 1). */
-  def fit(rows: Array[Row], featureCols: Seq[String], maxIter: Int,
+    * (0 or 1). The rows are first sorted by their values, so the fit
+    * depends on the training rows, not on the order a plan delivered
+    * them in: its floating-point sums are then summed in one order. */
+  def fit(input: Array[Row], featureCols: Seq[String], maxIter: Int,
           tol: Double): Fit = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    implicit val byValue: Ordering[Double] = Ordering.Double.TotalOrdering
+    val rows = input.sortBy(r => r.toSeq.map {
+      case v: Number => v.doubleValue
+      case _ => Double.NaN
+    })
     val n = rows.length
     val d = featureCols.length
     require(n > 0, "cannot fit a classifier on an empty training set")

@@ -5,6 +5,7 @@ import org.apache.spark.ml.classification.{GraftModelBridge, LogisticRegression,
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -42,7 +43,9 @@ object MatchClassifier {
   /** Train on labeled pairs carrying feature columns + `label`.
     *
     * The input is featurized ONCE. For [[Logistic]], `featureCols :+
-    * "label"` is evaluated once (`Evaluated.once`) and one bounded read
+    * "label"` is evaluated once (`Evaluated.once`; a local frame, such
+    * as a driver-featurized training set, is read as it is, with no
+    * job) and one bounded read
     * of at most [[DriverFitRows]] + 1 rows picks the path: a read that
     * stops short is the whole training set and is fitted on the
     * driver; otherwise spark.ml fits a pin of the same evaluated frame.
@@ -77,11 +80,18 @@ object MatchClassifier {
           .setRegParam(0.0)
           .setLabelCol("label")
           .setFeaturesCol("features")
-        val evaluated = if (driverRows < 0) input else Evaluated.once(input)
-        // one bounded read: at most driverRows + 1 rows reach the driver
+        // one bounded read: at most driverRows + 1 rows reach the
+        // driver. A local input (a driver-featurized training set) is
+        // there already: its own optimized plan is collected, with no job
+        // (a new plan over it, such as a limit, would evaluate it again).
+        val local = driverRows >= 0 &&
+          input.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+        val evaluated =
+          if (driverRows < 0 || local) input else Evaluated.once(input)
         val small =
           if (driverRows < 0) None
-          else Some(evaluated.limit(driverRows + 1).collect())
+          else Some(if (local) input.collect()
+            else evaluated.limit(driverRows + 1).collect())
             .filter(_.length <= driverRows)
         small match {
           case Some(rows) =>

@@ -9,7 +9,7 @@ import graft.io.TableIO
 import graft.ml.MatchClassifier
 import graft.normalize.Normalize
 import graft.plans.Checkpoints
-import graft.sim.Distances
+import graft.sim.{Distances, DriverFeatures, TfIdf}
 import graft.synth.Transcripts
 
 /** End-to-end dedupe pipeline — the Spark rebuild of the reference's
@@ -80,6 +80,18 @@ object Dedupe {
       val minRr = 1.0 - maxCompare / nComparisons
       conjunctions.takeWhile(_.rr >= minRr)
     }
+  }
+
+  /** The learned conjunctions best first: descending by the reference
+    * key (rr, positives, −negatives), ties broken by the sorted scheme
+    * names and then the names in conjunction order, so that equal-key
+    * conjunctions are applied in one order whatever order the learner
+    * returned them in. */
+  private[graft] def bestFirst(conjunctions: Seq[ConjStats]): Seq[ConjStats] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    conjunctions.sortBy(c => (c.key, c.conjunction.sorted, c.conjunction))(
+      Ordering.Tuple3(Ordering[(Double, Long, Long)].reverse,
+        Ordering[Seq[String]], Ordering[Seq[String]]))
   }
 
   /** Conjunctions applied per budget step of [[budgetPairs]]. */
@@ -211,14 +223,15 @@ object Dedupe {
   def run(spark: SparkSession, sfDir: String, cfg: Config = Config(),
           workDir: Option[String] = None,
           turns: Option[DataFrame] = None): Result =
-    runWith(spark, sfDir, cfg, workDir, turns, driverBlocks = true)
+    runWith(spark, sfDir, cfg, workDir, turns, driverPaths = true)
 
-  /** [[run]], where `driverBlocks = false` gives the learner and the
-    * budget loop no driver-side block engine (their Spark paths). */
+  /** [[run]], where `driverPaths = false` forces every Spark path: the
+    * learner and the budget loop get no driver-side block engine, and
+    * both pair sets are featurized by the Spark plans. */
   private[graft] def runWith(spark: SparkSession, sfDir: String, cfg: Config,
                              workDir: Option[String],
                              turns: Option[DataFrame],
-                             driverBlocks: Boolean): Result = {
+                             driverPaths: Boolean): Result = {
     val io = workDir.map(new TableIO(spark, _))
     def staged(name: String, inputs: Seq[String],
                identity: Option[String] = None)(f: => DataFrame): DataFrame =
@@ -258,18 +271,20 @@ object Dedupe {
     //    stage: on resume the (dominant-cost) DP search is skipped
     //    entirely.
     import spark.implicits._
-    // one job sums the corpus rows and blocking-attribute chars: the rows
-    // are n for rr and TF-IDF, and both decide whether the learner and
-    // the budget loop share a driver-side block engine, built at its
-    // first use (one signature collect) and dropped after the pairs stage
-    val volume = DriverBlocks.volume(records, cfg.blockingAttrs)
-    val nRecords = volume._1
+    // one job sums the corpus rows, the blocking-attribute chars and the
+    // feature-attribute chars: the rows are n for rr and TF-IDF. Rows and
+    // blocking chars decide whether the learner and the budget loop share
+    // a driver-side block engine, built at its first use (one signature
+    // collect) and dropped after the pairs stage; rows and feature chars
+    // decide whether both pair sets are featurized on the driver (step 6)
+    val (nRecords, Seq(blockChars, featureChars)) = DriverBlocks.volume(
+      records, cfg.blockingAttrs, DriverFeatures.attributes(cfg.features))
     var built: Option[DriverBlocks] = null
     def blocks: Option[DriverBlocks] = {
       if (built == null) built =
-        if (!driverBlocks) None
+        if (!driverPaths) None
         else DriverBlocks(records, Schemes.forAttributes(cfg.blockingAttrs),
-          volume)
+          (nRecords, blockChars))
       built
     }
     // stage IDENTITY: every stage output depends on config knobs the
@@ -293,23 +308,30 @@ object Dedupe {
     val idScores = idFeatures +
       s";ml=${cfg.useMlClassifier}:${cfg.classifier}"
     val idClusters = idScores + s";threshold=${cfg.threshold}"
-    // TF-IDF weight/norm relations (corpus-scale token aggregations
-    // shared by BOTH featurize call sites below) — created AND
-    // prewarmed here, concurrently with the learner stage (guide §2.6:
-    // overlap independent jobs): the token aggregation depends only on
-    // `records`, and the conjunction search is collect-barrier-heavy,
-    // so the token jobs backfill its idle cores instead of serializing
-    // after it. Cache materialization is lock-safe under concurrency;
-    // a failure here is swallowed and resurfaces on the first real
-    // featurize action.
-    val (tfW0, tfN0) = graft.sim.TfIdf.weights(records, "conv_id",
-      "full_text", graft.sim.TfIdf.DefaultMaxDf, Some(nRecords))
-    val tfW = tfW0.cache()
-    val tfN = tfN0.cache()
-    scala.concurrent.Future {
-      tfN.count(); tfW.count()
-    }(prewarmEc)
-    val conjunctions = staged("conjunctions", Seq("records"),
+    // A corpus too large to featurize on the driver gets its TF-IDF
+    // weight/norm relations (corpus-scale token aggregations shared by
+    // BOTH featurize call sites below) created AND prewarmed here,
+    // concurrently with the learner stage (guide §2.6: overlap
+    // independent jobs): the token aggregation depends only on
+    // `records`, and the conjunction search is collect-barrier-heavy, so
+    // the token jobs backfill its idle cores instead of serializing
+    // after it. Cache materialization is lock-safe under concurrency; a
+    // failure here is swallowed and resurfaces on the first real
+    // featurize action. A small corpus computes its weights on the
+    // driver instead, at the first featurize call: no cache, no prewarm.
+    val featureVolume = (nRecords, featureChars)
+    val sparkTfIdf =
+      if (driverPaths && DriverFeatures.small(records, featureVolume)) None
+      else {
+        val (w, n) = TfIdf.weights(records, "conv_id", "full_text",
+          TfIdf.DefaultMaxDf, Some(nRecords))
+        val (tfW, tfN) = (w.cache(), n.cache())
+        scala.concurrent.Future {
+          tfN.count(); tfW.count()
+        }(prewarmEc)
+        Some((tfW, tfN))
+      }
+    val conjunctions = bestFirst(staged("conjunctions", Seq("records"),
       Some(idConj)) {
       val learner = new Learner(records, labels, cfg.blockingAttrs,
         cfg.k, cfg.seedRrCut, cfg.maxBlockSize,
@@ -317,8 +339,7 @@ object Dedupe {
       val learned = learner.learn()
       learner.unpersist()
       learned.toDF()
-    }.as[ConjStats].collect().toSeq
-      .sortBy(_.key)(Ordering[(Double, Long, Long)].reverse)
+    }.as[ConjStats].collect().toSeq)
     require(conjunctions.nonEmpty, "learner found no viable conjunction")
     val schemeByName = Schemes.byName(cfg.blockingAttrs)
 
@@ -338,14 +359,22 @@ object Dedupe {
     built = None
 
     // 6. similarity feature vectors (M1; JW/Levenshtein/Jaccard +
-    //    TF-IDF cosine — the north star's batched similarity vector).
-    //    The TF-IDF weight/norm caches were created (and prewarmed)
-    //    above, before the learner stage.
-    def featurize(p: DataFrame): DataFrame =
-      Distances.featuresFor(p, records, cfg.features)
-        .join(graft.sim.TfIdf.cosineWith(p.select("id_l", "id_r"),
-          tfW, tfN),
-          Seq("id_l", "id_r"))
+    //    TF-IDF cosine — the north star's batched similarity vector) of
+    //    the candidate pairs and, with `label` carried through, of the
+    //    labeled pairs. A small corpus is featurized by one
+    //    DriverFeatures, built at the first call with one collect of the
+    //    feature attributes: a pair set within its bound is hydrated on
+    //    the driver, a larger one takes the Spark plans with the driver's
+    //    weights. Otherwise both calls take the Spark plans over the
+    //    TF-IDF caches created (and prewarmed) before the learner stage.
+    lazy val driverFeatures =
+      DriverFeatures(records, cfg.features, featureVolume)
+    def featurize(p: DataFrame): DataFrame = sparkTfIdf match {
+      case None => driverFeatures.featurize(p)
+      case Some((tfW, tfN)) =>
+        DriverFeatures.log("spark", featureVolume, "unread")
+        DriverFeatures.sparkFeatures(p, records, cfg.features, tfW, tfN)
+    }
     val allFeatureCols = cfg.features.map(_.colName) :+ "tfidf_cos"
     val feats = staged("features", Seq("pairs", "records"),
       Some(idFeatures)) {
@@ -368,10 +397,7 @@ object Dedupe {
             .digest(idScores.getBytes("UTF-8"))
             .map("%02x".format(_)).mkString.take(12))
         val model = MatchClassifier.trainOrLoad(
-          modelDir, allFeatureCols, cfg.classifier) {
-          featurize(labels.select("id_l", "id_r"))
-            .join(labels, Seq("id_l", "id_r"))
-        }
+          modelDir, allFeatureCols, cfg.classifier)(featurize(labels))
         MatchClassifier.score(model, feats, allFeatureCols)
       } else {
         Distances.ruleScore(feats).select("id_l", "id_r", "score")
@@ -384,8 +410,7 @@ object Dedupe {
     // the corpus — repeated Dedupe.run calls on one long-lived session
     // must not accumulate pinned corpus-scale relations
     val scored = if (io.isEmpty) scored0.localCheckpoint() else scored0
-    tfW.unpersist()
-    tfN.unpersist()
+    sparkTfIdf.foreach { case (tfW, tfN) => tfW.unpersist(); tfN.unpersist() }
     labels.unpersist()
 
     // 8. threshold → edges → connected components (C1) + singletons

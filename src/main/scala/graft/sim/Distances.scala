@@ -187,10 +187,11 @@ object Distances {
     * Each feature is quantized via floor(x·10⁴)/10⁴ — IEEE-exact in both
     * engines (unlike decimal round(), whose half-tie handling differs
     * between Spark and DuckDB), so identical raw doubles quantize
-    * identically. */
-  private def featureColumns(h: DataFrame, plan: Seq[AttrSim]): DataFrame =
+    * identically. `more` columns follow the plan's. */
+  private[sim] def featureColumns(h: DataFrame, plan: Seq[AttrSim],
+                                  more: Column*): DataFrame =
     h.select((col("id_l") +: col("id_r") +:
-      plan.map(f => q4(f.similarity).as(f.colName))): _*)
+      plan.map(f => q4(f.similarity).as(f.colName))) ++ more: _*)
 
   /** floor-quantization to 4 digits (exact double ops, engine-portable). */
   def q4(c: Column): Column =

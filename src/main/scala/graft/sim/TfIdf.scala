@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** TF-IDF cosine similarity between paired documents — the third leg of
@@ -102,12 +102,15 @@ object TfIdf {
       .join(norms.select(col("id").as("id_r"), col("norm").as("n_r")),
         Seq("id_r"), "left")
       .select(col("id_l"), col("id_r"),
-        (floor(coalesce(col("dot"), lit(0.0)) /
-          greatest(coalesce(col("n_l"), lit(0.0)) *
-            coalesce(col("n_r"), lit(0.0)), lit(1.0e-12)) * 10000.0)
-          / 10000.0)
-          .as("tfidf_cos"))
+        cosineOf(col("dot"), col("n_l"), col("n_r")).as("tfidf_cos"))
   }
+
+  /** The quantized cosine of a pair's dot product and its two norms, a
+    * null read as 0.0. */
+  private[sim] def cosineOf(dot: Column, nl: Column, nr: Column): Column =
+    floor(coalesce(dot, lit(0.0)) /
+      greatest(coalesce(nl, lit(0.0)) * coalesce(nr, lit(0.0)),
+        lit(1.0e-12)) * 10000.0) / 10000.0
 
   /** DuckDB mirror over CTEs `normalized` + `pairs`. */
   def oracleCtes(maxDf: Long = DefaultMaxDf): String =

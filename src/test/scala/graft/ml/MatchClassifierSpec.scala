@@ -103,9 +103,11 @@ class MatchClassifierSpec extends AnyFunSuite with SparkSuite {
     }
     val before = sc.getPersistentRDDs.keySet
     sc.addSparkListener(listener)
+    // a distributed copy: a local frame is collected with no job
+    val input = spark.createDataFrame(labeled.rdd, labeled.schema)
     val m = try {
       sc.setLocalProperty("graft.spec", "ml")
-      val m = driverLR(labeled, cols)
+      val m = driverLR(input, cols)
       sc.setLocalProperty("graft.spec", "sentinel")
       spark.range(1).collect()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
@@ -120,6 +122,24 @@ class MatchClassifierSpec extends AnyFunSuite with SparkSuite {
     // its second the other three; the spark.ml path adds the pin, the
     // summary and one job per L-BFGS iteration
     assert(jobs.get <= 2, s"${jobs.get} jobs on the driver path")
+  }
+
+  test("a local training set is fitted with no job, and the driver fit " +
+    "does not depend on the order of its rows") {
+    // 300 overlapping rows, so that the sums' order shows in their bits
+    val set = (0 until 300).map { i =>
+      val (f1, f2) = ((i * 37 % 101) / 101.0, (i * 53 % 97) / 97.0)
+      (s"l$i", s"r$i", f1, f2, if (f1 + f2 + (i % 7) / 10.0 > 1.1) 1 else 0)
+    }
+    val local = set.toDF("id_l", "id_r", "f1", "f2", "label")
+    val (m, jobs, _) = counting(driverLR(local, cols))
+    assert(jobs == 0, s"$jobs jobs")
+    // the same rows, reversed and in 3 partitions
+    val reversed = spark.createDataFrame(spark.sparkContext.parallelize(
+      local.collect().reverse.toSeq, 3), local.schema)
+    val r = driverLR(reversed, cols)
+    assert(!m.hasSummary && m.intercept.abs < 100)
+    assert(r.coefficients == m.coefficients && r.intercept == m.intercept)
   }
 
   test("driver and spark.ml fits reach the same optimum on a " +

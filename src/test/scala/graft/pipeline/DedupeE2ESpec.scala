@@ -74,19 +74,38 @@ class DedupeE2ESpec extends AnyFunSuite with SparkSuite {
     // the driver path's local pairs frame carries a row count, so the
     // hydration gate may plan a different join shape than for the
     // Spark path's checkpoint; the scored rows must not differ
-    def scored(driverBlocks: Boolean) = {
+    def scored(driverPaths: Boolean) = {
       val r = Dedupe.runWith(spark, sfDir, Dedupe.Config(), None, None,
-        driverBlocks)
+        driverPaths)
       val rows = r.scored.collect().toSet
       Seq(r.pairs, r.scored).foreach(graft.plans.Checkpoints.release)
       r.records.unpersist()
       rows
     }
-    val driver = scored(driverBlocks = true)
-    val sparkPath = scored(driverBlocks = false)
+    val driver = scored(driverPaths = true)
+    val sparkPath = scored(driverPaths = false)
     assert(driver.nonEmpty && driver == sparkPath,
       s"${(driver -- sparkPath).size} driver-only, " +
         s"${(sparkPath -- driver).size} Spark-only scored rows")
+  }
+
+  test("driver and Spark featurization commit the same features and " +
+    "scores: planted sf0.001") {
+    // both pair sets featurized on the driver, or both by the Spark plans
+    // over cached TF-IDF relations; compared as row multisets
+    def stages(driverPaths: Boolean) = {
+      val wd = java.nio.file.Files.createTempDirectory("graft_features")
+        .toString
+      val r = Dedupe.runWith(spark, sfDir, Dedupe.Config(), Some(wd), None,
+        driverPaths)
+      r.records.unpersist()
+      Seq("features", "scores").map(s => spark.read.parquet(s"$wd/$s")
+        .collect().toSeq.groupBy(identity).map { case (k, v) => k -> v.size })
+    }
+    val Seq(df, ds) = stages(driverPaths = true)
+    val Seq(sf, ss) = stages(driverPaths = false)
+    assert(df.nonEmpty && df == sf, "features differ")
+    assert(ds.nonEmpty && ds == ss, "scores differ")
   }
 
   test("driver and Spark budget paths emit the same pairs: planted " +
@@ -100,8 +119,7 @@ class DedupeE2ESpec extends AnyFunSuite with SparkSuite {
       val learner = new Learner(recs, labs, cfg.blockingAttrs, cfg.k,
         cfg.seedRrCut, cfg.maxBlockSize, maxCompare = cfg.maxCompare,
         blocks = blocks)
-      val learned = learner.learn()
-        .sortBy(_.key)(Ordering[(Double, Long, Long)].reverse)
+      val learned = Dedupe.bestFirst(learner.learn())
       learner.unpersist()
       val admitted = Dedupe.applicableConjunctions(learned, recs.count(),
         cfg.maxCompare)

@@ -128,6 +128,26 @@ class DedupeUnitSpec extends AnyFunSuite with SparkSuite {
     graft.plans.Checkpoints.release(over)
   }
 
+  test("bestFirst orders equal-key conjunctions by scheme names: two " +
+    "permutations admit the same list and budget pairs") {
+    // every conjunction has the same key; the list sorts only by names
+    val stats = edgeConjs.map(c => ConjStats(c.map(_.name), 4, 1, 1, 0.9))
+    val byName = edgeConjs.flatten.map(b => b.name -> b).toMap
+    def budget(cs: Seq[ConjStats]) = longPairs(Dedupe.budgetPairs(edgeRecs,
+      cs.map(_.conjunction.map(byName)), 0L, 1L, 3, edgeEngine))
+    // premise: applied in list order, the two permutations cover different
+    // pairs once nCovered = 1 stops the loop after its first chunk of 8
+    assert(budget(stats) != budget(stats.reverse))
+    val (a, b) = (Dedupe.bestFirst(stats), Dedupe.bestFirst(stats.reverse))
+    val admitted = Dedupe.applicableConjunctions(a, 12L, 1000000L)
+    assert(a == b && admitted.size == stats.size &&
+      admitted == Dedupe.applicableConjunctions(b, 12L, 1000000L))
+    assert(budget(admitted) == budget(b))
+    // the key still leads
+    val best = stats.last.copy(rr = 0.95)
+    assert(Dedupe.bestFirst(stats :+ best).head == best)
+  }
+
   test("a budgetPairs call given an engine runs 0 jobs and registers " +
     "nothing") {
     val sc = spark.sparkContext
