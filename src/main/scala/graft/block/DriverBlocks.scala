@@ -230,9 +230,30 @@ private[graft] object DriverBlocks {
     * 14 s on the driver vs 32–47 s in Spark batches. The collected
     * table, about 53 bytes per char, lives only while it is coded; the
     * engine keeps about 18 bytes per char (17 MB at sf0.01), so the
-    * bound leaves room in a 3 GB heap. */
+    * bound leaves room in a 3 GB heap.
+    *
+    * The same bound over the feature attributes' and `full_text`'s
+    * chars decides `sim.DriverFeatures`. Measured on 4 vCPUs at sf0.01
+    * (3.07M such chars, over the bound), its label call alone is faster
+    * on the driver (build 0.8–1.0 s and 0.4–1.0 s for 1,733 pairs, vs
+    * Spark weights 3.7–4.0 s and 1.7–3.2 s; 13.5 MB retained), but in
+    * whole `RunDedupe` runs (3 alternating pairs) admitting sf0.01 made
+    * the features and scores stages no faster (23.0 vs 22.5 s medians):
+    * its 926k candidate pairs take the Spark plans either way, then
+    * without cached weights. */
   val MaxRows = 200000L
   val MaxChars = 2000000L
+
+  /** Whether a corpus of `volume` (rows, chars) is small: at most
+    * [[MaxRows]] rows and [[MaxChars]] chars, and ids of a type the
+    * driver compares and ranks as Spark does (string, long or int). The
+    * one rule for every driver-side table of a corpus: this engine's
+    * (chars of the blocking attributes) and `sim.DriverFeatures`' (chars
+    * of the feature attributes and `full_text`). */
+  def small(records: DataFrame, volume: (Long, Long)): Boolean =
+    volume._1 <= MaxRows && volume._2 <= MaxChars &&
+      Seq(StringType, LongType, IntegerType)
+        .contains(records.schema("conv_id").dataType)
 
   /** The rows of `records` and, per list of `attrs`, the Σ of their
     * chars — one job, no exchange: per-partition sums folded on the
@@ -263,17 +284,14 @@ private[graft] object DriverBlocks {
   }
 
   /** The engine over `schemes` for a corpus of the given `volume`, with
-    * one collect; None, with no job, when the corpus is not small or its
-    * id type is not one the driver ranks exactly as Spark orders it
-    * (string, long or int). */
+    * one collect; None, with no job, when the corpus is not [[small]]. */
   def apply(records: DataFrame, schemes: Seq[BoundScheme],
             volume: (Long, Long)): Option[DriverBlocks] = {
     val idType = records.schema("conv_id").dataType
-    val small = volume._1 <= MaxRows && volume._2 <= MaxChars &&
-      Seq(StringType, LongType, IntegerType).contains(idType)
-    graft.Verbose.log("blocks")(s"path=${if (small) "driver" else "spark"} " +
+    val driver = small(records, volume)
+    graft.Verbose.log("blocks")(s"path=${if (driver) "driver" else "spark"} " +
       s"rows=${volume._1} chars=${volume._2}")
-    if (!small) return None
+    if (!driver) return None
     val table = collect(
       records.select(col("conv_id") +: schemes.map(_.sigArray): _*))
     val sigs = schemes.indices.map { s =>

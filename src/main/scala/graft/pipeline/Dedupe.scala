@@ -321,7 +321,7 @@ object Dedupe {
     // driver instead, at the first featurize call: no cache, no prewarm.
     val featureVolume = (nRecords, featureChars)
     val sparkTfIdf =
-      if (driverPaths && DriverFeatures.small(records, featureVolume)) None
+      if (driverPaths && DriverBlocks.small(records, featureVolume)) None
       else {
         val (w, n) = TfIdf.weights(records, "conv_id", "full_text",
           TfIdf.DefaultMaxDf, Some(nRecords))
@@ -364,8 +364,8 @@ object Dedupe {
     //    labeled pairs. A small corpus is featurized by one
     //    DriverFeatures, built at the first call with one collect of the
     //    feature attributes: a pair set within its bound is hydrated on
-    //    the driver, a larger one takes the Spark plans with the driver's
-    //    weights. Otherwise both calls take the Spark plans over the
+    //    the driver, a larger one takes the Spark plans, which compute
+    //    their own weights. Otherwise both calls take the Spark plans over the
     //    TF-IDF caches created (and prewarmed) before the learner stage.
     lazy val driverFeatures =
       DriverFeatures(records, cfg.features, featureVolume)

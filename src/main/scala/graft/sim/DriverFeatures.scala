@@ -16,7 +16,8 @@ import scala.collection.mutable
   * which the feature expressions of [[Distances.featuresFor]] and the
   * cosine expression of [[TfIdf.cosineWith]] are applied, so the kernels
   * are the same Catalyst expressions on both paths. A larger pair set
-  * takes the Spark plans, with this corpus's weights as local frames.
+  * takes the Spark plans, which compute the weights again in Spark
+  * (only the candidate pairs get that large, so once per run).
   *
   * Equality with the Spark plans rests on three rules, for pair sets
   * without repeated rows (as the candidate and the labeled pairs are:
@@ -38,7 +39,6 @@ private[graft] final class DriverFeatures private (
     attrs: Seq[StructField],
     byId: Map[Any, Array[Array[Any]]],
     weights: Map[Any, DriverFeatures.Weights],
-    tokens: Array[String],
     idType: DataType,
     volume: (Long, Long)) {
   import DriverFeatures._
@@ -54,8 +54,11 @@ private[graft] final class DriverFeatures private (
       else Some(p.limit(PairBound + 1).collect()).filter(_.length <= PairBound)
     log(if (read.isDefined) "driver" else "spark", volume,
       read.fold(if (typed) s">$PairBound" else "unread")(_.length.toString))
-    read.fold(sparkFeatures(p, records, plan, weightFrame, normFrame))(
-      local(p.schema, _))
+    read.fold {
+      val (w, norms) = TfIdf.weights(records, "conv_id", "full_text",
+        TfIdf.DefaultMaxDf, Some(volume._1))
+      sparkFeatures(p, records, plan, w, norms)
+    }(local(p.schema, _))
   }
 
   private def local(schema: StructType, pairs: Array[Row]): DataFrame = {
@@ -82,37 +85,22 @@ private[graft] final class DriverFeatures private (
       col("_n_l"), col("_n_r")).as("tfidf_cos") +:
       carried.map(i => col(schema.fields(i).name))): _*)
   }
-
-  // the weights as TfIdf.weights' two relations, for pair sets over the bound
-  private lazy val weightFrame: DataFrame = frame(
-    StructType(Seq(StructField("id", idType, nullable = false),
-      StructField("token", StringType, nullable = false),
-      StructField("w", DoubleType, nullable = false))),
-    weights.toSeq.flatMap { case (id, w) =>
-      w.tokens.indices.map(i => Row(id, tokens(w.tokens(i)), w.w(i))) })
-
-  private lazy val normFrame: DataFrame = frame(
-    StructType(Seq(StructField("id", idType, nullable = false),
-      StructField("norm", DoubleType, nullable = false))),
-    weights.toSeq.map { case (id, w) => Row(id, w.norm) })
-
-  private def frame(schema: StructType, rows: Seq[Row]): DataFrame =
-    records.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      schema)
 }
 
 private[graft] object DriverFeatures {
 
-  /** The most chars, summed over the feature attributes and `full_text`,
-    * of a corpus featurized on the driver. The featurizer keeps each
-    * value once plus its token weights: measured retained heap 1.5 MB
-    * for sf0.001 (281,968 chars, 1,620 rows, on the driver path) and
-    * 13.5 MB for sf0.01 (3,067,608 chars, 16,215 rows, over the bound),
-    * so the bound holds it near 10 MB. */
-  private val MaxChars = 2000000L
-
-  /** The most pairs one call hydrates on the driver. */
-  private val PairBound = 200000
+  /** The most pairs one call hydrates on the driver, where the feature
+    * expressions run single-threaded and interpreted. Measured on 4 vCPUs
+    * at sf0.001 (1,620 rows), featurize plus its parquet write, medians
+    * of 4–6 runs in alternating JVMs: the driver takes 3.3, 3.4 and
+    * 4.0 s for 60k, 80k and 100k pairs, the Spark plans with their own
+    * weights (the path over this bound) 4.5, 4.1 and 4.4 s. Against
+    * Spark plans over weights cached beforehand the driver is faster at
+    * 30k pairs (1.7 vs 2.8 s) and slower from about 120k (4.7 vs 4.0 s;
+    * 200k: 7.1 vs 6.6 s). Peak old-generation heap on the driver path is
+    * 0.2–0.55 GB at 100k pairs, below the Spark plans' 1.7 GB in the
+    * same local JVM. */
+  private[graft] val PairBound = 100000
 
   /** `p`'s features in Spark: [[Distances.featuresFor]] joined with
     * [[TfIdf.cosineWith]] over the weight relations `w` and `norms`, and
@@ -127,19 +115,11 @@ private[graft] object DriverFeatures {
     if (p.columns.toSeq == keys) f else f.join(p, keys)
   }
 
-  /** The attributes whose chars [[small]] bounds: the plan's and
-    * `full_text`, which TF-IDF tokenizes. */
+  /** The attributes whose chars decide, by `DriverBlocks.small`, whether
+    * a corpus is featurized here: the plan's and `full_text`, which
+    * TF-IDF tokenizes. */
   def attributes(plan: Seq[Distances.AttrSim]): Seq[String] =
     (plan.map(_.attr) :+ "full_text").distinct
-
-  /** Whether a corpus of `volume` (rows, chars of [[attributes]]) is
-    * featurized on the driver: at most `DriverBlocks.MaxRows` rows and
-    * [[MaxChars]] chars, ids of a type whose values the driver compares
-    * as Spark's join does (string, long or int). */
-  def small(records: DataFrame, volume: (Long, Long)): Boolean =
-    volume._1 <= graft.block.DriverBlocks.MaxRows && volume._2 <= MaxChars &&
-      Seq(StringType, LongType, IntegerType)
-        .contains(records.schema("conv_id").dataType)
 
   /** One `[features]` line: the path a featurize call took, the corpus
     * volume and the pairs it read (`unread` when it read none). */
@@ -165,7 +145,8 @@ private[graft] object DriverFeatures {
   private val NoWeights = Weights(Array.emptyIntArray, Array.emptyDoubleArray,
     0.0)
 
-  /** The featurizer of `records` (of `volume`, see [[small]]) for `plan`,
+  /** The featurizer of `records` (of `volume`, rows and chars of
+    * [[attributes]], small by `DriverBlocks.small`) for `plan`,
     * after one collect of `(conv_id, feature attributes, full_text)`. */
   def apply(records: DataFrame, plan: Seq[Distances.AttrSim],
             volume: (Long, Long)): DriverFeatures = {
@@ -201,9 +182,7 @@ private[graft] object DriverFeatures {
       if (kept.isEmpty) None
       else Some(id -> Weights(kept, w, math.sqrt(w.map(x => x * x).sum)))
     }
-    val tokens = new Array[String](dict.size)
-    dict.foreach { case (t, c) => tokens(c) = t }
     new DriverFeatures(records, plan, attrs.map(records.schema(_)), byId,
-      weights, tokens, records.schema("conv_id").dataType, volume)
+      weights, records.schema("conv_id").dataType, volume)
   }
 }

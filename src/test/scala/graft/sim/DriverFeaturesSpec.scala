@@ -52,7 +52,7 @@ class DriverFeaturesSpec extends AnyFunSuite with SparkSuite {
   private def driver(records: DataFrame): DriverFeatures = {
     val (rows, chars) = DriverBlocks.volume(records,
       DriverFeatures.attributes(plan))
-    assert(DriverFeatures.small(records, (rows, chars.head)))
+    assert(DriverBlocks.small(records, (rows, chars.head)))
     DriverFeatures(records, plan, (rows, chars.head))
   }
 
@@ -132,7 +132,8 @@ class DriverFeaturesSpec extends AnyFunSuite with SparkSuite {
     "and returns a local frame") {
     val f = driver(corpus)
     val p = rangePairs(50)
-    val (_, readJobs, _) = counting(p.limit(200001).collect())
+    val (_, readJobs, _) = counting(
+      p.limit(DriverFeatures.PairBound + 1).collect())
     val (out, jobs, _) = counting(f.featurize(p))
     assert(jobs <= readJobs, s"$jobs jobs, the read alone $readJobs")
     assert(out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
@@ -145,14 +146,15 @@ class DriverFeaturesSpec extends AnyFunSuite with SparkSuite {
     val recs = corpus.cache()
     try {
       val f = driver(recs)
-      val p = rangePairs(200001)
-      val (_, readJobs, _) = counting(p.limit(200001).collect())
+      val over = DriverFeatures.PairBound + 1
+      val p = rangePairs(over)
+      val (_, readJobs, _) = counting(p.limit(over).collect())
       val (out, jobs, _) = counting(f.featurize(p))
       assert(jobs == readJobs, s"$jobs jobs, the read alone $readJobs")
       assert(!out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
       val want = expected(p, recs)
       assert(out.columns.toSeq == want.columns.toSeq)
-      assert(out.count() == 200001 && out.exceptAll(want).isEmpty &&
+      assert(out.count() == over && out.exceptAll(want).isEmpty &&
         want.exceptAll(out).isEmpty)
     } finally recs.unpersist()
   }
